@@ -53,10 +53,8 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Ordered for a time-budgeted sweep (see ``operators/ordering.py``):
-    a cheap representative of every family first, then ascending by
-    measured cost — a budget cut-off certifies the most queries and
-    every family.
+    In the static order of ``operators/ordering.py::SWEEP_ORDER``
+    (new names are appended there).
     """
     from catme_etl_spark.operators.ordering import SWEEP_ORDER
 

@@ -392,10 +392,8 @@ def main() -> None:
     # reliable storage and every release/dedup job reads them.
     # The instrumentation lives entirely HERE, as call-time wrappers
     # swapped into every operator module's namespace — NOT as hooks
-    # inside _shared.py — so the engine's source (and with it the
-    # rotation fingerprints of the 150+ live queries whose closures
-    # include shared_df) stays byte-identical; bench.py is outside
-    # every query fingerprint.
+    # inside _shared.py — so timing a run changes nothing in the
+    # engine, and the build hooks exist only while bench.py runs.
     from catme_etl_spark.operators import _shared as _shmod
     from catme_etl_spark.operators._shared import clear_shared
 

@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .monitor import observe_counts
 from .operators.pipeline import run_pipeline
 from .sinks.json_sink import merged_json_array, write_json
 from .sources.files import discover_input, read_auto
@@ -69,14 +70,10 @@ def convert(
     # The sort happens BELOW the metrics node: a global orderBy runs a
     # range-partitioner sampling pass over its child, and an
     # observation under the sort would be double-counted by it.
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     if order_by:
         df = df.orderBy(*order_by)
-    obs = Observation("convert")
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    write_json(df, output_path, mode=output_mode, order_by=None)
+    df, obs = observe_counts(df, name="convert")
+    write_json(df, output_path, mode=output_mode)
     rows = int(obs.get["rows"])
     stats = {}
     if array_parity:

@@ -40,18 +40,14 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # ---------------------------------------------------------------------------
-# Deferred registrations (certification-window budget, tools/rotation.py).
+# Deferred registrations.
 #
-# The driver certifies only the FIRST 50 names of SWEEP_ORDER per round,
-# and every changed/new name MUST occupy one of those slots (48 after the
-# two canaries). A round whose change set already fills the window cannot
-# debut more queries without leaving some registered-but-never-certified —
-# breaking the registry's "every name has a green CORRECTNESS row"
-# invariant. `pending_query` holds such operators OUT of QUERIES/ORACLE
-# (so the driver, bench, and rotation tool never see them) while keeping
-# the implementation + oracle live for tests. The NEXT round flips the
-# decorator to `@query`, which forces the name into that round's window
-# as brand-new — certification deferred, never skipped.
+# `pending_query` holds a finished operator OUT of QUERIES/ORACLE (so
+# `queries()`, the correctness sweep and bench never see it) while
+# keeping the implementation + oracle live for tests. Going live is a
+# one-line change: `tools/flip_pending.py --write` rewrites the
+# decorator to `@query`, and the name is appended to
+# `operators/ordering.py::SWEEP_ORDER`.
 # ---------------------------------------------------------------------------
 
 PENDING: dict[str, QueryFn] = {}

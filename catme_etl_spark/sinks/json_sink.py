@@ -37,7 +37,6 @@ def write_json(
     path: str,
     mode: str = "chunks",
     order_by: list[str] | None = None,
-    overwrite: bool = True,
 ) -> None:
     """Write JSON-lines part files (``chunks``) or one file (``merge``)."""
     if order_by:
@@ -46,8 +45,7 @@ def write_json(
         df = df.coalesce(1)
     elif mode != "chunks":
         raise ValueError(f"unknown mode {mode!r} (use 'merge' or 'chunks')")
-    writer = df.write.mode("overwrite" if overwrite else "errorifexists")
-    writer.json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def merged_json_array(

@@ -27,9 +27,10 @@ backfill's memory bounded.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from itertools import count
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import money_sum
@@ -87,109 +88,119 @@ def _scratch_parent(spark: SparkSession | None = None) -> str:
     return d
 
 
-def _max_files_per_trigger() -> str:
-    """Source sizing for the one-shot harness streams (guide §2.1).
+# Source sizing for the one-shot fixture streams (guide §2.1). The
+# quantile stagers write 4 slice files; at maxFilesPerTrigger=1 every
+# one-shot query pays 4 micro-batches of trigger planning + state-store
+# commits — measured ≈ 0.3-0.9 s of pure per-batch fixed cost per query
+# at sf0.1 — for semantics that do not depend on the batch boundaries:
+# the slices are time/id-ordered so nothing ever arrives behind the
+# watermark, complete-mode folds are order-insensitive, and append-mode
+# emission is decided by the FINAL watermark (max event time − delay),
+# which is identical at any batch count (the engine's terminal no-data
+# batch seals against it either way). So all 4 files go in one data
+# batch; tests pin that 1 file per trigger gives identical results. The
+# lateness audit (`_stream_events_lateness`) and the admission gate
+# (`_stream_docs_mod4`) take 1 file per trigger instead: their oracles
+# replay per-slice watermark / cap-exhaustion mechanics.
+STREAM_MAX_FILES = 4
 
-    The fixture stagers below write 4 slice files; at
-    ``maxFilesPerTrigger=1`` every one-shot query pays 4 micro-batches
-    of trigger planning + state-store commits — measured ≈ 0.3-0.9 s of
-    pure per-batch fixed cost per query at sf0.1 — for semantics that
-    do not depend on the batch boundaries: the slices are time/id-
-    ordered so nothing ever arrives behind the watermark, complete-mode
-    folds are order-insensitive, and append-mode emission is decided by
-    the FINAL watermark (max event time − delay), which is identical at
-    any batch count (the engine's terminal no-data batch seals against
-    it either way). Default is therefore one data batch (all 4 files);
-    ``$SPARK_GRAFT_STREAM_MAX_FILES=1`` reproduces the 4-batch regime
-    (tests pin that both produce identical results). A real deployment
-    sizes the trigger by landing-zone volume exactly like this knob.
 
-    Two stagers deliberately DO NOT use this: the lateness audit
-    (`_stream_events_lateness`) and the admission gate
-    (`_stream_docs_mod4`), whose oracles replay per-slice watermark /
-    cap-exhaustion mechanics — their outputs depend on the 4-batch
-    arrival order by design.
+def _stage_stream(
+    spark: SparkSession,
+    stage: str,
+    source: Callable[[], tuple[DataFrame, Column]],
+    max_files: int,
+) -> DataFrame:
+    """File stream over a fixture table, staged into ``stage`` as slice
+    files. ``source()`` returns the table and its slice-index column
+    (0-3); it is called only while staging, so once the stage exists a
+    stream query reads nothing but the stage.
+
+    FIXTURE-ONLY: Spark's file-stream source monitors a DIRECTORY (new
+    files appear = new data), while each fixture table is one read-only
+    parquet file. So the rows are written once, as ``slice0``..
+    ``slice3``, oldest slice first — sequential writes give increasing
+    mtimes, the order the source reads them in, as files land in a
+    landing zone. Rows whose index is NULL are not staged; an empty
+    slice is not written, so every file is one non-empty micro-batch.
+    The ``_STAGED`` marker makes this run once per stage dir, across
+    sessions too. A real deployment points ``readStream`` at the
+    landing zone and this helper disappears — no query logic lives in
+    it.
     """
-    return os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES", "4")
+    done = os.path.join(stage, "_STAGED")
+    if not os.path.exists(done):
+        src, slice_idx = source()
+        src = src.withColumn("_slice", slice_idx)
+        for i in range(4):  # sequential writes → increasing mtimes
+            sl = src.filter(F.col("_slice") == i).drop("_slice")
+            if sl.isEmpty():
+                continue
+            sl.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(stage, f"slice{i}")
+            )
+        open(done, "w").close()
+    first = min(f for f in os.listdir(stage) if f.startswith("slice"))
+    schema = spark.read.parquet(os.path.join(stage, first)).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files)
+        .option("recursiveFileLookup", "true")
+        .parquet(stage)
+    )
+
+
+def _quartile_slice(src: DataFrame, key: Column, what: str) -> Column:
+    """Slice index 0-3 of ``key``'s quartile RANGE (half-open
+    ``(lo, hi]``) — the slice rule of the quantile stagers. Quantile
+    boundaries + range tests partition the rows exactly with no sort: a
+    global row_number would funnel the whole table through one task
+    (the anti-pattern this repo bans in query code), and no slice needs
+    an order inside it, because watermark advancement is per micro-
+    batch. A NULL key gets a NULL index (not staged); an empty source
+    has no boundaries and fails with a clear message."""
+    bounds = src.select(key.alias("_k")).stat.approxQuantile(
+        "_k", [0.25, 0.5, 0.75], 0.001
+    )
+    if not bounds:
+        raise ValueError(
+            f"streaming staging: source {what!r} has no rows to slice"
+        )
+    idx = F.when(key > bounds[-1], len(bounds))
+    for i in reversed(range(len(bounds))):
+        idx = F.when(key <= bounds[i], i).otherwise(idx)
+    return idx
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream over the events parquet, normalized to a micro-
     second ``ts`` (same integer-division nanos fix as the batch loader).
 
-    FIXTURE-ONLY staging: the one-time slice materialization below
-    (a global sort + 4 coalesced writes to /tmp, marker-guarded so it
-    runs once per sf_dir across the whole session/sweep) exists solely
-    because the test fixture is a single read-only parquet file and a
-    file stream needs a directory where files arrive over time. A real
-    deployment points ``readStream`` at the landing zone and this whole
-    block disappears — no query logic lives in it.
+    Slices by event-time quartile ranges, written oldest first: at 1
+    file per trigger watermarks advance between batches and stateful
+    operators carry state across them (the mode tests/test_streaming.py
+    pins equal to the default), and slicing any other way would make
+    whole batches arrive behind the advanced watermark and be dropped
+    as late. NULL-``ts`` rows are pinned to the earliest slice by a
+    sentinel (approxQuantile ignores NULLs, and every range test
+    excludes them).
     """
     path = os.path.join(sf_dir, "events.parquet")
-    # Spark's file-stream source monitors a DIRECTORY (new files appear
-    # = new data). The test fixture is one parquet file in a read-only
-    # dir, so stage it into /tmp as four TIME-ORDERED slices (event-
-    # time quartiles, written oldest first — the pattern of a real
-    # landing zone, where files arrive roughly in event-time order).
-    # Trigger sizing is `_max_files_per_trigger()` (guide §2.1): the
-    # default takes all 4 files in one data batch — results are
-    # batch-count-independent for every consumer of this stager (see
-    # the helper's docstring) — while $SPARK_GRAFT_STREAM_MAX_FILES=1
-    # reproduces the 4-batch regime, where watermarks advance between
-    # batches and stateful operators carry state across them (the mode
-    # tests/test_streaming.py pins equal). Time-ordering matters in
-    # that regime: slicing any other way would make whole batches
-    # arrive behind the advanced watermark and be dropped as late.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stage = os.path.join(
         "/tmp/catme_etl_stream_src_v2", sf_dir.strip("/").replace("/", "_")
     )
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
-        # Slice by event-time quantile RANGES, not a global row_number
-        # sort: a no-partition Window would funnel the whole table
-        # through one task (the anti-pattern this repo bans in query
-        # code). Quantile boundaries + half-open range filters partition
-        # the rows exactly — no slice needs any sort, because watermark
-        # advancement is per micro-batch and within-batch order is
-        # irrelevant.
+
+    def source():
         src = spark.read.parquet(path)
         if dict(src.dtypes).get("ts") == "bigint":
             tsn = F.col("ts")
         else:  # timestamp / timestamp_ntz — epoch micros is sortable
             tsn = F.unix_micros(F.col("ts").cast("timestamp"))
-        # NULL-ts rows would silently vanish (approxQuantile ignores
-        # them, and every half-open range filter excludes NULL): pin
-        # them to the earliest slice via a sentinel instead. An empty
-        # source yields no quantile bounds — fail with a clear message
-        # rather than an IndexError in the slice loop.
-        src = src.withColumn(
-            "_tsn", F.coalesce(tsn.cast("long"), F.lit(-(1 << 63)))
-        )
-        bounds = src.stat.approxQuantile("_tsn", [0.25, 0.5, 0.75], 0.001)
-        if not bounds:
-            raise ValueError(
-                f"streaming staging: source {path!r} has no rows to slice"
-            )
-        edges = [float("-inf")] + bounds + [float("inf")]
-        for i in range(4):  # sequential writes → increasing mtimes
-            lo, hi = edges[i], edges[i + 1]
-            sl = src
-            if lo != float("-inf"):
-                sl = sl.filter(F.col("_tsn") > lo)
-            if hi != float("inf"):
-                sl = sl.filter(F.col("_tsn") <= hi)
-            sl.drop("_tsn").coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(stage, f"slice{i}")
-            )
-        open(done, "w").close()
-    schema = spark.read.parquet(os.path.join(stage, "slice0")).schema
-    df = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", _max_files_per_trigger())
-        .option("recursiveFileLookup", "true")
-        .parquet(stage)
-    )
+        tsn = F.coalesce(tsn.cast("long"), F.lit(-(1 << 63)))
+        return src, _quartile_slice(src, tsn, path)
+
+    df = _stage_stream(spark, stage, source, STREAM_MAX_FILES)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -200,12 +211,15 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
+_STREAM_SHUFFLE_PARTITIONS = 4
+
+
 def _run_to_memory(df: DataFrame, mode: str) -> DataFrame:
     """Execute a one-shot (AvailableNow) streaming query into a memory
     sink; return the sink as a batch DataFrame.
 
-    Shuffle partitions are dropped to ``$SPARK_GRAFT_STREAM_SHUFFLE``
-    (default 4) for the query's lifetime: a stateful streaming query
+    Shuffle partitions are dropped to ``_STREAM_SHUFFLE_PARTITIONS``
+    (4) for the query's lifetime: a stateful streaming query
     creates one state store PER shuffle partition PER micro-batch, so
     32 partitions × 4 micro-batches of a small test stream is pure
     constant overhead (measured at sf0.1: 8 partitions cost ~0.2-0.3 s
@@ -213,7 +227,7 @@ def _run_to_memory(df: DataFrame, mode: str) -> DataFrame:
     planning/commit). The value is captured by the query at start (it
     is recorded in the checkpoint), and the session's batch setting is
     restored after — on a real cluster a long-lived stream sizes this
-    to its state volume instead, which is what the env knob is for.
+    to its state volume instead.
 
     SINGLE-THREADED assumption: the conf override is session-global
     for the query's lifetime, so a batch query run CONCURRENTLY on the
@@ -228,10 +242,7 @@ def _run_to_memory(df: DataFrame, mode: str) -> DataFrame:
     spark = df.sparkSession
     name = f"stream_sink_{next(_SINK_SEQ)}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
     ckpt = tempfile.mkdtemp(prefix=f"{name}_", dir=_scratch_parent(spark))
     try:
         q = (
@@ -991,45 +1002,19 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream over the documents parquet — the `_stream_events`
-    staging device applied to the corpus table (FIXTURE-ONLY: a real
-    deployment points readStream at the landing zone). Slices by
-    doc_id quartile ranges (documents carry no event time; arrival
-    order by id stands in for ingest order), one file per trigger, so
-    stateful consumers genuinely cross micro-batches."""
+    """File-stream over the documents parquet, sliced by doc_id quartile
+    ranges (documents carry no event time; arrival order by id stands in
+    for ingest order). NULL doc_ids are not staged."""
     path = os.path.join(sf_dir, "documents.parquet")
     stage = os.path.join(
         "/tmp/catme_etl_stream_docs_v1", sf_dir.strip("/").replace("/", "_")
     )
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
+
+    def source():
         src = spark.read.parquet(path)
-        bounds = src.stat.approxQuantile(
-            "doc_id", [0.25, 0.5, 0.75], 0.001
-        )
-        if not bounds:
-            raise ValueError(
-                f"streaming staging: source {path!r} has no rows to slice"
-            )
-        edges = [float("-inf")] + bounds + [float("inf")]
-        for i in range(4):
-            lo, hi = edges[i], edges[i + 1]
-            sl = src
-            if lo != float("-inf"):
-                sl = sl.filter(F.col("doc_id") > lo)
-            if hi != float("inf"):
-                sl = sl.filter(F.col("doc_id") <= hi)
-            sl.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(stage, f"slice{i}")
-            )
-        open(done, "w").close()
-    schema = spark.read.parquet(os.path.join(stage, "slice0")).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", _max_files_per_trigger())
-        .option("recursiveFileLookup", "true")
-        .parquet(stage)
-    )
+        return src, _quartile_slice(src, F.col("doc_id"), path)
+
+    return _stage_stream(spark, stage, source, STREAM_MAX_FILES)
 
 
 @query(
@@ -2087,45 +2072,19 @@ _IVF_MAINT_ORACLE = (
 
 
 def _stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream over the embeddings parquet — the `_stream_events`
-    staging device applied to the vector table (FIXTURE-ONLY: a real
-    deployment points readStream at the landing zone). Slices by
-    vec_id quartile ranges (vectors carry no event time; arrival
-    order by id stands in for ingest order), one file per trigger, so
-    the admission decisions genuinely cross micro-batches."""
+    """File-stream over the embeddings parquet, sliced by vec_id quartile
+    ranges (vectors carry no event time; arrival order by id stands in
+    for ingest order). NULL vec_ids are not staged."""
     path = os.path.join(sf_dir, "embeddings.parquet")
     stage = os.path.join(
         "/tmp/catme_etl_stream_emb_v1", sf_dir.strip("/").replace("/", "_")
     )
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
+
+    def source():
         src = spark.read.parquet(path)
-        bounds = src.stat.approxQuantile(
-            "vec_id", [0.25, 0.5, 0.75], 0.001
-        )
-        if not bounds:
-            raise ValueError(
-                f"streaming staging: source {path!r} has no rows to slice"
-            )
-        edges = [float("-inf")] + bounds + [float("inf")]
-        for i in range(4):
-            lo, hi = edges[i], edges[i + 1]
-            sl = src
-            if lo != float("-inf"):
-                sl = sl.filter(F.col("vec_id") > lo)
-            if hi != float("inf"):
-                sl = sl.filter(F.col("vec_id") <= hi)
-            sl.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(stage, f"slice{i}")
-            )
-        open(done, "w").close()
-    schema = spark.read.parquet(os.path.join(stage, "slice0")).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", _max_files_per_trigger())
-        .option("recursiveFileLookup", "true")
-        .parquet(stage)
-    )
+        return src, _quartile_slice(src, F.col("vec_id"), path)
+
+    return _stage_stream(spark, stage, source, STREAM_MAX_FILES)
 
 
 @query("stream_ivf_list_maintenance", oracle=_IVF_MAINT_ORACLE)
@@ -2313,76 +2272,44 @@ _LATENESS_ORACLE = """
 
 
 def _stream_events_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The `_stream_events` staging device with DETERMINISTIC LATE
-    ARRIVALS: on-time rows slice into 4 contiguous day-groups (exact
-    rank arithmetic over the |days|-bounded distinct-day list — no
-    approxQuantile, because the lateness audit's oracle must replay
-    the slice assignment bit-for-bit), while every user_id % 10 == 7
-    row is withheld until the LAST slice — the repo's straggler
-    stand-in. By the time slice 3 arrives the watermark has advanced
-    past the early day-groups, so a known, SQL-derivable subset of the
-    stragglers is genuinely dropped as late. FIXTURE-ONLY staging, as
-    ever: a real deployment points readStream at the landing zone."""
-    path = os.path.join(sf_dir, "events.parquet")
+    """Events with DETERMINISTIC LATE ARRIVALS, one slice per trigger:
+    on-time rows slice into 4 contiguous day-groups (exact rank
+    arithmetic over the |days|-bounded distinct-day list — no
+    approxQuantile, because the lateness audit's oracle must replay the
+    slice assignment bit-for-bit), while every user_id % 10 == 7 row is
+    withheld until the LAST slice — the repo's straggler stand-in. By
+    the time slice 3 arrives the watermark has advanced past the early
+    day-groups, so a known, SQL-derivable subset of the stragglers is
+    genuinely dropped as late. NULL-``ts`` rows are not staged."""
+    from ..sources.tables import load_table
+
     stage = os.path.join(
         "/tmp/catme_etl_stream_late_v1", sf_dir.strip("/").replace("/", "_")
     )
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
-        src = spark.read.parquet(path)
-        ts_type = dict(src.dtypes).get("ts")
-        if ts_type == "bigint":
-            src = src.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif ts_type == "timestamp_ntz":
-            src = src.withColumn("ts", F.col("ts").cast("timestamp"))
-        src = src.filter(F.col("ts").isNotNull())
+
+    def source():
+        src = load_table(spark, sf_dir, "events").filter(
+            F.col("ts").isNotNull()
+        )
         day = F.expr("unix_micros(ts) div 86400000000")
         dl = sorted(
             r.day for r in src.select(day.alias("day")).distinct().collect()
         )
         if not dl:
             raise ValueError(
-                f"lateness staging: source {path!r} has no timestamped rows"
+                f"lateness staging: {sf_dir!r} has no timestamped events"
             )
-        nd = len(dl)
-        gdf = spark.createDataFrame(
-            [(int(d), (i * 4) // nd) for i, d in enumerate(dl)],
-            "day long, grp long",
-        )
-        src = (
-            src.withColumn("day", day)
-            .join(F.broadcast(gdf), "day")
-            .withColumn(
-                "_b",
-                F.when(
-                    F.col("user_id") % 10 == F.lit(_LATE_USER_MOD), F.lit(3)
-                ).otherwise(F.col("grp")),
-            )
-            .drop("day", "grp")
-        )
-        for i in range(4):  # sequential writes -> increasing mtimes
-            sl = src.filter(F.col("_b") == i).drop("_b")
-            if sl.limit(1).count() == 0:
-                continue  # empty slice never written (dense batching)
-            sl.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(stage, f"slice{i}")
-            )
-        open(done, "w").close()
-    first = sorted(
-        f for f in os.listdir(stage) if f.startswith("slice")
-    )[0]
-    schema = spark.read.parquet(os.path.join(stage, first)).schema
-    df = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage)
-    )
-    if dict(df.dtypes).get("ts") == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+        # the day of distinct-day rank i is in group (i * 4) // nd, so
+        # group g starts at rank ceil(g * nd / 4) (absent if >= nd)
+        nd, grp = len(dl), F.lit(0)
+        for g in (1, 2, 3):
+            start = -(-g * nd // 4)
+            if start < nd:
+                grp = F.when(day >= dl[start], g).otherwise(grp)
+        late = F.col("user_id") % 10 == F.lit(_LATE_USER_MOD)
+        return src, F.when(late, F.lit(3)).otherwise(grp)
+
+    return _stage_stream(spark, stage, source, 1)
 
 
 @query("stream_watermark_lateness_audit", oracle=_LATENESS_ORACLE)
@@ -2647,30 +2574,20 @@ _ADMIT_GATE_ORACLE = f"""
 
 
 def _stream_docs_mod4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents staged into 4 slices by the EXACT rule doc_id % 4 —
-    the admission gate's oracle must replay per-slice arrival counts
-    bit-for-bit, which the approxQuantile stager can't give it.
-    FIXTURE-ONLY staging, as ever."""
-    path = os.path.join(sf_dir, "documents.parquet")
+    """Documents staged into 4 slices by the EXACT rule doc_id % 4, one
+    slice per trigger — the admission gate's oracle must replay
+    per-slice arrival counts bit-for-bit, which the quartile slices
+    can't give it."""
     stage = os.path.join(
         "/tmp/catme_etl_stream_docs_mod4_v1",
         sf_dir.strip("/").replace("/", "_"),
     )
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
-        src = spark.read.parquet(path)
-        for i in range(4):  # sequential writes -> increasing mtimes
-            src.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(stage, f"slice{i}"))
-        open(done, "w").close()
-    schema = spark.read.parquet(os.path.join(stage, "slice0")).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage)
-    )
+
+    def source():
+        src = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        return src, F.col("doc_id") % 4
+
+    return _stage_stream(spark, stage, source, 1)
 
 
 @query("stream_release_admission_gate", oracle=_ADMIT_GATE_ORACLE)

@@ -1,16 +1,9 @@
-"""SWEEP_ORDER ↔ registry ↔ rotation-tool sync.
+"""SWEEP_ORDER ↔ registry sync, and the pending-query queue.
 
 Round-2 ADVICE: new queries were registered but never added to the
-list, so the driver's budgeted correctness gate never ran them — the
-first test keeps the list and the registry in exact agreement.
-
-Round-6 item #4: the 50-slot certification window is now SELECTED
-MECHANICALLY by ``tools/rotation.py`` (per-query dependency
-fingerprints diffed against the committed ``rotation_state.json``);
-the second test asserts the committed SWEEP_ORDER equals the tool's
-output, so a hand edit that disagrees with the dependency diff — or a
-code change whose blast radius was never rotated into the window —
-fails here instead of silently shipping an uncertified change.
+list, so the budgeted correctness sweep never ran them — the first
+test keeps the list and the registry in exact agreement. The list is
+static and appended to by hand (see ``operators/ordering.py``).
 """
 
 from __future__ import annotations
@@ -29,31 +22,6 @@ def test_sweep_order_matches_registry_exactly():
     )
     assert listed - registered == set(), (
         f"in SWEEP_ORDER but not registered: {sorted(listed - registered)}"
-    )
-
-
-def test_window_equals_rotation_tool_output():
-    """The committed ordering must be exactly what the dependency-
-    driven selector computes: every changed/new fingerprint inside the
-    50-slot window, canaries first, untouched spillover in prior
-    order."""
-    import __spark_entry__  # noqa: F401 — registers every query
-
-    from catme_etl_spark.operators.ordering import SWEEP_ORDER
-
-    import tools.rotation as rotation
-
-    computed, forced = rotation.compute_sweep_order()
-    assert SWEEP_ORDER == computed, (
-        "SWEEP_ORDER is out of sync with tools/rotation.py — run "
-        "`python tools/rotation.py emit --write` (and re-snapshot if "
-        "this is intentional new work)"
-    )
-    window = SWEEP_ORDER[: rotation.WINDOW_SLOTS]
-    assert window[:2] == rotation.CANARIES
-    overflow = [n for n in forced if n not in window]
-    assert overflow == [], (
-        f"changed/new names fell OUTSIDE the certification window: {overflow}"
     )
 
 
@@ -84,8 +52,7 @@ def test_pending_queue_discipline():
     # round 14 flipped the 12-op round-13 queue live as its first act
     # (evidence: PENDING_CHECK_r13.txt, tests/test_round14_pending.py)
     # — the 8th consecutive clean flip. The staged round-15 debut
-    # queue (<= 6 names by the round-14 cadence policy; see
-    # test_debut_cadence_funds_bound_10), pinned by name:
+    # queue, pinned by name:
     assert set(PENDING) == {
         "agg_spearman_corr",
         "text_bpe_merge_candidates",
@@ -94,124 +61,6 @@ def test_pending_queue_discipline():
         "sample_curriculum_schedule",
         "stream_source_quota_rollover",
     }
-
-
-def test_max_staleness_bound():
-    """Round-7 verdict item #6, re-founded in round 10 (round-9
-    verdict item #1): the certification-freshness guarantee is now the
-    MECHANISM-DERIVED bound, not a hand-ratcheted constant. A hard
-    ``<= 7`` reddened at judge time in rounds 8 AND 9 — each time the
-    registry grew or a driver artifact landed after the final emit,
-    neither of which changes what stalest-first spillover can fund.
-
-    ``rotation.sustainable_bound()`` computes
-    ``ceil((N_live - WINDOW_SLOTS) / (WINDOW_SLOTS - canaries -
-    forced)) + 2`` — one full spillover rotation of the outside names
-    plus slack for the round boundary and one post-emit driver
-    artifact. The assert is: what a fresh stalest-first emit can
-    guarantee RIGHT NOW must be within what the mechanism claims to
-    fund. Registry growth and forced-budget spend move both sides
-    consistently; a genuine regression (spillover not draining the
-    stalest cohort, a name stuck outside the window) still reddens."""
-    import __spark_entry__  # noqa: F401 — registers every query
-
-    import tools.rotation as rotation
-
-    sustainable = rotation.sustainable_bound()
-    rep = rotation.achievable_staleness_report()
-    assert (
-        rep["max_rounds_stale_outside_window"] <= sustainable["bound"]
-    ), (rep, sustainable)
-    # Round-10 ADVICE: both sides above derive from the same live
-    # state, and the sustainable bound loosens as the forced set
-    # grows — so an ABSOLUTE ceiling must also hold or unbounded
-    # forced-set / registry growth can no longer redden the suite.
-    # README round-10 notes: steady-state bound <= 10 at <= 330 names;
-    # 12 is that plus the documented next lever's trigger margin.
-    assert sustainable["bound"] <= 12, sustainable
-    # A forced set that eats the whole spillover destroys the rotation
-    # guarantee entirely (bound degenerates to N_outside + 2) — keep
-    # >= 20 spillover slots so a full debut-queue flip (<= 12 by the
-    # README cadence rule) plus re-certs still drains a stale cohort.
-    assert sustainable["spillover_per_round"] >= 20, sustainable
-
-
-def test_debut_cadence_funds_bound_10():
-    """Round-14 staleness policy (verdict item #3): the driver-window
-    bound is re-baselined to <= 10, funded by capping the next-round
-    debut queue at MAX_DEBUTS_PER_ROUND = 6. With 50 - 2 - 6 = 42
-    spillover slots/round, ceil((N_live - 50) / 42) + 2 <= 10 holds
-    for every N_live <= 386 — and at 6 debuts/round the registry tops
-    out at 385 in round 20. Queueing a 7th pending op or growing the
-    registry past the funding line reddens HERE, at queue time, not
-    at judge time two rounds later. The primary freshness certificate
-    remains the full local sweep (every live name, every round)."""
-    import math
-
-    import __spark_entry__  # noqa: F401 — registers every query
-
-    import tools.rotation as rotation
-    from catme_etl_spark.operators.registry import PENDING, QUERIES
-
-    assert len(PENDING) <= rotation.MAX_DEBUTS_PER_ROUND, sorted(PENDING)
-    spill = (
-        rotation.WINDOW_SLOTS
-        - len(rotation.CANARIES)
-        - rotation.MAX_DEBUTS_PER_ROUND
-    )
-    bound_at_cadence = math.ceil((len(QUERIES) - rotation.WINDOW_SLOTS) / spill) + 2
-    assert bound_at_cadence <= 10, (len(QUERIES), bound_at_cadence)
-
-
-def test_staleness_bound_robust_to_driver_artifact_timing(monkeypatch):
-    """The crafted round-8/round-9 failure mode: the driver drops one
-    or more NEW CORRECTNESS_r{N}.json artifacts (each certifying the
-    committed window) after the builder's final run, pushing
-    ``upcoming`` forward with no intervening emit. Each such delivery
-    can age the fleet AT MOST one round — so the achievable bound must
-    read ``before + k`` or better after k stacked deliveries, and must
-    stay within the mechanism-derived sustainable bound plus the same
-    k (the sustainable formula's slack already funds one delivery; a
-    second stacked artifact with zero emits in between is outside any
-    single round's control, hence the additive allowance).
-
-    Round 9's version of this test asserted a hard ``<= 7`` after one
-    delivery and reddened at judge time: the simulation re-certifies
-    the committed window (zero drain progress), so with a 289-name
-    registry the hypothetical next emit could not also absorb the
-    whole next-stalest cohort. The invariant that IS the mechanism's
-    to keep — one artifact, at most one round of aging — is what this
-    asserts now, stacked twice."""
-    import __spark_entry__  # noqa: F401 — registers every query
-
-    from catme_etl_spark.operators.ordering import SWEEP_ORDER
-
-    import tools.rotation as rotation
-
-    before = rotation.achievable_staleness_report()
-    sustainable = rotation.sustainable_bound()
-    assert (
-        before["max_rounds_stale_outside_window"] <= sustainable["bound"]
-    ), (before, sustainable)
-
-    certified, latest = rotation.last_certified()
-    simulated = dict(certified)
-    for k in (1, 2):
-        for n in SWEEP_ORDER[: rotation.WINDOW_SLOTS]:
-            simulated[n] = latest + k
-        snap = dict(simulated)
-        monkeypatch.setattr(
-            rotation, "last_certified", lambda s=snap, r=latest + k: (s, r)
-        )
-        after = rotation.achievable_staleness_report()
-        assert (
-            after["max_rounds_stale_outside_window"]
-            <= before["max_rounds_stale_outside_window"] + k
-        ), (k, before, after)
-        assert (
-            after["max_rounds_stale_outside_window"]
-            <= sustainable["bound"] + k
-        ), (k, after, sustainable)
 
 
 ROUND7_DEBUT_QUEUE = [

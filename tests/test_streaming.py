@@ -3,7 +3,10 @@ semantics and sealed-session append mode."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as e
+from conftest import SF0001
 from catme_etl_spark.streaming.jobs import stream_to_parquet
 
 
@@ -739,6 +742,7 @@ def test_single_batch_trigger_matches_multi_batch(spark, monkeypatch):
     sealed by the FINAL watermark, update-mode stateful operators whose
     consumer takes the final snapshot, and watermarked dedup."""
     import __spark_entry__ as e
+    from catme_etl_spark.streaming import jobs
 
     qs = e.queries()
     sf = "/root/testdata/sf0.001"
@@ -748,9 +752,9 @@ def test_single_batch_trigger_matches_multi_batch(spark, monkeypatch):
         "stream_stateful_user_totals",  # update-mode custom state
         "stream_dedup_event_id",        # dropDuplicatesWithinWatermark
     ):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_MAX_FILES", "1")
+        monkeypatch.setattr(jobs, "STREAM_MAX_FILES", 1)
         multi = sorted(tuple(r) for r in qs[name](spark, sf).collect())
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_MAX_FILES", "4")
+        monkeypatch.undo()
         single = sorted(tuple(r) for r in qs[name](spark, sf).collect())
         assert multi == single and multi, name
 
@@ -863,3 +867,130 @@ def test_ingest_gen_vectorized_matches_loop(spark, sf_dir):
         columns=["vec_id", "cid", "n_cand", "min_adc", "sum_adc", "admitted"],
     )
     assert got.astype("int64").values.tolist() == ref.values.tolist()
+
+
+# (stager, fixture table, slice key, stage root, files per trigger)
+STAGERS = [
+    ("_stream_events", "events", "ts", "/tmp/catme_etl_stream_src_v2", 4),
+    ("_stream_docs", "documents", "doc_id", "/tmp/catme_etl_stream_docs_v1", 4),
+    ("_stream_embeddings", "embeddings", "vec_id", "/tmp/catme_etl_stream_emb_v1", 4),
+    ("_stream_events_lateness", "events", "ts", "/tmp/catme_etl_stream_late_v1", 1),
+    ("_stream_docs_mod4", "documents", "doc_id", "/tmp/catme_etl_stream_docs_mod4_v1", 1),
+]
+
+
+def _stage_dir(root, sf_dir):
+    import os
+
+    return os.path.join(root, sf_dir.strip("/").replace("/", "_"))
+
+
+@pytest.mark.parametrize(
+    "stager,table,key,root,max_files", STAGERS, ids=[s[0] for s in STAGERS]
+)
+def test_stager_slices_cover_source_once(
+    spark, tmp_path, stager, table, key, root, max_files
+):
+    """Every fixture stager writes its slices in index order (increasing
+    mtimes), stages each source row once — NULL-ts events pinned to
+    slice 0 by the events stager, NULL keys dropped by the others —
+    keeps its files-per-trigger, and leaves an existing stage alone."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from catme_etl_spark.streaming import jobs
+
+    # sf0.001 plus two rows with a NULL slice key, under a fresh stage key
+    t = pq.read_table(os.path.join(SF0001, f"{table}.parquet"))
+    nulls = t.slice(0, 2)
+    i = nulls.schema.get_field_index(key)
+    nulls = nulls.set_column(i, key, pa.nulls(2, nulls.schema.field(key).type))
+    pq.write_table(pa.concat_tables([t, nulls]), tmp_path / f"{table}.parquet")
+    sf = str(tmp_path)
+    stage = _stage_dir(root, sf)
+    keeps_null_key = stager == "_stream_events"
+    try:
+        df = getattr(jobs, stager)(spark, sf)
+        assert df.isStreaming
+        slices = sorted(d for d in os.listdir(stage) if d.startswith("slice"))
+        assert slices == ["slice0", "slice1", "slice2", "slice3"]
+        files = {
+            d: [os.path.join(stage, d, f) for f in os.listdir(os.path.join(stage, d))
+                if f.endswith(".parquet")]
+            for d in slices
+        }
+        assert all(len(f) == 1 for f in files.values()), files
+        mtimes = [os.stat(files[d][0]).st_mtime_ns for d in slices]
+        assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
+
+        counts = [spark.read.parquet(os.path.join(stage, d)).count() for d in slices]
+        assert sum(counts) == t.num_rows + (2 if keeps_null_key else 0), counts
+        if keeps_null_key:
+            slice0 = spark.read.parquet(os.path.join(stage, "slice0"))
+            assert slice0.filter(slice0[key].isNull()).count() == 2
+
+        q = (
+            df.writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(data_batches) == len(slices) // max_files
+
+        before = {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(stage) for f in fs
+        }
+        getattr(jobs, stager)(spark, sf)
+        after = {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(stage) for f in fs
+        }
+        assert after == before
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def test_lateness_stager_reads_nanosecond_timestamps(spark, tmp_path):
+    """The lateness stager stages through ``load_table``, so an events
+    fixture whose ``ts`` is parquet TIMESTAMP(NANOS) is read (as raw
+    nanos, truncated to micros) even in a session where no earlier
+    stream query has set ``nanosAsLong``."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from catme_etl_spark.sources.tables import load_table
+    from catme_etl_spark.streaming.jobs import _stream_events_lateness
+
+    t = pq.read_table(os.path.join(SF0001, "events.parquet"))
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(t, tmp_path / "events.parquet", version="2.6")
+    sf = str(tmp_path)
+    stage = _stage_dir("/tmp/catme_etl_stream_late_v1", sf)
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
+    try:
+        df = _stream_events_lateness(spark, sf)
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        staged = spark.read.parquet(
+            *[os.path.join(stage, d) for d in os.listdir(stage) if d.startswith("slice")]
+        )
+        want = load_table(spark, SF0001, "events").filter("ts IS NOT NULL")
+        key = ["event_id", "ts"]
+        assert sorted(staged.select(key).collect()) == sorted(
+            want.select(key).collect()
+        )
+    finally:
+        if prev is not None:
+            spark.conf.set(conf, prev)
+        shutil.rmtree(stage, ignore_errors=True)

@@ -134,8 +134,8 @@ def _apply_prefix_artifacts(con, sql: str, done: dict) -> str:
 
 def _arm_artifact_attribution():
     """Call-time wrappers over ``_shared.shared_df``/``shared_broadcast``
-    (the bench.py artifact-warm pattern — instrumentation lives HERE so
-    engine sources and rotation fingerprints stay byte-identical): each
+    (the bench.py artifact-warm pattern — instrumentation lives HERE,
+    so the engine carries no timing hooks): each
     cache-miss build is timed with nested-build self-time accounting,
     and the sweep loop subtracts the artifact cost charged during a
     query from that query's printed reading, reporting the build as its

@@ -6,11 +6,12 @@ registry. The first command of a new round (after reading VERDICT):
     python tools/flip_pending.py            # dry run: list flip sites
     python tools/flip_pending.py --write    # rewrite in place
 
-then `python tools/rotation.py emit --write` (the debuts are brand-new
-names → forced into the fresh window), `python tools/check_oracle.py
---sf /root/testdata/sf0.01 --only <names>`, and pytest. The tool only
-rewrites decoration lines — bodies, oracles, and tests are already
-live (see PENDING_CHECK_r*.txt for the pre-verified hashes).
+then append the flipped names to ``SWEEP_ORDER`` in
+``catme_etl_spark/operators/ordering.py``, run ``python
+tools/check_oracle.py --only <names>`` (sf0.01 by default), and
+pytest. The tool only rewrites decoration lines — bodies, oracles, and
+tests are already live (see PENDING_CHECK_r*.txt for the pre-verified
+hashes).
 """
 
 from __future__ import annotations
@@ -76,7 +77,7 @@ def main() -> int:
         ), f"unflipped pending site survived the rewrite in {path}"
         open(path, "w").write(src)
     print(f"\nflipped {total} registrations live — now run:")
-    print("  python tools/rotation.py emit --write")
+    print("  append to SWEEP_ORDER in catme_etl_spark/operators/ordering.py")
     print("  python tools/check_oracle.py --sf /root/testdata/sf0.01 --only "
           + ",".join(n for v in sites.values() for n in v))
     return 0

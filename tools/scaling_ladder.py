@@ -20,7 +20,7 @@ Reading the exponents honestly:
   default the tool reads the LATEST ``BENCH_r*.json`` in the repo and
   takes its top N queries by normalized wall time — every heavy query
   a future round adds gets an exponent row with no hand-picked
-  ``--only`` list, the rotation-tool pattern applied to the ladder.
+  ``--only`` list.
   The ``--markdown`` output embeds a provenance marker
   (``<!-- ladder:auto bench=... top=N -->``) and
   ``tests/test_scaling_sync.py`` asserts the committed SCALING.md
