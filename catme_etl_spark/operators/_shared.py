@@ -80,9 +80,10 @@ def clear_shared() -> None:
     and broadcasts) regardless of owning session.
 
     For benchmarking: timing a query twice only measures the real cost
-    twice if the second run cannot hit the session cache — bench.py
-    calls this (plus ``spark.catalog.clearCache()`` for builder-local
-    persists) between repetitions so both runs are genuinely cold.
+    twice if the second run cannot hit the session cache — perfbench
+    calls this after its warm-up so session artifacts start cold, and
+    ``tools/dump_plans.py`` / ``tools/plan_report.py`` call it before
+    each build so every plan and measurement carries full lineage.
     """
     for cache, release in (
         (_DF_CACHE, _release_df),
@@ -216,20 +217,17 @@ def maybe_broadcast(df: DataFrame, sf_dir: str, table: str,
     the unconditional pin, never the optimization).
 
     The probe measures the BASE table file; caller-applied filters
-    only shrink the data, so the gate is conservative-safe. Budget via
-    ``CATME_BROADCAST_BUDGET_BYTES`` (tests set it to force the
-    fallback path). Constant-size dims (nation: 25 rows, region: 5)
-    and one-row aggregates keep their unconditional hints — they do
-    not scale with SF and gating them would only add probe noise.
+    only shrink the data, so the gate is conservative-safe. The budget
+    defaults to ``BROADCAST_BUDGET_DEFAULT``, read at call time (tests
+    patch it to force the fallback path). Constant-size dims (nation:
+    25 rows, region: 5) and one-row aggregates keep their unconditional
+    hints — they do not scale with SF and gating them would only add
+    probe noise.
     """
     from pyspark.sql import functions as F
 
     if budget_bytes is None:
-        budget_bytes = int(
-            os.environ.get(
-                "CATME_BROADCAST_BUDGET_BYTES", str(BROADCAST_BUDGET_DEFAULT)
-            )
-        )
+        budget_bytes = BROADCAST_BUDGET_DEFAULT
     try:
         probed = _table_bytes(sf_dir, table)
     except FileNotFoundError:
@@ -335,19 +333,24 @@ def require_bounded(
 def bounded_collect(df: DataFrame, max_rows: int | None = None, what: str = "input"):
     """``collect()`` with the budget enforced in the SAME job.
 
-    ``limit(max+1)`` caps what can ever reach the driver; one extra
-    sentinel row proves the overflow without a separate count pass.
-    This is the single-pass form of :func:`require_bounded` + collect —
-    the guard costs zero extra Spark jobs.
+    ``limit(max+1)`` caps what each task returns; one extra sentinel row
+    proves the overflow without a separate count pass. This is the
+    single-pass form of :func:`require_bounded` + collect — the guard
+    costs zero extra Spark jobs.
 
     The limit plans as ``CollectLimitExec.executeTake``, whose default
     scale-up schedule (1 partition, then ×4 per wave) serializes the
     final stage into up to 4 waves — pure latency here, because the
     budget limit is a GUARD, not a selector: when it fires at all we
     error out, and otherwise every partition's rows are needed anyway.
-    ``spark.sql.limit.initialNumPartitions`` is raised for the one
-    action so the first wave covers the whole final stage (measured at
-    sf0.1: the 460k-pair SRP verification collect 1.5 → 0.8 s).
+    ``spark.sql.limit.initialNumPartitions`` is set to the core count
+    (``defaultParallelism``) for the one action: sessions run
+    ``spark.sql.shuffle.partitions`` at the core count, so a post-shuffle
+    final stage still finishes in one wave (measured at sf0.1: the
+    460k-pair SRP verification collect 1.5 → 0.8 s), while the first
+    wave of a wider input returns at most cores × (max_rows + 1) rows to
+    the driver. Later waves run only while the rows received so far are
+    within budget.
     Single-threaded session assumption as in streaming's
     ``_run_to_memory``: the conf is session-global for the call's
     duration; the sweep/bench/pytest harnesses run queries
@@ -358,7 +361,7 @@ def bounded_collect(df: DataFrame, max_rows: int | None = None, what: str = "inp
     spark = df.sparkSession
     key = "spark.sql.limit.initialNumPartitions"
     prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(1 << 20))
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
     try:
         rows = df.limit(max_rows + 1).collect()
     finally:

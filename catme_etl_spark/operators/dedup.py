@@ -54,7 +54,7 @@ from ._shared import (
     shared_df,
     shared_matrix_broadcast,
 )
-from .registry import oracle_prefix, pending_query, query
+from .registry import oracle_prefix, query
 
 # ---------------------------------------------------------------------------
 # Exact dedup (F8).
@@ -4494,7 +4494,7 @@ def _pagerank_iter_sql() -> str:
     )
 
 
-@pending_query("sim_graph_pagerank_iter", oracle=_pagerank_iter_sql())
+@query("sim_graph_pagerank_iter", oracle=_pagerank_iter_sql())
 def sim_graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PAGERANK over the cosine >= 0.4 similarity graph — {iters}
     damped power iterations (d = 0.85, the published constant)
@@ -4658,7 +4658,7 @@ _SPAN_ORACLE = f"""
     """
 
 
-@pending_query("dedup_repeated_span_audit", oracle=_SPAN_ORACLE)
+@query("dedup_repeated_span_audit", oracle=_SPAN_ORACLE)
 def dedup_repeated_span_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REPEATED-SPAN LOCALIZATION — the substring-level rung the
     whole-document dedup ladder stops short of (the published lesson:

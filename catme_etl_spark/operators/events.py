@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..functions.money import money_sum
 from ..sources.tables import load_table
 from ._shared import require_bounded
-from .registry import pending_query, query
+from .registry import query
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,12 +24,18 @@ from pyspark.sql import functions as F
 from ..functions.money import cents, pct100
 from ..functions.texttools import sql_hex_long
 from ..sources.tables import load_table
-from .registry import pending_query, query
+from .registry import query
 from .sampling import hash_bucket
 
 # the deterministic 80/10/10 split bucket of sample_train_val_test,
 # as DuckDB SQL (md5 of the doc id -> 56-bit int -> mod 100)
 _SPLIT_BKT_SQL = "(" + sql_hex_long("md5(CAST(doc_id AS VARCHAR))", 14, 1) + " % 100)"
+
+
+def _r4(c: Column) -> Column:
+    """Round half away from zero to 4 decimals — the engine-identical
+    ``floor(x*10000+0.5)/10000`` idiom the oracles spell out."""
+    return F.floor(c * 10000 + F.lit(0.5)) / 10000
 
 
 def _fk_violations(
@@ -460,11 +466,10 @@ def quality_anomaly_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mad = dev.groupBy("event_type").agg(F.median("d").alias("mad"))
     j = dev.join(F.broadcast(mad), "event_type")
-    half = lambda c: F.floor(c * 10000 + F.lit(0.5)) / 10000  # noqa: E731
     return j.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        half(F.max("m") / 100.0).alias("med_value"),
-        half(F.max("mad") / 100.0).alias("mad_value"),
+        _r4(F.max("m") / 100.0).alias("med_value"),
+        _r4(F.max("mad") / 100.0).alias("mad_value"),
         F.count(
             F.when(10000 * F.col("d") > 44478 * F.col("mad"), 1)
         ).cast("long").alias("n_outliers"),
@@ -617,60 +622,20 @@ def quality_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     is strictly better, so the split count picks the plan; both forms
     compute identical exact measures.
     """
-    l = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_quantity").alias("qty"),
-        F.col("l_extendedprice").alias("price"),
-        F.col("l_discount").alias("disc"),
-        F.col("l_tax").alias("tax"),
-        F.unix_timestamp("l_shipdate").cast("double").alias("ship_epoch"),
-        "l_returnflag",
-        "l_linestatus",
-    )
-
-    def r4(c: Column) -> Column:
-        return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
-    num = ["qty", "price", "disc", "tax", "ship_epoch"]
+    l = _profile_source(spark, sf_dir)
     if _is_single_split(l):
-        base = l.agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                x
-                for col in num
-                for x in (
-                    (F.count(F.lit(1)) - F.count(col)).alias(f"{col}_nulls"),
-                    r4(F.min(col)).alias(f"{col}_min"),
-                    r4(F.max(col)).alias(f"{col}_max"),
-                )
-            ],
-            (F.count(F.lit(1)) - F.count("l_returnflag")).alias("rf_nulls"),
-            (F.count(F.lit(1)) - F.count("l_linestatus")).alias("ls_nulls"),
-        )
-        wide = base
-        for col, pfx in [(c, c) for c in num] + [
-            ("l_returnflag", "rf"),
-            ("l_linestatus", "ls"),
-        ]:
+        wide = l.agg(*_profile_base_aggs())
+        for _, col in _PROFILE_NUM + _PROFILE_STR:
             wide = wide.crossJoin(
-                l.agg(F.countDistinct(col).alias(f"{pfx}_nd"))
+                l.agg(F.countDistinct(col).alias(f"{col}_nd"))
             )
     else:
         wide = l.agg(
-            F.count(F.lit(1)).alias("n"),
+            *_profile_base_aggs(),
             *[
-                x
-                for col in num
-                for x in (
-                    (F.count(F.lit(1)) - F.count(col)).alias(f"{col}_nulls"),
-                    F.countDistinct(col).alias(f"{col}_nd"),
-                    r4(F.min(col)).alias(f"{col}_min"),
-                    r4(F.max(col)).alias(f"{col}_max"),
-                )
+                F.countDistinct(col).alias(f"{col}_nd")
+                for _, col in _PROFILE_NUM + _PROFILE_STR
             ],
-            (F.count(F.lit(1)) - F.count("l_returnflag")).alias("rf_nulls"),
-            F.countDistinct("l_returnflag").alias("rf_nd"),
-            (F.count(F.lit(1)) - F.count("l_linestatus")).alias("ls_nulls"),
-            F.countDistinct("l_linestatus").alias("ls_nd"),
         )
     stacked = wide.selectExpr(
         """stack(7,
@@ -734,6 +699,28 @@ def _profile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _profile_base_aggs() -> list[Column]:
+    """The measures every profile form shares, over
+    :func:`_profile_source`: row count ``n``, ``<col>_nulls`` for every
+    profiled column and rounded ``<col>_min`` / ``<col>_max`` for the
+    numeric ones. Each form adds its distinct-count measures."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        *[
+            (F.count(F.lit(1)) - F.count(col)).alias(f"{col}_nulls")
+            for _, col in _PROFILE_NUM + _PROFILE_STR
+        ],
+        *[
+            x
+            for _, col in _PROFILE_NUM
+            for x in (
+                _r4(F.min(col)).alias(f"{col}_min"),
+                _r4(F.max(col)).alias(f"{col}_max"),
+            )
+        ],
+    ]
+
+
 def table_profile_wide_approx(l: DataFrame) -> DataFrame:
     """The AT-SCALE profiler core: ONE wide aggregate over the table
     computing row count, per-column null counts, min/max, and HLL++
@@ -755,27 +742,8 @@ def table_profile_wide_approx(l: DataFrame) -> DataFrame:
     algorithm over the identical rows, so every estimate is unchanged
     (asserted by the certified bounds audit); at real split counts
     the one-pass fused form runs unchanged."""
-
-    def r4(c: Column) -> Column:
-        return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
     if _is_single_split(l):
-        wide = l.agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                x
-                for _, col in _PROFILE_NUM
-                for x in (
-                    (F.count(F.lit(1)) - F.count(col)).alias(f"{col}_nulls"),
-                    r4(F.min(col)).alias(f"{col}_min"),
-                    r4(F.max(col)).alias(f"{col}_max"),
-                )
-            ],
-            *[
-                (F.count(F.lit(1)) - F.count(col)).alias(f"{col}_nulls")
-                for _, col in _PROFILE_STR
-            ],
-        )
+        wide = l.agg(*_profile_base_aggs())
         for _, col in _PROFILE_NUM + _PROFILE_STR:
             wide = wide.crossJoin(
                 l.agg(
@@ -786,28 +754,10 @@ def table_profile_wide_approx(l: DataFrame) -> DataFrame:
             )
         return wide
     return l.agg(
-        F.count(F.lit(1)).alias("n"),
+        *_profile_base_aggs(),
         *[
-            x
-            for _, col in _PROFILE_NUM
-            for x in (
-                (F.count(F.lit(1)) - F.count(col)).alias(f"{col}_nulls"),
-                F.approx_count_distinct(col, rsd=_PROFILE_RSD).alias(
-                    f"{col}_ad"
-                ),
-                r4(F.min(col)).alias(f"{col}_min"),
-                r4(F.max(col)).alias(f"{col}_max"),
-            )
-        ],
-        *[
-            x
-            for _, col in _PROFILE_STR
-            for x in (
-                (F.count(F.lit(1)) - F.count(col)).alias(f"{col}_nulls"),
-                F.approx_count_distinct(col, rsd=_PROFILE_RSD).alias(
-                    f"{col}_ad"
-                ),
-            )
+            F.approx_count_distinct(col, rsd=_PROFILE_RSD).alias(f"{col}_ad")
+            for _, col in _PROFILE_NUM + _PROFILE_STR
         ],
     )
 
@@ -899,26 +849,7 @@ def quality_table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         # IS the exact countDistinct — 7 combined legs replace the 14
         # separate sketch + exact legs (measured 2.2 → 1.3 s at sf0.1;
         # estimates verified value-identical per column).
-        row = l.agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                x
-                for _, col in _PROFILE_NUM
-                for x in (
-                    (F.count(F.lit(1)) - F.count(col)).alias(f"{col}_nulls"),
-                    (F.floor(F.min(col) * 10000 + F.lit(0.5)) / 10000).alias(
-                        f"{col}_min"
-                    ),
-                    (F.floor(F.max(col) * 10000 + F.lit(0.5)) / 10000).alias(
-                        f"{col}_max"
-                    ),
-                )
-            ],
-            *[
-                (F.count(F.lit(1)) - F.count(col)).alias(f"{col}_nulls")
-                for _, col in _PROFILE_STR
-            ],
-        )
+        row = l.agg(*_profile_base_aggs())
         for _, col in _PROFILE_NUM + _PROFILE_STR:
             d = l.select(col).distinct()
             row = row.crossJoin(

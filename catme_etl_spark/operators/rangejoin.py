@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import pending_query, query
+from .registry import query
 
 
 def banded_interval_join(

@@ -1,10 +1,13 @@
 """Query registry.
 
-Every implemented operator from SURVEY.md §2 registers itself here as a
-named query ``(spark, sf_dir) -> DataFrame`` plus (when SQL-expressible)
-a DuckDB oracle SQL string over the same parquet tables. The driver
-cross-checks the pair at sf0.01 (row-count + schema + order-insensitive
-value hash), so:
+Every implemented operator from SURVEY.md §2 registers itself here with
+the one ``@query`` decorator: a named query ``(spark, sf_dir) ->
+DataFrame`` in ``QUERIES`` plus (when SQL-expressible) a DuckDB oracle
+SQL string over the same parquet tables in ``ORACLE``. Registering a
+name makes it live in ``__spark_entry__.queries()``; the name is also
+appended by hand to ``operators/ordering.py::SWEEP_ORDER``, which fixes
+its place in that order. The correctness gate cross-checks the pair at
+sf0.01 (row-count + schema + order-insensitive value hash), so:
 
 - alias every computed column identically on both sides;
 - avoid raw float aggregates in output — ROUND to fixed decimals on
@@ -34,38 +37,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-# ---------------------------------------------------------------------------
-# Deferred registrations.
-#
-# `pending_query` holds a finished operator OUT of QUERIES/ORACLE (so
-# `queries()`, the correctness sweep and bench never see it) while
-# keeping the implementation + oracle live for tests. Going live is a
-# one-line change: `tools/flip_pending.py --write` rewrites the
-# decorator to `@query`, and the name is appended to
-# `operators/ordering.py::SWEEP_ORDER`.
-# ---------------------------------------------------------------------------
-
-PENDING: dict[str, QueryFn] = {}
-PENDING_ORACLE: dict[str, str] = {}
-
-
-def pending_query(
-    name: str, oracle: str | None = None
-) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a named query into the round-(N+1) debut
-    queue instead of the live registry (window-budget deferral)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in QUERIES or name in PENDING:
-            raise ValueError(f"duplicate query name {name!r}")
-        PENDING[name] = fn
-        if oracle is not None:
-            PENDING_ORACLE[name] = oracle
         return fn
 
     return deco

@@ -22,10 +22,6 @@ from ..sources.tables import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Flagship: revenue by nation (scan + filter + 3 joins + agg + sort + limit).
 # Mirrors the shape of TPC-H Q5. SURVEY §7.1 step 2.
@@ -52,10 +48,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def flagship_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship slice (SURVEY §7.2): lineitem⋈orders⋈customer⋈nation with a ship-date filter, revenue by nation, top 10 — scan, filter, 3 joins, agg, sort, limit in one declarative plan."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
 
     revenue_units = cents("l_extendedprice") * (100 - pct100("l_discount"))
     return (
@@ -108,7 +104,7 @@ def flagship_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: the canonical wide aggregate (8 measures × 4 groups) over a date-filtered scan; exact integer-cents arithmetic end to end."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     e, d, t = cents("l_extendedprice"), pct100("l_discount"), pct100("l_tax")
     n = F.count(F.lit(1))
     return (
@@ -149,8 +145,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_outer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER join (J2) + count: zero-order customers kept via the null-key count."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         customer.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
@@ -182,12 +178,12 @@ def join_left_outer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_full_outer_nation_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join (J2) over disjoint key subsets: both unmatched sides survive with NULLs."""
     cust = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(F.count(F.lit(1)).alias("n_cust"))
     )
     supp = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .groupBy(F.col("s_nationkey").alias("nk"))
         .agg(F.count(F.lit(1)).alias("n_supp"))
     )
@@ -213,8 +209,8 @@ def join_full_outer_nation_presence(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def join_semi_customers_with_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join (J3): customers having at least one big order — EXISTS with early-out, emits each left row once."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     return customer.join(
         orders, F.col("c_custkey") == F.col("o_custkey"), "left_semi"
     ).select("c_custkey", "c_name")
@@ -230,8 +226,8 @@ def join_semi_customers_with_big_orders(spark: SparkSession, sf_dir: str) -> Dat
 )
 def join_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI join (J3): customers with no orders — the distributed NOT EXISTS, no row duplication."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return customer.join(
         orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti"
     ).select("c_custkey", "c_name")
@@ -252,9 +248,9 @@ def join_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> Data
 )
 def join_cross_region_segment_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSS join (J6) of two tiny dimension projections — the bounded-input grid shape (deliberately never fact×fact)."""
-    region = _t(spark, sf_dir, "region")
+    region = load_table(spark, sf_dir, "region")
     segs = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .select(F.col("c_mktsegment").alias("mktsegment"))
         .distinct()
     )
@@ -292,7 +288,7 @@ _BANDS = [  # p_retailprice spans [900, 1000) in the synthetic data
 )
 def join_range_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-equi (range/theta) join (J5) against a tiny bands table — BNL over a broadcast side; the banded equi-join variant for big inputs lives in rangejoin.py."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
     return (
         part.join(
@@ -330,7 +326,7 @@ def join_range_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_global_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-table aggregate without GROUP BY (A1/A2): one partial state per task, single final combine."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -363,7 +359,7 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0.02 → ±10%, generous). The estimate is engine-specific but
     deterministic per input, so estimator drift hash-mismatches instead
     of hiding behind a rows-only check."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -397,7 +393,7 @@ def agg_approx_distinct_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch value itself is engine-specific but DETERMINISTIC per input,
     so if Spark's estimate ever drifts out of bounds this row
     hash-mismatches instead of hiding behind a rows-only check."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.countDistinct("l_partkey").alias("exact_parts"),
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("_approx"),
@@ -429,9 +425,9 @@ def agg_approx_distinct_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over the region→nation hierarchy (A3): per-nation, per-region, and grand-total rows from one scan."""
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     joined = customer.join(
         F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey")
     ).join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
@@ -460,7 +456,7 @@ def agg_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (status, priority) (A3): all 4 grouping sets in one pass; NULL marks the rolled-up dimensions."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -496,7 +492,7 @@ def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_conditional_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation (A4): sum/count under CASE predicates in one pass — the pivot-free way to split measures by flag."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_linestatus").agg(
         money_from_cents(
             F.sum(
@@ -526,7 +522,7 @@ def agg_conditional_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_collect_segments_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_set aggregation (A5): per-nation set of market segments, emitted sorted+joined so the hash is order-stable."""
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     return customer.groupBy("c_nationkey").agg(
         F.concat_ws(",", F.sort_array(F.collect_set("c_mktsegment"))).alias("segments")
     )
@@ -549,7 +545,7 @@ def agg_collect_segments_per_nation(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def sort_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k (O3): orderBy+limit plans as TakeOrderedAndProject — per-partition heaps, no full sort."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .limit(20)
@@ -572,8 +568,12 @@ def sort_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_union_distinct_nation_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION DISTINCT: concatenate then dedup — one shuffle on the key."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(
+        F.col("c_nationkey").alias("nationkey")
+    )
+    s = load_table(spark, sf_dir, "supplier").select(
+        F.col("s_nationkey").alias("nationkey")
+    )
     return c.union(s).distinct()
 
 
@@ -587,8 +587,12 @@ def set_union_distinct_nation_keys(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def set_intersect_nation_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct semantics): keys present on both sides."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(
+        F.col("c_nationkey").alias("nationkey")
+    )
+    s = load_table(spark, sf_dir, "supplier").select(
+        F.col("s_nationkey").alias("nationkey")
+    )
     return c.intersect(s)
 
 
@@ -602,8 +606,12 @@ def set_intersect_nation_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except_nation_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (set difference, distinct semantics) on key projections."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(
+        F.col("c_nationkey").alias("nationkey")
+    )
+    s = load_table(spark, sf_dir, "supplier").select(
+        F.col("s_nationkey").alias("nationkey")
+    )
     return c.subtract(s)  # EXCEPT (set semantics); exceptAll would keep multiplicity
 
 
@@ -619,8 +627,12 @@ def set_except_nation_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except_all_multiplicity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL keeps per-key multiplicity: |customers(k)| − |suppliers(k)|."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(
+        F.col("c_nationkey").alias("nationkey")
+    )
+    s = load_table(spark, sf_dir, "supplier").select(
+        F.col("s_nationkey").alias("nationkey")
+    )
     return c.exceptAll(s).groupBy("nationkey").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -637,4 +649,8 @@ def set_except_all_multiplicity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_flag_status_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT projection = group-by-all-columns; hash-shuffle on the pair."""
-    return _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
+    return (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_returnflag", "l_linestatus")
+        .distinct()
+    )

@@ -13,10 +13,6 @@ from ..sources.tables import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "agg_grouping_sets_status_priority",
     oracle="""
@@ -28,7 +24,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def agg_grouping_sets_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (A3 beyond rollup/cube) via Spark SQL —
     one pass, each row fans into its grouping sets map-side."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
@@ -49,7 +45,7 @@ def agg_grouping_sets_status_priority(spark: SparkSession, sf_dir: str) -> DataF
 def set_intersect_all_multiplicity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL (bag semantics — multiplicity = min of the two
     sides), completing the set-op family."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("k"))
     b = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_custkey").alias("k")
@@ -73,7 +69,7 @@ def agg_median_price_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Exact medians need the group's values together (sort or
     full pass) — at 100 TB prefer approx_percentile unless exactness
     is contractual."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         (F.median(cents("o_totalprice")) / 100.0).alias("median_price")
     )
@@ -98,7 +94,7 @@ def agg_percentiles_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid. Exact percentiles materialize each group's values — at 100 TB
     use ``approx_percentile`` (t-digest sketch, mergeable map-side)
     unless the number is contractual."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     c = cents("o_totalprice")
     return o.groupBy("o_orderstatus").agg(
         (F.percentile(c, F.lit(0.5)) / 100.0).alias("p50"),
@@ -128,7 +124,7 @@ def agg_approx_percentile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic per input, so a drifting estimate hash-mismatches
     here instead of hiding behind a rows-only check; the pattern
     matches ``agg_approx_distinct_bounds``."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     c = cents("o_totalprice")
     return (
         o.groupBy("o_orderstatus")
@@ -165,7 +161,7 @@ def subquery_above_avg_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The epsilon guards the comparison: rows AT the average (possible on
     a 2-decimal money grid) would otherwise flip on last-ulp AVG
     differences between engines."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     avg = c.agg((F.sum(cents("c_acctbal")) / (100.0 * F.count(F.lit(1)))).alias("avg_bal"))
     return (
         c.crossJoin(F.broadcast(avg))
@@ -191,7 +187,7 @@ def scalar_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``try_cast`` return NULL instead — the distributed-job-friendly
     behavior (one poisoned row must not kill a 100 TB pass; pair with a
     quarantine filter to collect offenders)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.try_divide(F.col("p_retailprice"), F.col("p_size") - 5).alias("price_per"),
@@ -212,7 +208,7 @@ def scalar_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_having_heavy_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HAVING = filter over the aggregate (planned as one hash-agg +
     post-filter; no second shuffle)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("n_orders"))
@@ -232,7 +228,7 @@ def agg_having_heavy_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot/melt (inverse of pivot): wide metric columns → long
     (key, metric, value) rows — a narrow map-side explode, no shuffle."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     w = p.select(
         "p_partkey",
         F.round("p_retailprice", 2).alias("retailprice"),
@@ -268,7 +264,7 @@ def text_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     global token total as a one-row aggregate broadcast-cross-joined
     back onto the (tiny) mix table — no unpartitioned window — so the
     big table is touched once."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     m = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split("text", " "))).cast("long").alias("n_tokens"),
@@ -307,7 +303,7 @@ def join_null_safe_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     where plain `=` would silently drop them — the semantics gap that
     corrupts outer-join-then-group pipelines. Plans exactly like an
     equi-join (hashable key), so the scale story is unchanged."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     seg = F.nullif(F.col("c_mktsegment"), F.lit("BUILDING"))
     a = (
         c.filter(F.col("c_acctbal") < 1000)
@@ -343,7 +339,7 @@ def agg_bool_count_if_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative constraint-check shape; one hash-agg with boolean
     partial states (three booleans+one long per group cross the
     shuffle, nothing else)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
         .agg(
@@ -389,7 +385,7 @@ def scd2_priority_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-history build a warehouse runs incrementally at scale.
     Ties are impossible: (o_orderdate, o_orderkey) is unique per row.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey"
     )
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -435,8 +431,8 @@ def join_lateral_top2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-oriented; the window-function formulation
     (`window_top3_orders_per_customer`) remains the idiom of choice
     when the per-group work is heavy."""
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    c = _t(spark, sf_dir, "customer").select(
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
     top2 = (
@@ -486,8 +482,8 @@ def join_point_in_time_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     600k-row decoration without hashing 600k rows."""
     from .asof import asof_join
 
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     dim = (
         o.groupBy("o_custkey", "o_orderdate")
         .agg(F.max_by("o_orderpriority", F.col("o_orderkey")).alias("prio"))

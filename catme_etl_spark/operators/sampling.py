@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.money import cents
 from ..functions.texttools import hex_prefix_long, sql_hex_long, tokens
 from ..sources.tables import load_table
-from .registry import pending_query, query
+from .registry import query
 
 _STRATUM_K = 5
 
@@ -1892,7 +1892,7 @@ _CURRICULUM_ORACLE = f"""
     """
 
 
-@pending_query("sample_curriculum_schedule", oracle=_CURRICULUM_ORACLE)
+@query("sample_curriculum_schedule", oracle=_CURRICULUM_ORACLE)
 def sample_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CURRICULUM SCHEDULE over quality deciles — the pacing plan a
     curriculum-learning dataloader executes (public recipe: train on

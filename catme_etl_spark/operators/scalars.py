@@ -20,10 +20,6 @@ from ..sources.tables import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "scalar_string_funcs",
     oracle="""
@@ -44,7 +40,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def scalar_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String functions (F1): case, trim, substring, concat_ws, regexp extract/replace, split, length, LIKE."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.filter(F.col("c_name").like("Customer#%")).select(
         "c_custkey",
         F.upper("c_mktsegment").alias("seg_upper"),
@@ -79,7 +75,7 @@ def scalar_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time functions (F2): trunc, datediff, year/month/dow, unix epoch round-trips."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
     d = F.col("o_orderdate")
     return o.select(
         "o_orderkey",
@@ -117,7 +113,7 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math functions (F3): round/abs/floor/ceil/pow/sqrt/log on money and quantity grids."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 50 == 0)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 50 == 0)
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -150,7 +146,7 @@ def scalar_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array kernel ops over array<float> embeddings — size, index,
     higher-order transform/aggregate/filter. These stay JVM-side
     (no UDF) and sum left-to-right, matching DuckDB's list_sum order."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     x_d = lambda x: x.cast("double")  # noqa: E731
     return emb.select(
         "vec_id",
@@ -180,7 +176,7 @@ def scalar_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_array_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode (F4): array → (pos, value) rows, the lateral-view expansion."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5)
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5)
     return emb.select("vec_id", F.posexplode("embedding").alias("pos", "v")).select(
         "vec_id",
         F.col("pos").cast("long").alias("pos"),
@@ -202,7 +198,7 @@ def scalar_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON column access (events.props): parse once with from_json
     into a typed struct — at scale this beats repeated get_json_object
     string scans, and the parsed struct prunes to just the used field."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.withColumn("p", F.from_json("props", "k INT"))
         .groupBy("event_type")
@@ -224,7 +220,7 @@ def scalar_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_json_get_object(spark: SparkSession, sf_dir: str) -> DataFrame:
     """get_json_object / json path extraction (F5) from the events.props JSON string."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 20 == 0)
+    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 20 == 0)
     return ev.select(
         "event_id",
         F.get_json_object("props", "$.k").cast("int").alias("k"),
@@ -246,7 +242,7 @@ def scalar_json_get_object(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_conditional_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional/null functions (F6): when/otherwise, coalesce, nullif, isnull over order attributes."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         F.when(F.col("c_acctbal") < 0, "debt")
@@ -283,7 +279,7 @@ def scalar_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     open-schema alternative to ``from_json(schema)`` when event
     payloads drift. Parsing happens map-side in one scan; the shuffle
     carries only the extracted int."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.variant_get(F.parse_json("props"), "$.k", "int")
     return (
         e.select("event_type", k.alias("k"))
@@ -315,7 +311,7 @@ def scalar_url_parse_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts by CONSTRUCTION (DuckDB has no parse_url) — the check proves
     Spark's parser inverts the construction exactly. All JVM built-ins,
     codegen-friendly, no regex UDFs."""
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         (F.col("event_type") == "click") & (F.col("event_id") % 7 == 0)
     )
     url = F.concat(
@@ -360,7 +356,7 @@ def scalar_bitwise_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's << differs out of range) and the query asserts the
     non-negative id domain in its filter (% and >> diverge
     cross-engine for negative operands)."""
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         (F.col("event_id") % 37 == 0) & (F.col("event_id") >= 0)
     )
     return e.select(
@@ -406,7 +402,7 @@ def scalar_url_canonicalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     codegen; the distinct-count is the standard two-phase expand — no
     UDFs, no regex backtracking on the hot path.
     """
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "view")
     )
     url = F.concat(

@@ -25,8 +25,6 @@ plumbing, different centroid table).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -39,7 +37,7 @@ from ._shared import (
     shared_broadcast,
     shared_matrix_broadcast,
 )
-from .registry import pending_query, query
+from .registry import query
 
 TOP_K = 5
 NPROBE = 2
@@ -57,9 +55,7 @@ CENTROID_STRIDE = 50
 # by construction (row-local kernels; per-partition winners reduce
 # under a global tie rule) — re-certified against the oracle for the
 # whole family.
-_EMB_BYTES_PER_TASK = int(
-    os.environ.get("CATME_EMB_BYTES_PER_TASK", str(128 << 10))
-)
+_EMB_BYTES_PER_TASK = 128 << 10
 
 
 def fan_out(df, spark, *keys):

@@ -26,7 +26,7 @@ from ..functions.money import cents, money_sum
 from ..functions.texttools import hex_prefix_long, sql_hex_long
 from ..sources.tables import load_table
 from ._shared import maybe_broadcast
-from .registry import pending_query, query
+from .registry import query
 
 
 @query(
@@ -2457,7 +2457,7 @@ _SPEARMAN_ORACLE = """
     """
 
 
-@pending_query("agg_spearman_corr", oracle=_SPEARMAN_ORACLE)
+@query("agg_spearman_corr", oracle=_SPEARMAN_ORACLE)
 def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPEARMAN RANK CORRELATION between account balance and lifetime
     order spend, per market segment — the monotone-association rung

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.texttools import sql_hex_long, tokens, word_shingles
 from ..sources.tables import load_table
-from .registry import pending_query, query
+from .registry import query
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2388,7 +2388,7 @@ _BPE_ORACLE = f"""
     """
 
 
-@pending_query("text_bpe_merge_candidates", oracle=_BPE_ORACLE)
+@query("text_bpe_merge_candidates", oracle=_BPE_ORACLE)
 def text_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE BPE INDUCTION ROUND (Sennrich-Haddow-Birch byte-pair
     encoding, the public tokenizer-training algorithm): count every

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import cents
 from ..sources.tables import load_table
-from .registry import pending_query, query
+from .registry import query
 
 _BUCKET_S = 600  # 10-minute buckets
 
@@ -871,8 +871,6 @@ def ts_cross_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("corr"),
     )
 
-
-from .registry import pending_query  # noqa: E402
 
 _HOLT_GUARD = "holt forecast undefined: fewer than 2 observed days"
 

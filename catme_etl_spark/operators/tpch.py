@@ -22,10 +22,6 @@ from ._shared import maybe_broadcast
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _REV = "CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT))"
 
 
@@ -49,11 +45,13 @@ _REV = "CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(ROUND(l_di
 )
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3: unshipped-order revenue — date-filtered fact joins, grouped revenue, top 10 by (revenue, date, key)."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1997-03-15").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1997-03-15").cast("timestamp")
     )
     rev = cents("l_extendedprice") * (100 - pct100("l_discount"))
@@ -95,15 +93,15 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     """Six-way join; the c_nationkey = s_nationkey clause makes it the
     classic 'local supplier' semi-cyclic shape. nation/region/supplier
     broadcast; the two fact tables shuffle on the join key once."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     rev = cents("l_extendedprice") * (100 - pct100("l_discount"))
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -137,7 +135,7 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
 def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure scan-and-aggregate: every predicate pushes into the parquet
     scan, no join, no shuffle beyond the final scalar combine."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     rev = cents("l_extendedprice") * pct100("l_discount")
     return (
         li.filter(
@@ -168,11 +166,11 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS-subquery shape: planned as a LEFT SEMI join (the correct
     distributed EXISTS — no duplication, early-out per key)."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
         o.join(
             li,
@@ -200,11 +198,11 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Promo revenue share: fact-dim broadcast join + conditional
     aggregate, exact integer units until the final ratio."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = cents("l_extendedprice") * (100 - pct100("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))
     return (
@@ -238,13 +236,13 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10: returned-item revenue per customer — 3 joins, group, exact-cents revenue, top 20 fully tie-broken."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     rev = cents("l_extendedprice") * (100 - pct100("l_discount"))
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))

@@ -42,10 +42,6 @@ from ._shared import maybe_broadcast
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _REV = "CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT))"
 _CENTS = "CAST(ROUND({c} * 100, 0) AS BIGINT)"
 
@@ -82,19 +78,19 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     *before* the join, so the fact-side shuffle only carries matching
     rows; the OR pair keeps both directions in one plan.
     """
-    n1 = _t(spark, sf_dir, "nation").select(
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
@@ -136,24 +132,26 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8: one nation's share of ECONOMY-part revenue sold into AMERICA,
     by order year. Share = conditional-sum / total-sum in one aggregate
     pass — exact integer units until the final ratio."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_type") == "ECONOMY")
         .select("p_partkey")
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_region")
     )
     r = (
-        _t(spark, sf_dir, "region")
+        load_table(spark, sf_dir, "region")
         .filter(F.col("r_name") == "AMERICA")
         .select("r_regionkey")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
     rev = _rev()
@@ -195,15 +193,17 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q9_product_type_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 (adapted: no partsupp supply cost → revenue, not profit):
     PROMO-part revenue by supplier nation and order year."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_type") == "PROMO")
         .select("p_partkey")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", F.col("n_name").alias("nation")
+    )
     return (
         li.join(maybe_broadcast(p, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -236,10 +236,10 @@ def tpch_q12_late_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFra
     order' plays the late-delivery role): high- vs low-priority line
     counts per line status. The cross-column date predicate cannot push
     to the scan, but the year-range on l_shipdate does."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -277,9 +277,9 @@ def tpch_q13_customer_order_distribution(
     """Q13: histogram of per-customer order counts. Left outer join so
     zero-order customers survive (COUNT of the null key gives 0); two
     aggregation levels — the second input is one row per customer, tiny."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") != "5-LOW")
         .select("o_orderkey", "o_custkey")
     )
@@ -317,7 +317,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     max is a one-row aggregate broadcast back onto the per-supplier
     roll-up (no second scan of lineitem); equality compares exact
     integer cents, never floats."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
@@ -325,7 +325,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_rev()).alias("total_c")
     )
     top = rev.agg(F.max("total_c").alias("max_c"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         rev.join(F.broadcast(top), F.col("total_c") == F.col("max_c"))
         .join(maybe_broadcast(s, sf_dir, "supplier"), F.col("supplier_no") == F.col("s_suppkey"))
@@ -356,12 +356,12 @@ def tpch_q16_supplier_count_by_part(spark: SparkSession, sf_dir: str) -> DataFra
     distinct shipping suppliers per (brand, type, size) for selected
     sizes. count(distinct) expands to a two-phase de-dup + count; the
     NOT-filters land on the broadcast part side."""
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#5")
         & (F.col("p_type") != "PROMO")
         & (F.col("p_size").isin(1, 5, 15, 25, 35, 45, 50))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(maybe_broadcast(p, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
@@ -390,9 +390,9 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     aggregate broadcast-joined back to the fact — one lineitem shuffle
     on l_partkey, no re-scan. Quantities are whole-number doubles, so
     the AVG is exact and engine-independent."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") == "Brand#7")
         .select("p_partkey")
     )
@@ -435,16 +435,16 @@ def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFra
     customers. The HAVING roll-up produces few keys, so it joins back
     to the fact as a broadcast semi-filter rather than a second
     shuffle; top-k is fully tie-broken (o_orderkey unique)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
         .filter(F.col("sum_qty") > 300)
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         big.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
@@ -479,8 +479,8 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fact-dim join. Catalyst extracts the common join key and keeps the
     disjunction as a post-join filter; the brand/size legs prune the
     broadcast part side via an OR-pushdown."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     q = F.col("l_quantity")
     cond = (
         (
@@ -533,7 +533,9 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     well-funded customers with no recent orders. The scalar average is
     an exact-cents one-row aggregate broadcast into the filter; the NOT
     EXISTS is a left-anti join against the date-pruned orders scan."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey", "c_acctbal"
+    )
     avg_bal = (
         c.filter(F.col("c_acctbal") > 0)
         .agg(
@@ -545,7 +547,7 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2000-07-01").cast("timestamp"))
         .select("o_custkey")
     )
@@ -596,18 +598,20 @@ def tpch_q2_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically on both engines — Spark ``F.round`` vs DuckDB ``ROUND``
     disagree on binary ties (a real 4th-decimal tie at sf0.001 caught
     this in round 7)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"
     )
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter((F.col("p_size") == 15) & (F.col("p_type") == "STANDARD"))
         .select("p_partkey")
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_regionkey", "n_name"
+    )
     r = (
-        _t(spark, sf_dir, "region")
+        load_table(spark, sf_dir, "region")
         .filter(F.col("r_name") == "EUROPE")
         .select("r_regionkey")
     )

@@ -48,10 +48,6 @@ from .registry import query
 from .tpch2 import _REV, _rev
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "tpch_q11_important_stock",
     oracle=f"""
@@ -85,12 +81,12 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``value_c * 2000 > total_c`` in exact int64 on both engines.
     """
     n = (
-        _t(spark, sf_dir, "nation")
+        load_table(spark, sf_dir, "nation")
         .filter(F.col("n_name") == "NATION_7")
         .select("n_nationkey")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     nat_sup = s.join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")).select(
@@ -152,12 +148,12 @@ def tpch_q20_potential_promotion_suppliers(
     doubles so ``qty * 2 > part_qty`` is exact in both engines.
     """
     promo = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_type") == "PROMO")
         .select("p_partkey")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -179,11 +175,13 @@ def tpch_q20_potential_promotion_suppliers(
         .distinct()
     )
     n = (
-        _t(spark, sf_dir, "nation")
+        load_table(spark, sf_dir, "nation")
         .filter(F.col("n_name") == "NATION_3")
         .select("n_nationkey")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select(
+        "s_suppkey", "s_name", "s_nationkey"
+    )
     return (
         s.join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(
@@ -237,11 +235,11 @@ def tpch_q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFra
     (here Spark's shuffle reuse covers it).
     """
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     late = (
@@ -250,12 +248,12 @@ def tpch_q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFra
         .select("l_orderkey", "l_suppkey")
     )
     n = (
-        _t(spark, sf_dir, "nation")
+        load_table(spark, sf_dir, "nation")
         .filter(F.col("n_name") == "NATION_1")
         .select("n_nationkey")
     )
     sup = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", "s_name")
     )

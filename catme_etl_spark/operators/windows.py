@@ -14,11 +14,7 @@ from pyspark.sql import functions as F
 from ..functions.money import cents, money_from_cents
 from ..sources.tables import load_table
 from ._shared import maybe_broadcast
-from .registry import pending_query, query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from .registry import query
 
 
 @query(
@@ -36,7 +32,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def window_top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k via row_number over a fully tie-broken ordering, filtered to rn<=3."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
@@ -59,7 +55,7 @@ def window_top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def window_rank_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank vs dense_rank over a per-group ordering — gap vs no-gap tie semantics."""
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     w_ties = Window.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc())
     w_uniq = Window.partitionBy("c_nationkey").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey")
@@ -87,7 +83,7 @@ def window_rank_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_running_total_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running total (unboundedPreceding→current) per customer on the integer-cents grid — exact cumulative sums at any parallelism."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -111,7 +107,7 @@ def window_running_total_per_customer(spark: SparkSession, sf_dir: str) -> DataF
 )
 def window_lag_lead_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead over per-user event time: previous/next values without self-joins."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return events.select(
         "user_id",
@@ -132,7 +128,7 @@ def window_lag_lead_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_moving_avg_3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-row moving average (rowsBetween frame) per user, deterministically ordered by (ts, event_id)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -163,7 +159,7 @@ def window_range_frame_events_per_hour(spark: SparkSession, sf_dir: str) -> Data
     the oracle must ``floor(epoch(ts))`` to match — DuckDB's
     double→BIGINT cast rounds, which flips frame boundaries for events
     with fractional seconds ≥ .5 (surfaced at sf0.1, not sf0.01)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     epoch = F.unix_timestamp("ts").alias("epoch_s")
     w = (
         Window.partitionBy("user_id")
@@ -192,7 +188,7 @@ def window_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame
     special case. The partitioned-by-key signature
     (``window_percent_rank_by_custkey``) is the default at scale;
     unpartitioned windows over full fact tables are an anti-pattern."""
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     w = Window.orderBy("o_totalprice", "o_orderkey")
     return orders.select(
         "o_orderkey",
@@ -218,7 +214,7 @@ def window_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def window_first_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first_value/last_value with explicit frames — frame-end semantics (current row vs unbounded following) made explicit."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -249,7 +245,7 @@ def window_percent_rank_by_custkey(spark: SparkSession, sf_dir: str) -> DataFram
     within one task, so the full fact table flows through without a
     single-partition bottleneck (the global variant above is the
     pre-filtered special case)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_totalprice", "o_orderkey")
     return orders.select(
         "o_custkey",
@@ -277,7 +273,7 @@ def window_ntile_acctbal_quartiles(
     (acctbal, custkey) ordering so bucket boundaries are deterministic
     cross-engine; each segment partition sorts independently after one
     hash shuffle."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return c.select(
         "c_custkey", "c_mktsegment", F.ntile(4).over(w).alias("quartile")
@@ -320,7 +316,7 @@ def window_gaps_islands_user_activity(
     it runs identically in plain batch SQL. Gap compare is in exact
     epoch-microseconds, matching the oracle's interval arithmetic;
     islands under 3 events are dropped to keep the report dense."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     brk = F.when(us - F.lag(us).over(w) > 21_600_000_000, 1).otherwise(0)
@@ -383,7 +379,7 @@ def window_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
     range join, no per-row state. Only days with actual activity are
     kept (semi-join against the observed day set).
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     triples = e.select(
         "event_type",
         F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day_idx"),
@@ -441,8 +437,8 @@ def window_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     fences pattern in operators/quality.py) when a segment outgrows a
     task; quartile LABELS then tolerate the sketch's rank error.
     """
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     rfm = (
         o.join(
             maybe_broadcast(

@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import money_sum
-from ..operators.registry import pending_query, query
+from ..operators.registry import query
 
 _SINK_SEQ = count()
 
@@ -2946,7 +2946,7 @@ _QUOTA_ORACLE = f"""
     """
 
 
-@pending_query("stream_source_quota_rollover", oracle=_QUOTA_ORACLE)
+@query("stream_source_quota_rollover", oracle=_QUOTA_ORACLE)
 def stream_source_quota_rollover(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

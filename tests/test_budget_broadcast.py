@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from catme_etl_spark.operators import _shared
 from catme_etl_spark.operators._shared import _table_bytes, maybe_broadcast
 from catme_etl_spark.plans.explain import plan_str
 
@@ -42,8 +43,8 @@ def test_table_bytes_probe_is_positive_and_cheap(spark):
     assert _table_bytes(SF, "lineitem") > _table_bytes(SF, "region")
 
 
-def _q14_plan_and_rows(spark, monkeypatch, budget: str):
-    monkeypatch.setenv("CATME_BROADCAST_BUDGET_BYTES", budget)
+def _q14_plan_and_rows(spark, monkeypatch, budget: int):
+    monkeypatch.setattr(_shared, "BROADCAST_BUDGET_DEFAULT", budget)
     from catme_etl_spark.operators.tpch import tpch_q14_promo_revenue
 
     df = tpch_q14_promo_revenue(spark, SF)
@@ -57,8 +58,8 @@ def test_q14_degrades_to_shuffle_join_over_budget(spark, monkeypatch):
     result, while the default budget must still broadcast."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan_hi, rows_hi = _q14_plan_and_rows(spark, monkeypatch, str(1 << 30))
-        plan_lo, rows_lo = _q14_plan_and_rows(spark, monkeypatch, "0")
+        plan_hi, rows_hi = _q14_plan_and_rows(spark, monkeypatch, 1 << 30)
+        plan_lo, rows_lo = _q14_plan_and_rows(spark, monkeypatch, 0)
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert "BroadcastHashJoin" in plan_hi
@@ -73,13 +74,13 @@ def test_rfm_and_hhi_gate_fall_back_without_error(spark, monkeypatch):
     from catme_etl_spark.operators.stats import agg_hhi_market_concentration
     from catme_etl_spark.operators.windows import window_rfm_segments
 
-    monkeypatch.setenv("CATME_BROADCAST_BUDGET_BYTES", str(1 << 30))
+    monkeypatch.setattr(_shared, "BROADCAST_BUDGET_DEFAULT", 1 << 30)
     base_hhi = agg_hhi_market_concentration(spark, SF).collect()
     base_rfm = sorted(
         window_rfm_segments(spark, SF).collect(),
         key=lambda r: (r[0], r[1]),
     )
-    monkeypatch.setenv("CATME_BROADCAST_BUDGET_BYTES", "0")
+    monkeypatch.setattr(_shared, "BROADCAST_BUDGET_DEFAULT", 0)
     assert agg_hhi_market_concentration(spark, SF).collect() == base_hhi
     assert (
         sorted(

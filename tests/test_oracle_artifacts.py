@@ -100,29 +100,3 @@ def test_no_rewrite_without_match():
     sql = "SELECT 1 AS x"
     assert _apply_prefix_artifacts(con, sql, done) == sql
     assert done == {}
-
-
-def test_bench_adopt_medians_stream_entries(tmp_path):
-    """tools/bench_adopt.py: stream_* entries become per-entry medians
-    across runs; batch entries keep the base reading; totals recompute."""
-    import json
-
-    from tools.bench_adopt import merge
-
-    def rec(s1, s2, batch):
-        return {
-            "value": s1 + s2 + batch,
-            "queries": {"stream_a": s1, "stream_b": s2, "agg_x": batch},
-            "queries_normalized": {
-                "stream_a": s1, "stream_b": s2, "agg_x": batch,
-            },
-        }
-
-    base = rec(9.0, 4.0, 2.0)
-    out = merge(base, [rec(5.0, 4.2, 2.1), rec(5.5, 3.8, 1.9)])
-    assert out["queries"]["stream_a"] == 5.5   # median of 9.0/5.0/5.5
-    assert out["queries"]["stream_b"] == 4.0
-    assert out["queries"]["agg_x"] == 2.0      # batch: base reading kept
-    assert out["value"] == 11.5
-    assert out["medianed_entries"] == ["stream_a", "stream_b"]
-    assert "median" in out["protocol"]

@@ -1,4 +1,4 @@
-"""SWEEP_ORDER ↔ registry sync, and the pending-query queue.
+"""SWEEP_ORDER ↔ registry sync, and the debut queues that went live.
 
 Round-2 ADVICE: new queries were registered but never added to the
 list, so the budgeted correctness sweep never ran them — the first
@@ -23,44 +23,6 @@ def test_sweep_order_matches_registry_exactly():
     assert listed - registered == set(), (
         f"in SWEEP_ORDER but not registered: {sorted(listed - registered)}"
     )
-
-
-def test_pending_queue_discipline():
-    """Window-budget deferrals (registry.pending_query) must stay
-    invisible to the driver — absent from SWEEP_ORDER — while every
-    queued name keeps a runnable callable AND an oracle, so the next
-    round's flip to @query is a one-line change with certification
-    evidence already staged."""
-    import __spark_entry__  # noqa: F401 — registers every query
-
-    from catme_etl_spark.operators.ordering import SWEEP_ORDER
-    from catme_etl_spark.operators.registry import (
-        ORACLE,
-        PENDING,
-        PENDING_ORACLE,
-        QUERIES,
-    )
-
-    assert set(PENDING) & set(QUERIES) == set()
-    assert set(PENDING) & set(SWEEP_ORDER) == set()
-    assert set(PENDING_ORACLE) == set(PENDING), (
-        "every deferred query must carry its oracle into the queue"
-    )
-    assert set(PENDING_ORACLE) & set(ORACLE) == set()
-    for name, fn in PENDING.items():
-        assert callable(fn), name
-    # round 14 flipped the 12-op round-13 queue live as its first act
-    # (evidence: PENDING_CHECK_r13.txt, tests/test_round14_pending.py)
-    # — the 8th consecutive clean flip. The staged round-15 debut
-    # queue, pinned by name:
-    assert set(PENDING) == {
-        "agg_spearman_corr",
-        "text_bpe_merge_candidates",
-        "sim_graph_pagerank_iter",
-        "dedup_repeated_span_audit",
-        "sample_curriculum_schedule",
-        "stream_source_quota_rollover",
-    }
 
 
 ROUND7_DEBUT_QUEUE = [
@@ -181,6 +143,15 @@ ROUND13_DEBUT_QUEUE = [
     "ts_forecast_backtest_hw",
 ]
 
+ROUND14_DEBUT_QUEUE = [
+    "agg_spearman_corr",
+    "text_bpe_merge_candidates",
+    "sim_graph_pagerank_iter",
+    "dedup_repeated_span_audit",
+    "sample_curriculum_schedule",
+    "stream_source_quota_rollover",
+]
+
 
 def test_debut_queues_flipped_live():
     """Round-N+1 item #1 each round: operators deferred by a round's
@@ -193,13 +164,16 @@ def test_debut_queues_flipped_live():
     round 13's 12 in round 14 (all green in CORRECTNESS_r14, checked
     below against the committed driver record — the round-14 window
     requirement is thereby discharged, so round-15's emit is free to
-    spend its slots on the r14 optimization blast radius)."""
+    spend its slots on the r14 optimization blast radius). Round 14's
+    six were registered with @query once the round-based certification
+    and its deferral decorator were retired (oracle evidence:
+    PENDING_CHECK_r14.txt)."""
     import json
     import os
 
     import __spark_entry__  # noqa: F401 — registers every query
 
-    from catme_etl_spark.operators.registry import ORACLE, PENDING, QUERIES
+    from catme_etl_spark.operators.registry import ORACLE, QUERIES
 
     for name in (
         ROUND7_DEBUT_QUEUE
@@ -209,10 +183,10 @@ def test_debut_queues_flipped_live():
         + ROUND11_DEBUT_QUEUE
         + ROUND12_DEBUT_QUEUE
         + ROUND13_DEBUT_QUEUE
+        + ROUND14_DEBUT_QUEUE
     ):
         assert name in QUERIES, f"{name} missing from live registry"
         assert name in ORACLE, f"{name} lost its oracle in the flip"
-        assert name not in PENDING, f"{name} still queued"
     record = os.path.join(
         os.path.dirname(__file__), "..", "CORRECTNESS_r14.json"
     )
@@ -222,55 +196,3 @@ def test_debut_queues_flipped_live():
         row = certified.get(name)
         assert row is not None, f"{name} missing from CORRECTNESS_r14"
         assert row["hash_match"], f"{name} not green in CORRECTNESS_r14"
-
-
-def test_flip_tool_finds_every_pending_site():
-    """The round-8 flip tool's source scan must agree with the live
-    PENDING registry — a pending registration the rewriter can't see
-    (formatting drift, a new module outside its globs) would survive
-    the flip and silently miss its debut window."""
-    import __spark_entry__  # noqa: F401 — registers every query
-
-    import tools.flip_pending as flip
-    from catme_etl_spark.operators.registry import PENDING
-
-    found = {n for names in flip.flip_sites().values() for n in names}
-    assert found == set(PENDING)
-
-
-def test_flip_tool_rewrites_every_discovered_form(tmp_path):
-    """The rewriter must flip EVERY decoration form the discovery scan
-    counts — round-10 ADVICE: a site spelled '@pending_query( "x")'
-    (spaces before the quote) was counted but survived the two exact
-    string replacements, reported flipped while staying pending. The
-    rewrite now uses the discovery pattern itself plus a post-replace
-    assert; this pins all three spellings."""
-    import re
-
-    import tools.flip_pending as flip
-
-    src = (
-        '@pending_query("inline_form", oracle="SELECT 1")\n'
-        "def a():\n    pass\n\n"
-        "@pending_query(\n"
-        '    "nextline_form",\n'
-        '    oracle="SELECT 2",\n'
-        ")\n"
-        "def b():\n    pass\n\n"
-        '@pending_query(   "spaced_form", oracle="SELECT 3")\n'
-        "def c():\n    pass\n"
-    )
-    pat = re.compile(r'@pending_query\(\s*"([a-zA-Z0-9_]+)"')
-    assert pat.findall(src) == [
-        "inline_form",
-        "nextline_form",
-        "spaced_form",
-    ]
-    site_pat = re.compile(r"@pending_query\((\s*)(?=\")")
-    out = src.replace("@pending_query(\n", "@query(\n")
-    out = site_pat.sub(lambda m: "@query(" + m.group(1), out)
-    assert not re.search(r'@pending_query\(\s*"', out)
-    assert out.count("@query(") == 3
-    # main()'s rewrite is this exact sequence — keep them in sync
-    body = open(flip.__file__).read()
-    assert '@pending_query\\((\\s*)(?=\\")' in body

@@ -1,7 +1,7 @@
-"""Crafted-table tests for the round-10 debut queue (held in
-registry.pending_query; see tests/test_ordering.py for the flip
-discipline). Each op is runnable and oracle-carrying; these pin the
-closed-form/boundary semantics the fixtures never exercise."""
+"""Crafted-table tests for the round-10 debut queue (live since its
+flip; see tests/test_ordering.py). Each op is runnable and
+oracle-carrying; these pin the closed-form/boundary semantics the
+fixtures never exercise."""
 
 from __future__ import annotations
 
@@ -13,9 +13,7 @@ import __spark_entry__ as entry
 
 
 def _oracle(con, name):
-    from catme_etl_spark.operators.registry import PENDING_ORACLE
-
-    sql = entry.oracle_sql().get(name) or PENDING_ORACLE[name]
+    sql = entry.oracle_sql()[name]
     return sorted(tuple(r) for r in con.execute(sql).fetchall())
 
 

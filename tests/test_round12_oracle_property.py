@@ -16,9 +16,9 @@ import __spark_entry__ as entry  # noqa: F401 — populates the registries
 
 
 def _oracle_rows(name: str, **frames) -> list[tuple]:
-    from catme_etl_spark.operators.registry import ORACLE, PENDING_ORACLE
+    from catme_etl_spark.operators.registry import ORACLE
 
-    sql = ORACLE.get(name) or PENDING_ORACLE[name]
+    sql = ORACLE[name]
     con = duckdb.connect()
     for t, df in frames.items():
         con.register(t, df)

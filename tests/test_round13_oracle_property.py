@@ -14,15 +14,19 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 import __spark_entry__ as entry  # noqa: F401 — populates the registries
+from tools.check_oracle import _apply_prefix_artifacts
 
 
 def _oracle_rows(name: str, **frames) -> list[tuple]:
-    from catme_etl_spark.operators.registry import ORACLE, PENDING_ORACLE
+    from catme_etl_spark.operators.registry import ORACLE
 
-    sql = ORACLE.get(name) or PENDING_ORACLE[name]
     con = duckdb.connect()
     for t, df in frames.items():
         con.register(t, df)
+    # Registered WITH-prefixes run as temp tables, as in
+    # tools/check_oracle.py; DuckDB otherwise re-plans every inlined
+    # reference to the shared release CTEs on each example.
+    sql = _apply_prefix_artifacts(con, ORACLE[name], {})
     return sorted(tuple(r) for r in con.execute(sql).fetchall())
 
 

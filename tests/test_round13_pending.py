@@ -1,7 +1,7 @@
-"""Crafted-table tests for the round-13 debut queue (held in
-registry.pending_query; see tests/test_ordering.py for the flip
-discipline). Each op is runnable and oracle-carrying; these pin the
-closed-form/boundary semantics the fixtures never exercise."""
+"""Crafted-table tests for the round-13 debut queue (live since its
+flip; see tests/test_ordering.py). Each op is runnable and
+oracle-carrying; these pin the closed-form/boundary semantics the
+fixtures never exercise."""
 
 from __future__ import annotations
 
@@ -11,12 +11,13 @@ import math
 import duckdb
 
 import __spark_entry__ as entry
+from tools.check_oracle import _apply_prefix_artifacts
 
 
 def _oracle(con, name):
-    from catme_etl_spark.operators.registry import ORACLE, PENDING_ORACLE
-
-    sql = entry.oracle_sql().get(name) or PENDING_ORACLE.get(name) or ORACLE[name]
+    # Registered WITH-prefixes run as temp tables, as in
+    # tools/check_oracle.py; the rewrite keeps the oracle's result.
+    sql = _apply_prefix_artifacts(con, entry.oracle_sql()[name], {})
     return sorted(tuple(r) for r in con.execute(sql).fetchall())
 
 

@@ -19,9 +19,9 @@ DAY_US = 86_400_000_000
 
 
 def _oracle_rows(name: str, **frames) -> list[tuple]:
-    from catme_etl_spark.operators.registry import ORACLE, PENDING_ORACLE
+    from catme_etl_spark.operators.registry import ORACLE
 
-    sql = ORACLE.get(name) or PENDING_ORACLE[name]
+    sql = ORACLE[name]
     con = duckdb.connect()
     for t, df in frames.items():
         con.register(t, df)

@@ -184,3 +184,30 @@ def test_bounded_collect_single_pass(spark):
 
     with _pytest.raises(ValueError, match="budget"):
         bounded_collect(df, max_rows=99, what="test side")
+
+
+def test_bounded_collect_first_wave_bounded_by_cores(spark):
+    """An over-budget input spread over many partitions must not run
+    them all in the first collect wave: the first job runs at most
+    ``defaultParallelism`` tasks, so the driver receives at most
+    cores x (max_rows + 1) rows before the guard raises."""
+    from catme_etl_spark.operators._shared import bounded_collect
+
+    sc = spark.sparkContext
+    parts = max(64, 4 * sc.defaultParallelism)
+    df = spark.range(0, 10 * parts, 1, numPartitions=parts)  # 10 rows each
+    group = "bounded-collect-first-wave"
+    sc.setJobGroup(group, "bounded_collect first wave")
+    try:
+        with pytest.raises(ValueError, match="budget"):
+            bounded_collect(df, max_rows=5, what="test side")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    first = min(tracker.getJobIdsForGroup(group))
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks
+        for s in tracker.getJobInfo(first).stageIds
+    )
+    assert tasks <= sc.defaultParallelism

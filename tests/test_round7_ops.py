@@ -164,23 +164,25 @@ def test_profile_approx_counts_nulls_on_crafted_table(spark, tmp_path):
     assert spark_rows == sorted(tuple(r) for r in oracle)
 
 
-def test_profile_approx_plans_no_expand(spark, sf_dir):
+def test_profile_approx_plans_no_expand(spark, sf_dir, monkeypatch):
     """The point of the approx profiler: NO Expand node anywhere in
-    its plan (the exact profiler's 7-way COUNT(DISTINCT) expand is the
-    one super-constant data term the scaling ladder measured)."""
-    from catme_etl_spark.operators.quality import (
-        quality_table_profile,
-        quality_table_profile_approx,
-    )
+    its plan, in either regime. The exact profiler's fused form plans
+    the 7-way COUNT(DISTINCT) Expand (the documented cost of
+    exactness); its single-split form runs each COUNT(DISTINCT) as its
+    own leg, which plans none. Each regime is pinned by patching
+    ``_is_single_split`` (the sf0.001 lineitem arrives as one split)."""
+    from catme_etl_spark.operators import quality
 
-    approx_plan = quality_table_profile_approx(
-        spark, sf_dir
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" not in approx_plan
-    exact_plan = quality_table_profile(
-        spark, sf_dir
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" in exact_plan  # the documented cost of exactness
+    def plan(fn):
+        return fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+
+    for single_split in (False, True):
+        monkeypatch.setattr(
+            quality, "_is_single_split", lambda df, v=single_split: v
+        )
+        assert "Expand" not in plan(quality.quality_table_profile_approx)
+        exact_has_expand = "Expand" in plan(quality.quality_table_profile)
+        assert exact_has_expand is not single_split, single_split
 
 
 def test_drift_state_survives_kill_and_restart(spark, tmp_path):

@@ -22,11 +22,8 @@ def _bucket(doc_id: int) -> int:
 
 
 def _oracle(con, name):
-    """Oracle SQL for a live OR round-8-pending registration (the
-    round-7b batch is window-budget deferred; see registry.pending_query)."""
-    from catme_etl_spark.operators.registry import PENDING_ORACLE
-
-    sql = entry.oracle_sql().get(name) or PENDING_ORACLE[name]
+    """Rows of the registered oracle SQL for ``name``."""
+    sql = entry.oracle_sql()[name]
     return sorted(tuple(r) for r in con.execute(sql).fetchall())
 
 

@@ -18,9 +18,7 @@ import __spark_entry__ as entry
 
 
 def _oracle(con, name):
-    from catme_etl_spark.operators.registry import PENDING_ORACLE
-
-    sql = entry.oracle_sql().get(name) or PENDING_ORACLE[name]
+    sql = entry.oracle_sql()[name]
     return sorted(tuple(r) for r in con.execute(sql).fetchall())
 
 

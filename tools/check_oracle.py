@@ -2,8 +2,10 @@
 
 Runs every ``queries()[name]`` on Spark and the matching
 ``oracle_sql()[name]`` on DuckDB over the same parquet tables, then
-compares row count, column names/order-insensitive values. Use while
-iterating so CORRECTNESS_r{N}.json holds no surprises.
+compares row count, column names/order-insensitive values. Each line
+also prints the query's wall time (shared-artifact builds reported on
+their own ``art`` lines), so ``--only`` doubles as the per-query timer;
+the benchmark of record is ``perfbench/run.py``.
 
 Usage:
     python tools/check_oracle.py [--sf /root/testdata/sf0.01] [--only name1,name2]
@@ -134,12 +136,11 @@ def _apply_prefix_artifacts(con, sql: str, done: dict) -> str:
 
 def _arm_artifact_attribution():
     """Call-time wrappers over ``_shared.shared_df``/``shared_broadcast``
-    (the bench.py artifact-warm pattern — instrumentation lives HERE,
-    so the engine carries no timing hooks): each
-    cache-miss build is timed with nested-build self-time accounting,
-    and the sweep loop subtracts the artifact cost charged during a
-    query from that query's printed reading, reporting the build as its
-    own ``art`` line instead. Round-13 verdict "What's wrong" #1: sweep
+    (instrumentation lives HERE, so the engine carries no timing
+    hooks): each cache-miss build is timed with nested-build self-time
+    accounting, and the sweep loop subtracts the artifact cost charged
+    during a query from that query's printed reading, reporting the
+    build as its own ``art`` line instead. Round-13 verdict "What's wrong" #1: sweep
     transcripts charged 30-50s one-time builds to whichever family
     member ran first (pipeline_release_pin read 41.9s in
     FULL_SWEEP_r13 vs 8.6s warm), distorting the timing column every
@@ -204,13 +205,6 @@ def main() -> int:
         "ORACLE_CTE_PREFIXES) and run every oracle string verbatim, "
         "exactly as the driver does",
     )
-    ap.add_argument(
-        "--pending",
-        action="store_true",
-        help="check the registry.pending_query round-(N+1) debut queue "
-        "instead of the live registry — the pre-deferral evidence that "
-        "flipping a queued name to @query next round will certify",
-    )
     args = ap.parse_args()
 
     import __spark_entry__ as e
@@ -230,13 +224,8 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
         )
 
-    if args.pending:
-        from catme_etl_spark.operators.registry import PENDING, PENDING_ORACLE
-
-        qs, oracles = dict(PENDING), dict(PENDING_ORACLE)
-    else:
-        qs = e.queries()
-        oracles = e.oracle_sql()
+    qs = e.queries()
+    oracles = e.oracle_sql()
     names = list(qs) if not args.only else args.only.split(",")
 
     failures, rows_only = [], []

@@ -6,7 +6,7 @@ formatted plan. Batch queries are built (not executed) at the given SF;
 ``stream_*`` queries execute on build (availableNow → memory sink), so
 their captured plan is the materialized result's — flagged in a header
 line. Session-shared builders are cleared before every build so each
-plan carries its full lineage (same convention as bench.py warm-up).
+plan carries its full lineage (same convention as perfbench's cold reset).
 
 Usage:
     python tools/dump_plans.py --tag r14 --suffix before \

@@ -30,8 +30,8 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The queries whose data movement dominates the bench: worth measuring,
-# not just plan-counting. Order matches bench.py's HEADLINE grouping.
+# The queries whose data movement dominates the heavy workloads: worth
+# measuring, not just plan-counting.
 BYTES_QUERIES = [
     "flagship_revenue_by_nation",
     "q1_pricing_summary",
@@ -72,7 +72,7 @@ def measure_shuffle_bytes(spark, qs, sf_dir: str) -> list[tuple]:
     """Cold-run each BYTES_QUERIES entry through the noop sink and
     record the stage-metric delta (shuffle write/read bytes). Shared
     builders are cleared between queries so each delta is the full
-    cold pipeline — the same semantics as bench.py."""
+    cold pipeline."""
     from catme_etl_spark.operators._shared import clear_shared
 
     app_id = spark.sparkContext.applicationId
@@ -189,7 +189,7 @@ def main() -> None:
                 "\n## Measured shuffle bytes (cold, sf0.1)\n\n"
                 "Stage-metric deltas from the public monitoring REST API\n"
                 "around one cold noop-sink run per query (shared builders\n"
-                "cleared first — bench.py semantics). This is the actual\n"
+                "cleared first). This is the actual\n"
                 "data movement, including every builder stage; multiply by\n"
                 "1000× for the 100 TB mental model and compare against the\n"
                 "SCALING.md sizing table.\n\n"
