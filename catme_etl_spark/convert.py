@@ -5,7 +5,12 @@
 What the reference does imperatively — chunk planning, process-pool
 fan-out, per-chunk checkpoint/skip, merge — is Spark's scheduler's job
 (SURVEY §3.2): here the whole converter is read → 4-stage pipeline →
-JSON sink, one declarative plan. Crash recovery = re-run: the write is
+JSON sink. A cold conversion of a CSV without an explicit schema runs
+3 Spark jobs: the header, the inference pass over the whole file, and
+the write. A repeat conversion of the unchanged file in the same
+session runs 1, the write: ``read_csv`` memoizes the inferred schema
+per file identity. ``order_by`` adds the sort's sampling job and
+``array_parity`` its collect. Crash recovery = re-run: the write is
 idempotent-overwrite, which is the same at-least-once-with-idempotent-
 overwrite contract the reference's SQLite checkpoint provides
 (`unified_code.py:459-460`, SURVEY §2.8 note); incremental tailing of
@@ -14,7 +19,8 @@ a growing directory is the streaming module with a
 
 ``test_mode`` processes only the first ``3 * chunk_size`` rows
 (`unified_code.py:441-442`: stop after 3 chunks of 500) — as a
-``limit``, not a scheduler hack.
+``limit``, not a scheduler hack. The schema is still inferred over the
+whole file, so a test run's types equal the full run's.
 """
 
 from __future__ import annotations

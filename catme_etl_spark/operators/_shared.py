@@ -9,6 +9,10 @@ kernels. At 100 TB the equivalent is materializing the stage to
 storage between jobs; in one session the equivalent is a persisted
 DataFrame (or a broadcast) reused by every consumer.
 
+The schema memo (:func:`shared_schema`) is the same idea for file
+metadata: the schema Spark infers for a CSV file, kept per file
+identity so a repeat read of an unchanged file runs no inference job.
+
 Keys include the SparkContext application id, so a cache entry never
 outlives its session (pytest and the driver create fresh sessions).
 """
@@ -19,9 +23,15 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _BC_CACHE: dict[tuple[str, str, str], object] = {}
+_SCHEMA_CACHE: dict[tuple[str, tuple, str], StructType] = {}
+# Entry cap of the schema memo. An entry is one small StructType, but a
+# long-lived session that reads many distinct files must not grow it
+# without bound; past the cap the least recently used entry goes.
+SCHEMA_CACHE_MAX = 256
 # RDD ids persisted by a materialize=True entry's localCheckpoint.
 # DataFrame.unpersist() does NOT free localCheckpoint blocks (they
 # belong to the internal RDD, not the Dataset's cache entry), so
@@ -58,8 +68,9 @@ def _evict_stale(spark: SparkSession) -> None:
     for cache, release in (
         (_DF_CACHE, _release_df),
         (_BC_CACHE, lambda v, k: v.destroy()),
+        (_SCHEMA_CACHE, lambda v, k: None),
     ):
-        for key in [k for k in cache if k[2] != app_id]:
+        for key in [k for k in list(cache) if k[2] != app_id]:
             try:
                 release(cache.pop(key), key)
             except Exception:
@@ -77,17 +88,21 @@ def _release_df(df: DataFrame, key) -> None:
 
 def clear_shared() -> None:
     """Release every session-shared intermediate (persisted DataFrames
-    and broadcasts) regardless of owning session.
+    and broadcasts) and empty the schema memo, regardless of owning
+    session.
 
     For benchmarking: timing a query twice only measures the real cost
     twice if the second run cannot hit the session cache — perfbench
-    calls this after its warm-up so session artifacts start cold, and
-    ``tools/dump_plans.py`` / ``tools/plan_report.py`` call it before
-    each build so every plan and measurement carries full lineage.
+    calls this after its warm-up so session artifacts start cold (the
+    first timed read of each CSV file pays its schema inference again),
+    and ``tools/dump_plans.py`` / ``tools/plan_report.py`` call it
+    before each build so every plan and measurement carries full
+    lineage.
     """
     for cache, release in (
         (_DF_CACHE, _release_df),
         (_BC_CACHE, lambda v, k: v.destroy()),
+        (_SCHEMA_CACHE, lambda v, k: None),
     ):
         for key in list(cache):
             try:
@@ -408,3 +423,25 @@ def shared_broadcast(
     if key not in _BC_CACHE:
         _BC_CACHE[key] = spark.sparkContext.broadcast(build())
     return _BC_CACHE[key]
+
+
+def shared_schema(
+    name: str, ident: tuple, spark: SparkSession, infer: Callable[[], StructType]
+) -> StructType:
+    """``infer()``'s schema once per (name, ident, session).
+
+    ``ident`` must change whenever the inferred schema could: the
+    caller puts the source's identity and every reader option and
+    session conf that inference reads into it. A hit moves the entry
+    to the young end; past ``SCHEMA_CACHE_MAX`` entries the oldest are
+    dropped. Every step is a single dict operation or a snapshot, so
+    concurrent callers at worst infer twice."""
+    _evict_stale(spark)
+    key = (name, ident, spark.sparkContext.applicationId)
+    schema = _SCHEMA_CACHE.pop(key, None)
+    if schema is None:
+        schema = infer()
+    _SCHEMA_CACHE[key] = schema
+    for old in list(_SCHEMA_CACHE)[:-SCHEMA_CACHE_MAX]:
+        _SCHEMA_CACHE.pop(old, None)
+    return schema

@@ -10,7 +10,8 @@ Reference parity with Spark-first fixes:
   Excel sheet and re-scans the CSV prefix per chunk (O(N²) total I/O,
   SURVEY §4.2.1); Spark's split-based scan reads each byte once.
 - one explicit schema per source kills the per-chunk dtype re-inference
-  drift (`unified_code.py:311-313`, SURVEY §1.2/§4.2.3).
+  drift (`unified_code.py:311-313`, SURVEY §1.2/§4.2.3); an inferred
+  CSV schema is inferred once per file and session (``read_csv``).
 - chunking (`read_chunk`, `unified_code.py:193-202,232-242`) has no
   user-visible equivalent: partitions ARE the chunks.
 - format dispatch by extension (`unified_code.py:499-506`) → `read_auto`.
@@ -25,10 +26,13 @@ from __future__ import annotations
 
 import glob
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from ..operators._shared import shared_schema
 
 # reference supports only the first three (`unified_code.py:493-495`);
 # the rest are native Spark formats exposed through the same dispatch
@@ -47,6 +51,19 @@ def discover_input(input_dir: str) -> str:
     raise FileNotFoundError(f"no supported input files in {input_dir!r}")
 
 
+# Session confs that change what CSV inference returns (probed on
+# Spark 4.1.2, one flip each): the timestamp type that zone-less values
+# infer as; the LEGACY parser's narrower default timestamp pattern
+# (dates and "yyyy-MM-dd HH:mm:ss" values then infer as strings); and
+# case sensitivity, which decides whether a header "a,A" is de-duplicated
+# to "a1,A2". The session time zone and ANSI mode change nothing.
+_CSV_INFERENCE_CONFS = (
+    "spark.sql.timestampType",
+    "spark.sql.legacy.timeParserPolicy",
+    "spark.sql.caseSensitive",
+)
+
+
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -55,17 +72,54 @@ def read_csv(
     header: bool = True,
 ) -> DataFrame:
     """CSV scan (S6). Explicit ``schema`` recommended; ``inferSchema``
-    otherwise (single inference for the whole file — never per-chunk)."""
-    reader = (
-        spark.read.option("sep", sep)
-        .option("header", header)
-        .option("mode", "PERMISSIVE")
+    otherwise: one inference for the whole file, never per chunk
+    (a header job and a full-file pass).
+
+    The inferred schema of a local file is memoized for the session
+    (``operators._shared.shared_schema``), keyed by the file's real
+    path, device, inode, size, mtime and ctime, the reader options and
+    the session confs that inference reads (``_CSV_INFERENCE_CONFS``).
+    A repeat read of an unchanged file therefore runs no inference job;
+    any rewrite changes ctime, so it is re-inferred even at the same
+    size with its mtime restored. Directories, globs and non-local
+    URIs are inferred on every read."""
+
+    def reader():
+        return (
+            spark.read.option("sep", sep)
+            .option("header", header)
+            .option("mode", "PERMISSIVE")
+        )
+
+    if schema is None:
+        def infer() -> StructType:
+            return reader().option("inferSchema", True).csv(path).schema
+
+        ident = _csv_identity(spark, path, sep, header)
+        schema = infer() if ident is None else shared_schema(
+            "csv", ident, spark, infer
+        )
+    return reader().schema(schema).csv(path)
+
+
+def _csv_identity(
+    spark: SparkSession, path: str, sep: str, header: bool
+) -> tuple | None:
+    """Memo key part for :func:`read_csv`: the file's identity plus
+    everything inference reads, or None when ``path`` is not a regular
+    local file. Stat is taken BEFORE inference, so a rewrite during
+    inference leaves an entry that the next read's stat misses."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (
+        os.path.realpath(path), st.st_dev, st.st_ino, st.st_size,
+        st.st_mtime_ns, st.st_ctime_ns, sep, header,
+        *(spark.conf.get(k) for k in _CSV_INFERENCE_CONFS),
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
 
 
 def validate_csv(spark: SparkSession, path: str, sep: str = ",") -> bool:

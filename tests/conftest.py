@@ -22,3 +22,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF0001
+
+
+def job_ids(spark, group, action):
+    """Ids of the Spark jobs ``action()`` runs, via a job group; waits
+    for the listener bus so the status tracker has seen every job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))

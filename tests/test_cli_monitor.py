@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import glob
 import json
+
+from conftest import job_ids
 
 from catme_etl_spark.cli import main as cli_main
 from catme_etl_spark.monitor import check_resources, resource_snapshot, spark_job_snapshot
@@ -22,6 +25,38 @@ def test_cli_converts_csv(tmp_path, capsys, spark):
     arr = json.load(open(out + ".array.json"))
     assert [r["name"] for r in arr] == ["a", "b"]
     assert all(r["finalized"] for r in arr)
+
+
+def test_cli_test_then_full_infers_schema_once(tmp_path, capsys, spark):
+    """The default converter path (inferred schema): typed JSON values,
+    and the header and inference jobs run once across the test run and
+    the full run of the same file."""
+    src = tmp_path / "typed.csv"
+    src.write_text(
+        "id,day,qty,note\n1,2024-01-02,3,x\n2,2024-02-03,,y\n3,2024-03-04,5,\n"
+    )
+    out = str(tmp_path / "out")
+    ids = job_ids(spark, "cli-test-then-full", lambda: cli_main(
+        ["--input", str(src), "--output", out, "--test-then-full", "--order-by", "id"]
+    ))
+    tracker = spark.sparkContext.statusTracker()
+    csv_jobs = [
+        j for j in ids
+        if any(tracker.getStageInfo(s).name.startswith("csv at")
+               for s in tracker.getJobInfo(j).stageIds)
+    ]
+    assert len(csv_jobs) == 2  # header + inference, once for both runs
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert json.loads(lines[0])["phase"] == "test"
+    assert json.loads(lines[-1])["rows"] == 3
+    for path in (out + ".test", out):
+        (part,) = glob.glob(path + "/part-*")
+        rows = [json.loads(line) for line in open(part)]
+        assert [(r["id"], r["day"], r.get("qty"), r.get("note")) for r in rows] == [
+            (1, "2024-01-02", 3, "x"), (2, "2024-02-03", None, "y"),
+            (3, "2024-03-04", 5, None),
+        ]
+        assert "qty" not in rows[1] and "note" not in rows[2]  # NULLs omitted
 
 
 def test_monitor_snapshot_and_thresholds():

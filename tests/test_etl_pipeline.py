@@ -8,6 +8,7 @@ import json
 import os
 
 import pytest
+from conftest import job_ids
 from pyspark.sql import functions as F
 
 from catme_etl_spark.convert import convert
@@ -253,6 +254,104 @@ def test_convert_test_mode_limits_rows(spark, tmp_path):
     out = str(tmp_path / "out2")
     res = convert(spark, str(p), out, schema="id long", test_mode=True, chunk_size=500)
     assert res.rows == 1500  # 3 chunks × 500 (unified_code.py:441-442)
+
+
+# ---------------------------------------------------------------------------
+# Inferred CSV schema memo (one inference per unchanged file and session)
+# ---------------------------------------------------------------------------
+
+
+def _inferred(spark, path, sep=","):
+    """The schema a fresh (unmemoized) inference gives."""
+    return (
+        spark.read.option("sep", sep).option("header", True)
+        .option("mode", "PERMISSIVE").option("inferSchema", True)
+        .csv(path).schema
+    )
+
+
+def _part_bytes(out):
+    return [open(f, "rb").read() for f in sorted(glob.glob(os.path.join(out, "part-*")))]
+
+
+def test_repeat_convert_of_unchanged_csv_skips_inference(spark, tmp_path):
+    """A cold conversion of an inferred-schema CSV runs 3 jobs (header,
+    inference pass, write); a repeat of the unchanged file runs only the
+    write and produces the same bytes; clear_shared() makes it cold."""
+    from catme_etl_spark.operators._shared import clear_shared
+
+    p = tmp_path / "orders.csv"
+    p.write_text(
+        "id,amount,day,ts,flag,note,empty\n"
+        + "".join(
+            f'{i},{i * 1.5},2024-01-{i % 28 + 1:02d},2024-01-02 03:04:{i % 60:02d},'
+            f'{"true" if i % 2 else "false"},"a,{i}",\n'
+            for i in range(500)
+        )
+    )
+    outs = [str(tmp_path / f"out{i}") for i in range(3)]
+    counts = [
+        len(job_ids(spark, f"schema-memo-{i}", lambda o=o: convert(spark, str(p), o)))
+        for i, o in enumerate(outs[:2])
+    ]
+    assert counts == [3, 1]
+    assert _part_bytes(outs[0]) and _part_bytes(outs[1]) == _part_bytes(outs[0])
+    clear_shared()
+    assert len(job_ids(spark, "schema-memo-2", lambda: convert(spark, str(p), outs[2]))) == 3
+    assert _part_bytes(outs[2]) == _part_bytes(outs[0])
+
+
+def test_schema_memo_reinfers_same_size_rewrite_with_mtime_restored(spark, tmp_path):
+    p = tmp_path / "drift.csv"
+    p.write_text("id,v\n1,10\n2,20\n")
+    assert dict(read_csv(spark, str(p)).dtypes)["v"] == "int"
+    before = os.stat(p)
+    p.write_text("id,v\n1,1x\n2,20\n")  # same size, v now a string column
+    os.utime(p, ns=(before.st_atime_ns, before.st_mtime_ns))
+    assert os.stat(p).st_size == before.st_size
+    assert os.stat(p).st_mtime_ns == before.st_mtime_ns
+    df = read_csv(spark, str(p))
+    assert df.schema == _inferred(spark, str(p))
+    assert dict(df.dtypes)["v"] == "string"
+
+
+def test_schema_memo_keys_separator_and_inference_confs(spark, tmp_path):
+    from catme_etl_spark.operators import _shared
+
+    p = tmp_path / "semi.csv"
+    p.write_text("a;ts\n1;2024-01-02 03:04:05\n")
+    comma = read_csv(spark, str(p))
+    semi = read_csv(spark, str(p), sep=";")
+    assert comma.columns == ["a;ts"] and semi.columns == ["a", "ts"]
+    assert semi.schema == _inferred(spark, str(p), sep=";")
+    assert sum(str(p) in str(k) for k in _shared._SCHEMA_CACHE) == 2
+
+    key = "spark.sql.timestampType"
+    prev = spark.conf.get(key)
+    try:
+        for value in ("TIMESTAMP_NTZ", "TIMESTAMP_LTZ", "TIMESTAMP_NTZ"):
+            spark.conf.set(key, value)
+            got = read_csv(spark, str(p), sep=";").schema
+            assert got == _inferred(spark, str(p), sep=";")
+            assert dict((f.name, f.dataType.simpleString()) for f in got)["ts"] == (
+                "timestamp_ntz" if value == "TIMESTAMP_NTZ" else "timestamp"
+            )
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_schema_memo_size_stays_at_cap(spark):
+    from pyspark.sql.types import StructType
+
+    from catme_etl_spark.operators import _shared
+
+    _shared.clear_shared()
+    cap = _shared.SCHEMA_CACHE_MAX
+    for i in range(cap + 1):
+        _shared.shared_schema("cap-test", (i,), spark, StructType)
+    assert len(_shared._SCHEMA_CACHE) == cap
+    names = [k[1] for k in _shared._SCHEMA_CACHE]
+    assert (0,) not in names and (cap,) in names  # the oldest went
 
 
 # ---------------------------------------------------------------------------
