@@ -21,9 +21,18 @@ neighbor id) so both are DuckDB-oracle-checkable:
 Centroids here are a fixed stride of the data (``vec_id % STRIDE``) —
 deterministic for the oracle; production would k-means them (same
 plumbing, different centroid table).
+
+The audit and lifecycle family over the fitted int8 IVF-PQ index
+(recall audits, ingest, rebalance, delete/compaction, lifecycle report)
+and the flat PQ audits keep their query bodies and oracles here; the
+index itself — artifact, membership, ingest slice, and the
+probe / LUT / rank kernels they share with ``streaming/jobs.py`` —
+lives once in ``_ivf.py``.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,8 +40,35 @@ from pyspark.sql import functions as F
 from ..functions.texttools import hex_prefix_long, sql_hex_long
 from ..functions.vector import SQL_NORM, make_cosine_pandas_udf, sql_cosine
 from ..sources.tables import load_table
+from ._ivf import (
+    CENTROID_STRIDE,
+    CLUSTER_MEMBERS,
+    DELETE_MOD,
+    INGEST_REJECT_FACTOR,
+    INGEST_SCHEMA,
+    IVFPQ_CW_STRIDE,
+    NPROBE,
+    PQ_M,
+    PQ_SUB,
+    RANK_SCHEMA,
+    InvertedLists,
+    admit,
+    fan_out,
+    ingest_gen,
+    is_deleted,
+    is_ingest,
+    ivf_index,
+    l2_matrix,
+    members_table,
+    pq_adc,
+    pq_encode,
+    pq_luts,
+    probe,
+    quant_max_abs,
+    quantize,
+    rank_emit,
+)
 from ._shared import (
-    fan_out as _fan_out_unsized,
     require_bounded,
     shared_broadcast,
     shared_matrix_broadcast,
@@ -40,28 +76,6 @@ from ._shared import (
 from .registry import query
 
 TOP_K = 5
-NPROBE = 2
-CENTROID_STRIDE = 50
-
-# Scale-adaptive fan-out for this module's numeric-vector kernels
-# (guide §2: make partitioning derive from input size, not the core
-# count). Every fan_out here feeds an Arrow/numpy kernel whose
-# per-row cost is a fused BLAS pass — moderate — so a kilobyte-scale
-# vector slice should not pay 32 python-worker round-trips per stage
-# (~0.2 s of pure overhead at sf0.1, ×9 passes in the k-center loop).
-# 128 KiB of vectors per task ≈ 1.6k embedding rows; past ~4 MiB of
-# input the target hits the defaultParallelism clamp and the plan is
-# identical to the classic fan_out. Results are partition-independent
-# by construction (row-local kernels; per-partition winners reduce
-# under a global tie rule) — re-certified against the oracle for the
-# whole family.
-_EMB_BYTES_PER_TASK = 128 << 10
-
-
-def fan_out(df, spark, *keys):
-    return _fan_out_unsized(
-        df, spark, *keys, bytes_per_task=_EMB_BYTES_PER_TASK
-    )
 
 
 def _topk_against(bc, k: int, exclude_self: bool):
@@ -1104,11 +1118,11 @@ def _srp_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipeline_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SemDeDup NIGHTLY-INGEST composition — the embedding-tier
-    sibling of `pipeline_dedup_ingest`: a new batch of vectors
-    (``vec_id % 10 == 9``, the repo's ingest stand-in) is admitted
-    only if it survives semantic near-dup screening against the
-    corpus, by probing the PERSISTED SRP band index
-    (:func:`_srp_bands`) with the batch's band keys — the corpus is
+    sibling of `pipeline_dedup_ingest`: a new batch of vectors (the
+    ingest slice, `_ivf.is_ingest`) is admitted only if it survives
+    semantic near-dup screening against the corpus, by probing the
+    PERSISTED SRP band index (:func:`_srp_bands`) with the batch's
+    band keys — the corpus is
     never re-banded and never self-joins, so per-ingest cost is
     O(batch), independent of corpus size.
 
@@ -1124,7 +1138,7 @@ def pipeline_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same index — proven durable/equal in
     ``tests/test_round7_ops.py``)."""
     bands = _srp_bands(spark, sf_dir)
-    new = bands.filter(F.col("vec_id") % 10 == 9).select(
+    new = bands.filter(is_ingest(F.col("vec_id"))).select(
         F.col("vec_id").alias("vec_n"),
         F.col("b").alias("b_n"),
         F.col("bval").alias("bval_n"),
@@ -1159,14 +1173,14 @@ def pipeline_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.round("cos_raw", 6) >= 0.4)
         .select("vec_a", "vec_b")
     )
-    new_a = F.col("vec_a") % 10 == 9
-    new_b = F.col("vec_b") % 10 == 9
+    new_a = is_ingest(F.col("vec_a"))
+    new_b = is_ingest(F.col("vec_b"))
     rejected = dup.select(
         F.when(new_a & ~new_b, F.col("vec_a"))
         .otherwise(F.col("vec_b"))
         .alias("vec_id")
     ).distinct()
-    batch = emb.filter(F.col("vec_id") % 10 == 9)
+    batch = emb.filter(is_ingest(F.col("vec_id")))
     return batch.join(rejected, "vec_id", "left_anti").select(
         "vec_id",
         "label",
@@ -1345,32 +1359,6 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quant_max_abs(bmat):
-    """Shared guard for the int8/PQ quantization kernels: the symmetric
-    scale 127/max|x| divides by the corpus absmax, so an EMPTY corpus
-    matrix (``.max()`` raises on numpy) or an ALL-ZERO one (division by
-    zero → NaN codes → garbage top-k) must fail loudly — the same
-    degenerate-input discipline the stats operators apply. Returns the
-    strictly-positive absmax."""
-    import numpy as np
-
-    if bmat.size == 0:
-        raise ValueError(
-            "int8/PQ quantization: empty embedding corpus — nothing to "
-            "derive the symmetric scale from (check the embeddings table "
-            "and any upstream filters)"
-        )
-    max_abs = float(np.abs(bmat).max())
-    if max_abs == 0.0:
-        raise ValueError(
-            "int8/PQ quantization: all-zero embedding corpus — the "
-            "symmetric scale 127/max|x| is undefined; quantizing a "
-            "degenerate corpus would rank garbage (clean the embeddings "
-            "instead)"
-        )
-    return max_abs
-
-
 def _int8_topk_against(bc, k: int):
     """mapInPandas generator: int8 symmetric scalar quantization of
     both sides against the shared broadcast matrix, EXACT int64 dot
@@ -1380,21 +1368,16 @@ def _int8_topk_against(bc, k: int):
     import numpy as np
     import pandas as pd
 
-    def quant(M, max_abs):
-        return np.clip(
-            np.floor(M * 127.0 / max_abs + 0.5), -127, 127
-        ).astype(np.int64)
-
     def gen(batches):
         bids, bmat, _ = bc.value
-        max_abs = _quant_max_abs(bmat)
-        Q = quant(bmat, max_abs)
+        max_abs = quant_max_abs(bmat)
+        Q = quantize(bmat, max_abs)
         for pdf in batches:
             if not len(pdf):
                 continue
             A = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             ia = pdf["vec_id"].to_numpy()
-            qa = quant(A, max_abs)
+            qa = quantize(A, max_abs)
             dot = qa @ Q.T
             self_mask = ia[:, None] == bids[None, :]
             dotm = np.where(self_mask, np.int64(-(1 << 62)), dot)
@@ -1522,13 +1505,11 @@ def sim_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M subspaces of the 64-dim embedding; codebook = the int8-quantized
 # sub-vectors of every PQ_STRIDE-th vector (the same deterministic
 # stride-codebook device as the IVF coarse tier, but a finer stride) —
-# ~50 codewords per subspace at sf0.01.
-PQ_M = 16
-PQ_SUB = 4  # dims per subspace (PQ_M * PQ_SUB = embedding dim)
+# ~50 codewords per subspace at sf0.01 (PQ_M x PQ_SUB live in _ivf.py).
 PQ_STRIDE = 10  # finer than the IVF tier's CENTROID_STRIDE (~50 codewords/subspace at sf0.01)
 
 # int8 symmetric quantization of the whole corpus, as DuckDB SQL
-# (identical arithmetic to _int8_topk_against's quant()).
+# (identical arithmetic to _ivf.quantize).
 _SQL_INT8_CORPUS = """
     mx AS (
       SELECT MAX(list_max(list_transform(embedding,
@@ -1553,99 +1534,40 @@ def _pq_kernels(bc, k: int, stride: int):
     every corpus vector as PQ_M codeword ids over the stride-centroid
     codebook and ranks by the ADC lookup-table distance. Everything
     after the shared int8 step is integer arithmetic — bit-exact
-    cross-engine, so the recall is an oracle-checked VALUE."""
+    cross-engine, so the recall is an oracle-checked VALUE. Both emit
+    ``RANK_SCHEMA`` rows."""
     import numpy as np
-    import pandas as pd
 
     def corpus():
         bids, bmat, _ = bc.value
         order = np.argsort(bids, kind="stable")
-        ids = bids[order]
-        max_abs = _quant_max_abs(bmat)
-        Q = np.clip(
-            np.floor(bmat[order] * 127.0 / max_abs + 0.5), -127, 127
-        ).astype(np.int64)
-        return ids, Q
+        max_abs = quant_max_abs(bmat)
+        return bids[order], quantize(bmat[order], max_abs), max_abs
 
-    def quant_batch(pdf, max_abs):
-        A = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        return np.clip(
-            np.floor(A * 127.0 / max_abs + 0.5), -127, 127
-        ).astype(np.int64)
-
-    def emit(ia, ids, score, k, asc=True):
-        # rank by (score asc, id asc); self already masked to +inf-ish
-        s = score if asc else -score
-        order = np.lexsort((np.broadcast_to(ids, s.shape), s), axis=1)
-        top = order[:, :k]
-        n, kk = top.shape
-        rows_idx = np.repeat(np.arange(n), kk)
-        return pd.DataFrame(
-            {
-                "query_id": ia[rows_idx],
-                "rank": np.tile(np.arange(1, kk + 1), n),
-                "neighbor_id": ids[top].ravel(),
-            }
-        )
-
-    BIG = np.int64(1 << 62)
+    def quantized(batches, max_abs):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            A = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+            yield pdf["vec_id"].to_numpy(), quantize(A, max_abs)
 
     def exact_gen(batches):
-        bids, bmat, _ = bc.value
-        max_abs = _quant_max_abs(bmat)
-        ids, Q = corpus()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            qa = quant_batch(pdf, max_abs)
-            ia = pdf["vec_id"].to_numpy()
-            # ||a-b||^2 pairwise, exact int64
-            d2 = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (Q * Q).sum(axis=1)[None, :]
-                - 2 * (qa @ Q.T)
-            )
-            d2 = np.where(ia[:, None] == ids[None, :], BIG, d2)
-            yield emit(ia, ids, d2, k)
+        ids, Q, max_abs = corpus()
+        members = InvertedLists(ids)
+        for ia, qa in quantized(batches, max_abs):
+            yield rank_emit("exact", ia, l2_matrix(qa, Q), members, k)
 
     def pq_gen(batches):
-        bids, bmat, _ = bc.value
-        max_abs = _quant_max_abs(bmat)
-        ids, Q = corpus()
-        cmask = ids % stride == 0
-        C = Q[cmask]  # (n_cent, dim), rows sorted by centroid id asc
-        # encode the corpus: per subspace, nearest codeword (tie → first
-        # = smallest centroid id, matching the oracle's ORDER BY d, cid).
-        # Distances use the int64 matmul identity q² + c² − 2q·c —
-        # EXACT integer algebra, bit-identical to the subtract-square
-        # broadcast it replaces, at a fraction of the temporary memory.
-        codes = np.empty((len(ids), PQ_M), dtype=np.int64)
-        for m in range(PQ_M):
-            lo, hi = m * PQ_SUB, (m + 1) * PQ_SUB
-            Qm, Cm = Q[:, lo:hi], C[:, lo:hi]
-            dm = (
-                (Qm * Qm).sum(axis=1)[:, None]
-                + (Cm * Cm).sum(axis=1)[None, :]
-                - 2 * (Qm @ Cm.T)
-            )
-            codes[:, m] = dm.argmin(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            qa = quant_batch(pdf, max_abs)
-            ia = pdf["vec_id"].to_numpy()
-            adc = np.zeros((len(ia), len(ids)), dtype=np.int64)
-            for m in range(PQ_M):
-                lo, hi = m * PQ_SUB, (m + 1) * PQ_SUB
-                qm, Cm = qa[:, lo:hi], C[:, lo:hi]
-                lut = (
-                    (qm * qm).sum(axis=1)[:, None]
-                    + (Cm * Cm).sum(axis=1)[None, :]
-                    - 2 * (qm @ Cm.T)
-                )  # (n, n_cent), exact int64
-                adc += lut[:, codes[:, m]]
-            adc = np.where(ia[:, None] == ids[None, :], BIG, adc)
-            yield emit(ia, ids, adc, k)
+        ids, Q, max_abs = corpus()
+        members = InvertedLists(ids)
+        # codebook rows sorted by centroid id asc: encode ties go to the
+        # smallest centroid id, matching the oracle's ORDER BY d, cid
+        C = Q[ids % stride == 0]
+        codes = pq_encode(Q, C)
+        for ia, qa in quantized(batches, max_abs):
+            luts = pq_luts(qa, C)
+            adc = sum(lut[:, codes[:, m]] for m, lut in enumerate(luts))
+            yield rank_emit("pq", ia, adc, members, k)
 
     return pq_gen, exact_gen
 
@@ -1686,11 +1608,9 @@ def _pq_train_codebooks(Q, ids, stride):
         # O(n·k·d) broadcast temporary was the training-time hot spot;
         # BLAS keeps it cache-blocked. Argmin ties still resolve to the
         # lowest codeword id (np.argmin is first-of-ties).
-        x2 = (X * X).sum(axis=1)
         k = len(C)
         for _ in range(PQ_KMEANS_ITERS):
-            d = x2[:, None] + (C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
-            a = d.argmin(axis=1)
+            a = l2_matrix(X, C).argmin(axis=1)
             cnt = np.bincount(a, minlength=k).astype(np.float64)
             nz = cnt > 0
             sums = np.stack(
@@ -1721,12 +1641,10 @@ def _pq_fit_trained(bc):
     import numpy as np
 
     bids, bmat, _ = bc.value
-    max_abs = _quant_max_abs(bmat)
+    max_abs = quant_max_abs(bmat)
     order = np.argsort(bids, kind="stable")
     ids = bids[order]
-    Q = np.clip(
-        np.floor(bmat[order] * 127.0 / max_abs + 0.5), -127, 127
-    ).astype(np.int64)
+    Q = quantize(bmat[order], max_abs)
     books = _pq_train_codebooks(Q, ids, PQ_STRIDE)
     codes = np.empty((len(ids), PQ_M), dtype=np.int64)
     for m in range(PQ_M):
@@ -1745,18 +1663,15 @@ def _pq_trained_kernel(trained_bc, k: int):
     :func:`_pq_fit_trained`) — tasks only quantize their query batch
     and run the integer ADC lookup, never retrain."""
     import numpy as np
-    import pandas as pd
 
     def gen(batches):
         ids, max_abs, books, codes = trained_bc.value
-        BIG = np.float64(1e30)
+        members = InvertedLists(ids)
         for pdf in batches:
             if not len(pdf):
                 continue
             A = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            qa = np.clip(
-                np.floor(A * 127.0 / max_abs + 0.5), -127, 127
-            ).astype(np.int64)
+            qa = quantize(A, max_abs)
             ia = pdf["vec_id"].to_numpy()
             adc = np.zeros((len(ia), len(ids)), dtype=np.float64)
             for m in range(PQ_M):
@@ -1764,18 +1679,7 @@ def _pq_trained_kernel(trained_bc, k: int):
                 lut = ((qa[:, None, lo:hi].astype(np.float64)
                         - books[m][None, :, :]) ** 2).sum(axis=2)
                 adc += lut[:, codes[:, m]]
-            adc = np.where(ia[:, None] == ids[None, :], BIG, adc)
-            srt = np.lexsort((np.broadcast_to(ids, adc.shape), adc), axis=1)
-            top = srt[:, :k]
-            n, kk = top.shape
-            rows_idx = np.repeat(np.arange(n), kk)
-            yield pd.DataFrame(
-                {
-                    "query_id": ia[rows_idx],
-                    "rank": np.tile(np.arange(1, kk + 1), n),
-                    "neighbor_id": ids[top].ravel(),
-                }
-            )
+            yield rank_emit("trained", ia, adc, members, k)
 
     return gen
 
@@ -1829,15 +1733,14 @@ def sim_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pq_gen, exact_gen = _pq_kernels(bc, TOP_K, PQ_STRIDE)
     trained_gen = _pq_trained_kernel(trained_bc, TOP_K)
-    schema = "query_id long, rank long, neighbor_id long"
-    exact = fan_out(emb, spark).mapInPandas(exact_gen, schema=schema).select(
-        "query_id", "neighbor_id"
-    )
-    stride = fan_out(emb, spark).mapInPandas(pq_gen, schema=schema).select(
-        "query_id", "neighbor_id"
-    )
+    exact = fan_out(emb, spark).mapInPandas(
+        exact_gen, schema=RANK_SCHEMA
+    ).select("query_id", "neighbor_id")
+    stride = fan_out(emb, spark).mapInPandas(
+        pq_gen, schema=RANK_SCHEMA
+    ).select("query_id", "neighbor_id")
     trained = fan_out(emb, spark).mapInPandas(
-        trained_gen, schema=schema
+        trained_gen, schema=RANK_SCHEMA
     ).select("query_id", "neighbor_id")
     t_hit = trained.join(exact, ["query_id", "neighbor_id"])
     s_hit = stride.join(exact, ["query_id", "neighbor_id"])
@@ -1872,6 +1775,16 @@ def sim_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is independent of `vec_id % PQ_STRIDE` residue, preserving the
 # no-self-quantizing-bias property the old co-prime modulus bought.
 PQ_PANEL_N = 256
+
+
+def _md5_panel(emb: DataFrame) -> DataFrame:
+    """The first PQ_PANEL_N rows in (md5(vec_id), vec_id) order."""
+    return (
+        emb.withColumn("_pk", F.md5(F.col("vec_id").cast("string")))
+        .orderBy("_pk", "vec_id")
+        .limit(PQ_PANEL_N)
+        .drop("_pk")
+    )
 
 
 @query(
@@ -1922,23 +1835,17 @@ def sim_pq_recall_sampled_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained_bc = shared_broadcast(
         "pq_trained_artifact", sf_dir, spark, lambda: _pq_fit_trained(bc)
     )
-    panel = (
-        emb.withColumn("_pk", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_pk", "vec_id")
-        .limit(PQ_PANEL_N)
-        .drop("_pk")
-    )
+    panel = _md5_panel(emb)
     pq_gen, exact_gen = _pq_kernels(bc, TOP_K, PQ_STRIDE)
     trained_gen = _pq_trained_kernel(trained_bc, TOP_K)
-    schema = "query_id long, rank long, neighbor_id long"
-    exact = fan_out(panel, spark).mapInPandas(exact_gen, schema=schema).select(
-        "query_id", "neighbor_id"
-    )
-    stride = fan_out(panel, spark).mapInPandas(pq_gen, schema=schema).select(
-        "query_id", "neighbor_id"
-    )
+    exact = fan_out(panel, spark).mapInPandas(
+        exact_gen, schema=RANK_SCHEMA
+    ).select("query_id", "neighbor_id")
+    stride = fan_out(panel, spark).mapInPandas(
+        pq_gen, schema=RANK_SCHEMA
+    ).select("query_id", "neighbor_id")
     trained = fan_out(panel, spark).mapInPandas(
-        trained_gen, schema=schema
+        trained_gen, schema=RANK_SCHEMA
     ).select("query_id", "neighbor_id")
     t_hit = trained.join(exact, ["query_id", "neighbor_id"])
     s_hit = stride.join(exact, ["query_id", "neighbor_id"])
@@ -2056,13 +1963,12 @@ def sim_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
     pq_gen, exact_gen = _pq_kernels(bc, TOP_K, PQ_STRIDE)
-    schema = "query_id long, rank long, neighbor_id long"
-    pqtop = fan_out(emb, spark).mapInPandas(pq_gen, schema=schema).select(
-        "query_id", "neighbor_id"
-    )
-    exact = fan_out(emb, spark).mapInPandas(exact_gen, schema=schema).select(
-        "query_id", "neighbor_id"
-    )
+    pqtop = fan_out(emb, spark).mapInPandas(
+        pq_gen, schema=RANK_SCHEMA
+    ).select("query_id", "neighbor_id")
+    exact = fan_out(emb, spark).mapInPandas(
+        exact_gen, schema=RANK_SCHEMA
+    ).select("query_id", "neighbor_id")
     hits = pqtop.join(exact, ["query_id", "neighbor_id"])
     return (
         exact.agg(
@@ -2893,7 +2799,6 @@ def sim_cosine_band_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stride 0.732/0.726/0.751 at sf0.001/0.01/0.1 — far above the
 # random-corpus tier, certifying that the PQ ladder genuinely exploits
 # structure when structure exists.
-CLUSTER_MEMBERS = 8
 _CLUSTERED_TRAINED_FLOOR = 0.65
 _CLUSTERED_STRIDE_MARGIN = 0.02
 
@@ -3011,23 +2916,17 @@ def sim_pq_trained_recall_clustered(
         spark,
         lambda: _pq_fit_trained(cl_bc),
     )
-    panel = (
-        emb.withColumn("_pk", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_pk", "vec_id")
-        .limit(PQ_PANEL_N)
-        .drop("_pk")
-    )
+    panel = _md5_panel(emb)
     pq_gen, exact_gen = _pq_kernels(cl_bc, TOP_K, PQ_STRIDE)
     trained_gen = _pq_trained_kernel(trained_bc, TOP_K)
-    schema = "query_id long, rank long, neighbor_id long"
     exact = fan_out(panel, spark).mapInPandas(
-        _swap_clustered_gen(exact_gen, cl_bc), schema=schema
+        _swap_clustered_gen(exact_gen, cl_bc), schema=RANK_SCHEMA
     ).select("query_id", "neighbor_id")
     stride = fan_out(panel, spark).mapInPandas(
-        _swap_clustered_gen(pq_gen, cl_bc), schema=schema
+        _swap_clustered_gen(pq_gen, cl_bc), schema=RANK_SCHEMA
     ).select("query_id", "neighbor_id")
     trained = fan_out(panel, spark).mapInPandas(
-        _swap_clustered_gen(trained_gen, cl_bc), schema=schema
+        _swap_clustered_gen(trained_gen, cl_bc), schema=RANK_SCHEMA
     ).select("query_id", "neighbor_id")
     t_hit = trained.join(exact, ["query_id", "neighbor_id"])
     s_hit = stride.join(exact, ["query_id", "neighbor_id"])
@@ -3194,35 +3093,23 @@ def sim_ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     one groupBy; queries are the fixed {PQ_PANEL_N}-vector md5-order
     panel, keeping the exact-truth side O(panel·corpus).
 
-    Scale shape (round-11 migration, same oracle/hash): the original
-    relational form assigned every corpus vector to its centroid via a
-    broadcast nested-loop of |corpus| x |corpus/{CENTROID_STRIDE}| —
-    correct but genuinely quadratic at 100x (the round-10 verdict's
-    one flagged scale-killer). Now it rides the round-8 "fit once,
-    broadcast the model" rule: the IVF assignment is fitted ONCE
-    driver-side as part of the SHARED `ivfpq_artifacts` broadcast
-    (one int64 matmul-identity kernel, amortized with
-    `sim_ivfpq_recall_clustered`), and the panel's scan tasks do only
+    Scale shape: the round-8 "fit once, broadcast the model" rule —
+    the IVF assignment is fitted ONCE driver-side as part of the
+    SHARED `ivfpq_artifacts` broadcast (one int64 matmul-identity
+    kernel, amortized with `sim_ivfpq_recall_clustered`) instead of a
+    relational |corpus| x |corpus/{CENTROID_STRIDE}| nested loop,
+    which is quadratic at 100x; the panel's scan tasks do only
     per-query work — probe selection, candidate gathers over
     ~{CLUSTER_MEMBERS}·{CENTROID_STRIDE}·{NPROBE} inverted-list rows,
     and the panel-bounded exact-truth row. All ranking arithmetic is
-    the same int64 (ties to lowest id via stable sorts), so the
-    recall still lands in the oracle hash bit-identically.
+    int64 with ties to the lowest id, so the recall lands in the
+    oracle hash bit-identically.
 
     Reference basis: none; contract F10/F14 ANN audit family."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
-    panel = (
-        emb.withColumn("_pk", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_pk", "vec_id")
-        .limit(PQ_PANEL_N)
-        .select("vec_id")
-    )
+    emb, art = ivf_index(spark, sf_dir)
+    panel = _md5_panel(emb).select("vec_id")
     rows = fan_out(panel, spark).mapInPandas(
-        _ivf_gen(art), schema="query_id long, neighbor_id long, tier string"
+        _ivf_gen(art), schema=RANK_SCHEMA
     )
     truth = rows.filter(F.col("tier") == "truth").select(
         "query_id", "neighbor_id"
@@ -3253,225 +3140,40 @@ def sim_ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_gen(art_bc):
-    """mapInPandas generator over panel-query batches — the lean
-    coarse-only sibling of `_ivfpq_gen` (no PQ LUT/ADC work): per
-    query, probe the NPROBE nearest coarse centroids, rank the probed
-    inverted lists' members by exact int64 L2 ('ivf'), and emit the
-    exact full-corpus truth ('truth') for the recall denominators.
-    Stable sorts keep every tie on the lowest id — byte-identical to
-    the oracle's `ORDER BY d, cid` / `ORDER BY d, neighbor_id`."""
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids, Q, assign, _codes, cids, C, _wids, _W = art_bc.value
-        BIG = np.int64(1 << 62)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ia = pdf["vec_id"].to_numpy()
-            pos = np.searchsorted(ids, ia)
-            qa = Q[pos]
-            dq = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (C * C).sum(axis=1)[None, :]
-                - 2 * (qa @ C.T)
-            )
-            # stable argsort: ties keep position order = ascending cid
-            probes = cids[np.argsort(dq, axis=1, kind="stable")[:, :NPROBE]]
-            dt = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (Q * Q).sum(axis=1)[None, :]
-                - 2 * (qa @ Q.T)
-            )
-            dt = np.where(ia[:, None] == ids[None, :], BIG, dt)
-            out_q, out_n, out_t = [], [], []
-
-            def take(q_id, nbr, tier):
-                out_q.extend([q_id] * len(nbr))
-                out_n.extend(int(v) for v in nbr)
-                out_t.extend([tier] * len(nbr))
-
-            for r in range(len(ia)):
-                cand = np.isin(assign, probes[r])
-                cand[pos[r]] = False
-                cidx = np.nonzero(cand)[0]
-                nbr = ids[cidx]
-                de = dt[r][cidx]
-                take(int(ia[r]), nbr[np.lexsort((nbr, de))[:TOP_K]], "ivf")
-                take(
-                    int(ia[r]),
-                    ids[np.lexsort((ids, dt[r]))[:TOP_K]],
-                    "truth",
-                )
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "tier": out_t}
-            )
-
-    return gen
-
-
-IVFPQ_CW_STRIDE = 100  # coarser PQ codebook than the flat-PQ tier's
-# {PQ_STRIDE}: the composed audit re-ranks only the probed inverted
-# lists, so the codebook can be 10x smaller and the oracle's encode
-# CTE stays tractable at sf0.1 (|corpus/100| codewords per subspace).
-
-
-def _clv_int8_corpus(bc):
-    """Numpy replica of the RELATIONAL cluster plant (`_CLV_SQL_CTES`):
-    56-bit md5-slice cluster assignment over nc = max(16, n/8)
-    clusters, centroid = the MIN-vec_id member (ids ascending, so the
-    first occurrence of each cluster), 0.75/0.25 IEEE double mix in
-    the same per-element op order, shared max-abs int8 quantization —
-    bit-identical to the `qc` CTE both engines certify, so every
-    int64 kernel downstream lands in the oracle hash. Distinct from
-    `_clustered_matrix` (the bounds-form plant: full-md5 assignment,
-    first-NC centroids), which is NOT SQL-reproducible."""
-    import hashlib
-
+def _query_rows(batches, ids, Q):
+    """(query ids, their int8 corpus rows) per non-empty batch."""
     import numpy as np
 
-    bids, bmat, _ = bc.value
-    order = np.argsort(bids, kind="stable")
-    ids = bids[order]
-    M = bmat[order]
-    nc = max(16, len(ids) // CLUSTER_MEMBERS)
-    cl = np.array(
-        [
-            int(hashlib.md5(str(int(i)).encode()).hexdigest()[:14], 16) % nc
-            for i in ids
-        ],
-        dtype=np.int64,
-    )
-    first: dict = {}
-    for pos, c in enumerate(cl):
-        if int(c) not in first:
-            first[int(c)] = pos
-    cent_idx = np.array([first[int(c)] for c in cl], dtype=np.int64)
-    M2 = 0.75 * M[cent_idx] + 0.25 * M
-    max_abs = _quant_max_abs(M2)
-    Q = np.clip(np.floor(M2 * 127.0 / max_abs + 0.5), -127, 127).astype(
-        np.int64
-    )
-    return ids, Q
+    for pdf in batches:
+        if len(pdf):
+            ia = pdf["vec_id"].to_numpy()
+            yield ia, Q[np.searchsorted(ids, ia)]
 
 
-def _ivfpq_artifacts(bc):
-    """Fit-once/broadcast-artifacts (the round-8 trained-PQ lesson):
-    the IVF assignment of every corpus vector and its PQ codes over
-    the stride codebook are pure functions of the corpus — computing
-    them once driver-side and shipping (ids, Q, assign, codes, cids,
-    C, wids, W) beats re-deriving them inside every scan task. All
-    int64 matmul-identity arithmetic (q² + c² − 2qc — exact for
-    int8-range values), argmin first-tie = lowest id because both the
-    centroid and codeword arrays are ascending-id slices."""
-    import numpy as np
-
-    ids, Q = _clv_int8_corpus(bc)
-    cmask = ids % CENTROID_STRIDE == 0
-    if not cmask.any():
-        raise ValueError(
-            "ivfpq audit: no stride centroids (no vec_id % "
-            f"{CENTROID_STRIDE} == 0) — corpus too small for the IVF tier"
-        )
-    cids, C = ids[cmask], Q[cmask]
-    d = (
-        (Q * Q).sum(axis=1)[:, None]
-        + (C * C).sum(axis=1)[None, :]
-        - 2 * (Q @ C.T)
-    )
-    assign = cids[d.argmin(axis=1)]
-    wmask = ids % IVFPQ_CW_STRIDE == 0
-    if not wmask.any():
-        raise ValueError(
-            "ivfpq audit: no PQ codewords (no vec_id % "
-            f"{IVFPQ_CW_STRIDE} == 0) — corpus too small for the PQ tier"
-        )
-    wids, W = ids[wmask], Q[wmask]
-    codes = np.empty((len(ids), PQ_M), dtype=np.int64)
-    for m in range(PQ_M):
-        lo, hi = m * PQ_SUB, (m + 1) * PQ_SUB
-        Qm, Wm = Q[:, lo:hi], W[:, lo:hi]
-        dm = (
-            (Qm * Qm).sum(axis=1)[:, None]
-            + (Wm * Wm).sum(axis=1)[None, :]
-            - 2 * (Qm @ Wm.T)
-        )
-        codes[:, m] = dm.argmin(axis=1)
-    return ids, Q, assign, codes, cids, C, wids, W
-
-
-def _ivfpq_gen(art_bc):
-    """mapInPandas generator over panel-query batches: per query,
-    probe the NPROBE nearest coarse centroids, gather their inverted
-    lists as candidates, rank candidates BOTH ways — exact int64 L2
-    ('ivf') and the PQ ADC lookup-table sum ('ivfpq') — and emit the
-    exact full-corpus truth ('truth') for the recall denominators."""
+def _ivf_gen(art_bc, pq: bool = False):
+    """mapInPandas generator over panel-query batches: per query, rank
+    the members of the NPROBE nearest inverted lists by exact int64 L2
+    ('ivf') and, with ``pq``, by the PQ ADC lookup-table sum ('ivfpq'),
+    and emit the exact full-corpus truth ('truth') for the recall
+    denominators — byte-identical to the oracle's `ORDER BY d, cid` /
+    `ORDER BY d, neighbor_id`."""
 
     def gen(batches):
-        import numpy as np
         import pandas as pd
 
-        ids, Q, assign, codes, cids, C, wids, W = art_bc.value
-        BIG = np.int64(1 << 62)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ia = pdf["vec_id"].to_numpy()
-            pos = np.searchsorted(ids, ia)
-            qa = Q[pos]
-            dq = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (C * C).sum(axis=1)[None, :]
-                - 2 * (qa @ C.T)
-            )
-            # stable argsort: ties keep position order = ascending cid
-            probes = cids[
-                np.argsort(dq, axis=1, kind="stable")[:, :NPROBE]
+        ids, Q, assign, codes, cids, C, _wids, W = art_bc.value
+        corpus = InvertedLists(ids, assign)
+        for ia, qa in _query_rows(batches, ids, Q):
+            d = l2_matrix(qa, Q)
+            probes = probe(qa, C, cids)
+            tiers = [
+                rank_emit("ivf", ia, d, corpus, TOP_K, probes),
+                rank_emit("truth", ia, d, corpus, TOP_K),
             ]
-            luts = []
-            for m in range(PQ_M):
-                lo, hi = m * PQ_SUB, (m + 1) * PQ_SUB
-                qm, Wm = qa[:, lo:hi], W[:, lo:hi]
-                luts.append(
-                    (qm * qm).sum(axis=1)[:, None]
-                    + (Wm * Wm).sum(axis=1)[None, :]
-                    - 2 * (qm @ Wm.T)
-                )
-            dt = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (Q * Q).sum(axis=1)[None, :]
-                - 2 * (qa @ Q.T)
-            )
-            dt = np.where(ia[:, None] == ids[None, :], BIG, dt)
-            out_q, out_n, out_t = [], [], []
-
-            def take(q_id, nbr, tier):
-                out_q.extend([q_id] * len(nbr))
-                out_n.extend(int(v) for v in nbr)
-                out_t.extend([tier] * len(nbr))
-
-            for r in range(len(ia)):
-                cand = np.isin(assign, probes[r])
-                cand[pos[r]] = False
-                cidx = np.nonzero(cand)[0]
-                nbr = ids[cidx]
-                adc = np.zeros(len(cidx), dtype=np.int64)
-                for m in range(PQ_M):
-                    adc += luts[m][r][codes[cidx, m]]
-                take(int(ia[r]), nbr[np.lexsort((nbr, adc))[:TOP_K]], "ivfpq")
-                de = dt[r][cidx]
-                take(int(ia[r]), nbr[np.lexsort((nbr, de))[:TOP_K]], "ivf")
-                take(
-                    int(ia[r]),
-                    ids[np.lexsort((ids, dt[r]))[:TOP_K]],
-                    "truth",
-                )
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "tier": out_t}
-            )
+            if pq:
+                adc = partial(pq_adc, pq_luts(qa, W), codes)
+                tiers.append(rank_emit("ivfpq", ia, adc, corpus, TOP_K, probes))
+            yield pd.concat(tiers)
 
     return gen
 
@@ -3645,19 +3347,10 @@ def sim_ivfpq_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: none; contract F10/F14 ANN audit family — the
     composition rung above `sim_ivf_recall_clustered` (coarse-only)
     and `sim_pq_adc_recall` (PQ-only, unpruned)."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
-    panel = (
-        emb.withColumn("_pk", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_pk", "vec_id")
-        .limit(PQ_PANEL_N)
-        .select("vec_id")
-    )
+    emb, art = ivf_index(spark, sf_dir)
+    panel = _md5_panel(emb).select("vec_id")
     rows = fan_out(panel, spark).mapInPandas(
-        _ivfpq_gen(art), schema="query_id long, neighbor_id long, tier string"
+        _ivf_gen(art, pq=True), schema=RANK_SCHEMA
     )
     truth = rows.filter(F.col("tier") == "truth").select(
         "query_id", "neighbor_id"
@@ -3697,103 +3390,7 @@ def sim_ivfpq_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-INGEST_REJECT_FACTOR = 4  # reject when min_adc is > 4x below the
-# query's own mean candidate ADC distance (cross-multiplied integer
-# form) — per-query adaptive, so the rule stays non-trivial at every
-# corpus density (a fixed distance threshold saturates as the corpus
-# grows denser; measured 4/50, 4/50, 23/200 rejections at the three
-# fixture SFs)
-
-
-def _ingest_gen(art_bc):
-    """mapInPandas generator over new-batch vectors: per vector, probe
-    the NPROBE nearest coarse centroids, ADC-score the probed
-    inverted lists' EXISTING members (vec_id % 10 != 9) via the PQ
-    codes, and emit the admission verdict row. Stable sorts keep
-    probe ties on the lowest cid — byte-identical to the oracle."""
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids, Q, assign, codes, cids, C, wids, W = art_bc.value
-        existing = ids % 10 != 9
-        # Once per task: existing member row-indices per inverted list.
-        # The old per-row `np.isin(assign, probes[r])` re-scanned the
-        # whole corpus assignment per new vector (O(batch × corpus) plus
-        # a Python loop of numpy-call overhead); gathering precomputed
-        # member lists and segment-reducing the flattened ADC stream is
-        # the same arithmetic over the same candidates (min/sum/len are
-        # order-insensitive), verdict bit-identical (int64 throughout;
-        # FACTOR·min·n ≲ 2e11 at int8-range quantization, far under
-        # int64). Pinned against the loop form by
-        # tests/test_streaming.py::test_ingest_gen_vectorized_matches_loop.
-        members = [
-            np.nonzero((assign == c) & existing)[0].astype(np.int64)
-            for c in cids
-        ]
-        mlen = np.array([len(a) for a in members], dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ia = pdf["vec_id"].to_numpy()
-            pos = np.searchsorted(ids, ia)
-            qa = Q[pos]
-            dq = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (C * C).sum(axis=1)[None, :]
-                - 2 * (qa @ C.T)
-            )
-            order = np.argsort(dq, axis=1, kind="stable")
-            probes = cids[order[:, :NPROBE]]
-            luts = []
-            for m in range(PQ_M):
-                lo, hi = m * PQ_SUB, (m + 1) * PQ_SUB
-                qm, Wm = qa[:, lo:hi], W[:, lo:hi]
-                luts.append(
-                    (qm * qm).sum(axis=1)[:, None]
-                    + (Wm * Wm).sum(axis=1)[None, :]
-                    - 2 * (qm @ Wm.T)
-                )
-            nrows = len(ia)
-            pidx = np.searchsorted(cids, probes)  # (nrows, NPROBE)
-            lens = mlen[pidx].sum(axis=1)
-            flat_parts = [members[j] for j in pidx.ravel()]
-            flat = (
-                np.concatenate(flat_parts)
-                if flat_parts
-                else np.empty(0, dtype=np.int64)
-            )
-            rep = np.repeat(np.arange(nrows), lens)
-            adc = np.zeros(flat.shape[0], dtype=np.int64)
-            for m in range(PQ_M):
-                adc += luts[m][rep, codes[flat, m]]
-            offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            nz = lens > 0
-            mn = np.full(nrows, -1, dtype=np.int64)
-            sm = np.zeros(nrows, dtype=np.int64)
-            if flat.size and nz.any():
-                starts = offs[nz]
-                mn[nz] = np.minimum.reduceat(adc, starts)
-                sm[nz] = np.add.reduceat(adc, starts)
-            adm = np.where(
-                nz, INGEST_REJECT_FACTOR * mn * lens >= sm, True
-            )
-            yield pd.DataFrame(
-                {
-                    "vec_id": ia.astype(np.int64),
-                    "cid": probes[:, 0].astype(np.int64),
-                    "n_cand": lens,
-                    "min_adc": mn,
-                    "sum_adc": sm,
-                    "admitted": adm.astype(np.int64),
-                }
-            )
-
-    return gen
-
-
-_INGEST_CTES = f"""
+INGEST_CTES = f"""
     WITH {_CLV_SQL_CTES},
     cent AS (
       SELECT vec_id AS cid, qv AS cqv FROM qc
@@ -3879,7 +3476,7 @@ _INGEST_CTES = f"""
 
 @query(
     "pipeline_vector_index_ingest",
-    oracle=_INGEST_CTES
+    oracle=INGEST_CTES
     + f"""
     SELECT b.vec_id, bc.cid,
            COALESCE(st.n_cand, 0) AS n_cand,
@@ -3900,15 +3497,15 @@ def pipeline_vector_index_ingest(
 ) -> DataFrame:
     """The IVF-PQ NIGHTLY-INGEST arm (round-10 verdict item #6a) — the
     vector-index sibling of `pipeline_semantic_ingest` (which probes
-    the SRP band index): a new batch of vectors (vec_id % 10 == 9,
-    the repo's ingest stand-in) is admitted against the PERSISTED
-    composed index — the same driver-fit `_ivfpq_artifacts` the
-    recall audit certifies (IVF assignment + PQ codes, fit once,
-    broadcast) — by probing each new vector's {NPROBE} nearest
-    inverted lists and ADC-scoring ONLY the lists' existing members
-    via the PQ codes: per-ingest cost is O(batch * list), independent
-    of corpus size, and no full vector is fetched at decision time —
-    exactly what the compressed index is for.
+    the SRP band index): a new batch of vectors (the ingest slice) is
+    admitted against the PERSISTED composed index — the same
+    driver-fit `ivfpq_artifacts` the recall audit certifies (IVF
+    assignment + PQ codes, fit once, broadcast) — by probing each new
+    vector's {NPROBE} nearest inverted lists and ADC-scoring ONLY the
+    lists' existing members via the PQ codes: per-ingest cost is
+    O(batch * list), independent of corpus size, and no full vector is
+    fetched at decision time — exactly what the compressed index is
+    for.
 
     Admission is per-query ADAPTIVE and all-integer: a new vector is
     rejected as a semantic near-duplicate iff its nearest candidate
@@ -3930,23 +3527,11 @@ def pipeline_vector_index_ingest(
 
     Reference basis: none; contract F10/F14 ANN family — the ingest
     rung above `sim_ivfpq_recall_clustered`."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
-    batch = emb.filter(F.col("vec_id") % 10 == 9).select("vec_id")
+    emb, art = ivf_index(spark, sf_dir)
+    batch = emb.filter(is_ingest(F.col("vec_id"))).select("vec_id")
     return (
         fan_out(batch, spark)
-        .mapInPandas(
-            _ingest_gen(art),
-            schema=(
-                "vec_id long, cid long, n_cand long, min_adc long,"
-                " sum_adc long, admitted long"
-            ),
-        )
+        .mapInPandas(ingest_gen(art), schema=INGEST_SCHEMA)
         .orderBy("vec_id")
     )
 
@@ -3956,7 +3541,7 @@ def pipeline_vector_index_ingest(
 # ---------------------------------------------------------------------------
 
 _REBALANCE_CTES = (
-    _INGEST_CTES
+    INGEST_CTES
     + f""",
     adm AS MATERIALIZED (
       SELECT b.vec_id, bc.cid,
@@ -4076,63 +3661,58 @@ _REBALANCE_ORACLE = (
 )
 
 
-def _assign_lookup_gen(art_bc):
-    """mapInPandas generator: (vec_id) -> (vec_id, list_id) by direct
-    lookup into the broadcast artifact's fitted IVF assignment — a
-    distributed O(1)-per-row probe of the persisted index, never a
-    re-scoring pass."""
+def _parent_dist(art, pos, lists):
+    """Exact int64 squared distance of corpus rows ``pos`` to the
+    centroids of their lists ``lists``."""
+    import numpy as np
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+    _ids, Q, _assign, _codes, cids, C, *_rest = art
+    diff = Q[pos] - C[np.searchsorted(cids, lists)]
+    return (diff * diff).sum(axis=1)
 
-        ids, _Q, assign, *_rest = art_bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pos = np.searchsorted(ids, pdf["vec_id"].to_numpy())
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "list_id": assign[pos]}
-            )
 
-    return gen
+def _rebalance_moves(art, pos, lists, split_seed, merge_recv):
+    """The rebalance decision table applied to index members (corpus
+    rows ``pos`` on lists ``lists``): members of merged lists move to
+    the receiver; members of split lists move to the seed only when
+    STRICTLY closer to it than to the parent centroid (exact int64,
+    ties keep the parent); everyone else stays. ``split_seed`` /
+    ``merge_recv`` are |lists|-bounded dicts from the verdict stage."""
+    import numpy as np
+
+    ids, Q = art[0], art[1]
+    out = np.array(lists, dtype=np.int64)
+    split = np.isin(lists, list(split_seed))
+    if split.any():
+        seeds = np.array(
+            [split_seed[int(x)] for x in lists[split]], dtype=np.int64
+        )
+        diff = Q[pos[split]] - Q[np.searchsorted(ids, seeds)]
+        closer = (diff * diff).sum(axis=1) < _parent_dist(
+            art, pos[split], lists[split]
+        )
+        out[split] = np.where(closer, seeds, lists[split])
+    merged = np.isin(lists, list(merge_recv))
+    out[merged] = [merge_recv[int(x)] for x in lists[merged]]
+    return out
 
 
 def _rebalance_move_gen(art_bc, split_seed, merge_recv):
-    """mapInPandas generator applying the rebalance decision table to
-    every index member: members of merged lists move to the receiver;
-    members of split lists re-score against {parent centroid, seed}
-    (integer distances, ties keep the parent); everyone else stays.
-    ``split_seed``/``merge_recv`` are |lists|-bounded dicts captured
-    from the verdict stage."""
+    """mapInPandas generator: (vec_id, list_id) -> (vec_id, new_list)
+    by :func:`_rebalance_moves`."""
 
     def gen(batches):
         import numpy as np
         import pandas as pd
 
-        ids, Q, _assign, _codes, cids, C, *_rest = art_bc.value
-        cpos = {int(c): i for i, c in enumerate(cids)}
-        spos = {
-            int(lst): int(np.searchsorted(ids, sd))
-            for lst, sd in split_seed.items()
-        }
+        art = art_bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             va = pdf["vec_id"].to_numpy()
             la = pdf["list_id"].to_numpy()
-            pos = np.searchsorted(ids, va)
-            out = np.array(la)
-            for r in range(len(va)):
-                lst = int(la[r])
-                if lst in merge_recv:
-                    out[r] = merge_recv[lst]
-                elif lst in split_seed:
-                    v = Q[pos[r]]
-                    dp = int(((v - C[cpos[lst]]) ** 2).sum())
-                    ds = int(((v - Q[spos[lst]]) ** 2).sum())
-                    if ds < dp:
-                        out[r] = split_seed[lst]
+            pos = np.searchsorted(art[0], va)
+            out = _rebalance_moves(art, pos, la, split_seed, merge_recv)
             yield pd.DataFrame({"vec_id": va, "new_list": out})
 
     return gen
@@ -4216,41 +3796,8 @@ def pipeline_vector_index_rebalance(
     Reference basis: none; contract F10/F14 ANN family — the action
     rung above `stream_ivf_list_maintenance` (round-11 verdict item
     #6a completes here)."""
-    from ._shared import shared_df
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
-
-    batch = emb.filter(F.col("vec_id") % 10 == 9).select("vec_id")
-    adm = (
-        fan_out(batch, spark)
-        .mapInPandas(
-            _ingest_gen(art),
-            schema=(
-                "vec_id long, cid long, n_cand long, min_adc long,"
-                " sum_adc long, admitted long"
-            ),
-        )
-        .filter(F.col("admitted") == 1)
-        .select("vec_id", F.col("cid").alias("list_id"))
-    )
-    existing = (
-        fan_out(emb.filter(F.col("vec_id") % 10 != 9), spark)
-        .select("vec_id")
-        .mapInPandas(_assign_lookup_gen(art), "vec_id long, list_id long")
-    )
-    members = shared_df(
-        "ivf_rebalance_members",
-        sf_dir,
-        spark,
-        lambda: existing.unionByName(adm),
-        materialize=True,
-    )
+    _emb, art = ivf_index(spark, sf_dir)
+    members = members_table(spark, sf_dir)
 
     occ = members.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_total")
@@ -4312,11 +3859,9 @@ def pipeline_vector_index_rebalance(
 
     # merge receivers: nearest non-merging centroid, driver-side over
     # the |lists| x |lists| integer distance table
-    merge_recv: dict[int, int] = {}
-    if merge_ids:
-        _ids_a, _Q, _assign, _codes, cids, C, _w, _W = art.value
-        cindex = {int(c): i for i, c in enumerate(cids)}
-        merge_recv = _merge_receivers(C, cindex, merge_ids, keep_ids)
+    _ids, _Q, _assign, _codes, cids, C, *_rest = art.value
+    cindex = {int(c): i for i, c in enumerate(cids)}
+    merge_recv = _merge_receivers(C, cindex, merge_ids, keep_ids)
 
     moved = fan_out(members, spark).mapInPandas(
         _rebalance_move_gen(art, split_seed, merge_recv),
@@ -4372,21 +3917,14 @@ def _split_dist_gen(art_bc):
         import numpy as np
         import pandas as pd
 
-        ids, Q, _assign, _codes, cids, C, *_rest = art_bc.value
-        cpos = {int(c): i for i, c in enumerate(cids)}
+        art = art_bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             va = pdf["vec_id"].to_numpy()
             la = pdf["list_id"].to_numpy()
-            pos = np.searchsorted(ids, va)
-            d = np.empty(len(va), dtype=np.int64)
-            for r in range(len(va)):
-                diff = Q[pos[r]] - C[cpos[int(la[r])]]
-                d[r] = int((diff * diff).sum())
-            yield pd.DataFrame(
-                {"vec_id": va, "list_id": la, "dpar": d}
-            )
+            d = _parent_dist(art, np.searchsorted(art[0], va), la)
+            yield pd.DataFrame({"vec_id": va, "list_id": la, "dpar": d})
 
     return gen
 
@@ -4394,9 +3932,12 @@ def _split_dist_gen(art_bc):
 def _rebalance_plan(art):
     """Driver-side numpy replica of the certified rebalance decision
     chain (admission -> occupancy -> verdicts -> seeds/receivers ->
-    moves) over the broadcast `_ivfpq_artifacts` — the "fit once,
+    moves) over the broadcast IVF-PQ artifact — the "fit once,
     broadcast the model" rule applied to the POST-rebalance index so
-    the recall re-audit's scan tasks do per-query work only. Returns
+    the recall re-audit's scan tasks do per-query work only. Admission,
+    merge receivers and moves are the executor's own functions
+    (:func:`~catme_etl_spark.operators._ivf.admit`,
+    :func:`_merge_receivers`, :func:`_rebalance_moves`). Returns
     (member_ids, member_before, member_after, acent_ids, acent_vecs):
     index members with their pre/post-rebalance list ids, plus the
     post-rebalance probeable centroid table (survivors keep their
@@ -4406,52 +3947,12 @@ def _rebalance_plan(art):
     suite and against the SQL oracle by the driver gate."""
     import numpy as np
 
-    ids, Q, assign, codes, cids, C, wids, W = art
-    existing = ids % 10 != 9
-    bidx = np.nonzero(~existing)[0]
-
-    # admission (the _ingest_gen rule, vectorized)
-    adm_pos, adm_list = [], []
-    if len(bidx):
-        qa = Q[bidx]
-        dq = (
-            (qa * qa).sum(axis=1)[:, None]
-            + (C * C).sum(axis=1)[None, :]
-            - 2 * (qa @ C.T)
-        )
-        order = np.argsort(dq, axis=1, kind="stable")
-        probes = cids[order[:, :NPROBE]]
-        luts = []
-        for m in range(PQ_M):
-            lo, hi = m * PQ_SUB, (m + 1) * PQ_SUB
-            qm, Wm = qa[:, lo:hi], W[:, lo:hi]
-            luts.append(
-                (qm * qm).sum(axis=1)[:, None]
-                + (Wm * Wm).sum(axis=1)[None, :]
-                - 2 * (qm @ Wm.T)
-            )
-        for r in range(len(bidx)):
-            cand = np.isin(assign, probes[r]) & existing
-            cidx = np.nonzero(cand)[0]
-            adc = np.zeros(len(cidx), dtype=np.int64)
-            for m in range(PQ_M):
-                adc += luts[m][r][codes[cidx, m]]
-            n = len(cidx)
-            if n:
-                mn, sm = int(adc.min()), int(adc.sum())
-                admitted = not (INGEST_REJECT_FACTOR * mn * n < sm)
-            else:
-                admitted = True
-            if admitted:
-                adm_pos.append(int(bidx[r]))
-                adm_list.append(int(probes[r][0]))
-
-    member_pos = np.concatenate(
-        [np.nonzero(existing)[0], np.array(adm_pos, dtype=np.int64)]
-    ).astype(np.int64)
-    member_before = np.concatenate(
-        [assign[existing], np.array(adm_list, dtype=np.int64)]
-    ).astype(np.int64)
+    ids, Q, assign, _codes, cids, C, _wids, _W = art
+    new = is_ingest(ids)
+    bidx = np.nonzero(new)[0]
+    cid, _n, _mn, _sm, adm = admit(art, InvertedLists(ids, assign), bidx)
+    member_pos = np.concatenate([np.nonzero(~new)[0], bidx[adm]])
+    member_before = np.concatenate([assign[~new], cid[adm]])
     member_ids = ids[member_pos]
 
     # occupancy + verdicts (exact cross-multiplied maintenance rules)
@@ -4459,59 +3960,39 @@ def _rebalance_plan(art):
     grand, n_lists = int(occ_n.sum()), len(occ_ids)
     do_split = 2 * occ_n * n_lists > 3 * grand
     do_merge = 4 * occ_n * n_lists < grand
-    cpos = {int(c): i for i, c in enumerate(cids)}
 
+    # split seeds: farthest member from the parent centroid, exact
+    # int64, ties -> lowest vec_id; the centroid itself never seeds
+    dpar = _parent_dist(art, member_pos, member_before)
     split_seed: dict[int, int] = {}
-    for li, flag in zip(occ_ids, do_split):
-        if not flag:
-            continue
-        lst = int(li)
+    for lst in occ_ids[do_split]:
         sel = (member_before == lst) & (member_ids != lst)
-        if not sel.any():
-            continue
-        mp = member_pos[sel]
-        diff = Q[mp] - C[cpos[lst]]
-        d = (diff * diff).sum(axis=1)
-        mids = member_ids[sel]
-        best = np.lexsort((mids, -d))[0]
-        split_seed[lst] = int(mids[best])
+        if sel.any():
+            mids = member_ids[sel]
+            best = np.lexsort((mids, -dpar[sel]))[0]
+            split_seed[int(lst)] = int(mids[best])
 
-    merge_recv: dict[int, int] = {}
-    keep = [int(li) for li, f in zip(occ_ids, do_merge) if not f]
-    for li, flag in zip(occ_ids, do_merge):
-        if not flag:
-            continue
-        m = int(li)
-        best = None
-        for r in keep:
-            d = int(((C[cpos[m]] - C[cpos[r]]) ** 2).sum())
-            if best is None or (d, r) < best:
-                best = (d, r)
-        merge_recv[m] = best[1]
+    cpos = {int(c): i for i, c in enumerate(cids)}
+    merge_recv = _merge_receivers(
+        C,
+        cpos,
+        [int(x) for x in occ_ids[do_merge]],
+        [int(x) for x in occ_ids[~do_merge]],
+    )
+    member_after = _rebalance_moves(
+        art, member_pos, member_before, split_seed, merge_recv
+    )
 
-    member_after = member_before.copy()
-    sidpos = {
-        lst: int(np.searchsorted(ids, sd)) for lst, sd in split_seed.items()
-    }
-    for i in range(len(member_ids)):
-        lst = int(member_before[i])
-        if lst in merge_recv:
-            member_after[i] = merge_recv[lst]
-        elif lst in split_seed:
-            v = Q[member_pos[i]]
-            dp = int(((v - C[cpos[lst]]) ** 2).sum())
-            ds = int(((v - Q[sidpos[lst]]) ** 2).sum())
-            if ds < dp:
-                member_after[i] = split_seed[lst]
-
-    acent = [
-        (int(li), C[cpos[int(li)]])
-        for li, f in zip(occ_ids, do_merge)
-        if not f
-    ] + [(sd, Q[sidpos[lst]]) for lst, sd in split_seed.items()]
+    acent = [(int(li), C[cpos[int(li)]]) for li in occ_ids[~do_merge]] + [
+        (sd, Q[np.searchsorted(ids, sd)]) for sd in split_seed.values()
+    ]
     acent.sort(key=lambda t: t[0])
     acent_ids = np.array([t[0] for t in acent], dtype=np.int64)
-    acent_vecs = np.stack([t[1] for t in acent]) if acent else np.zeros((0, Q.shape[1]), dtype=np.int64)
+    acent_vecs = (
+        np.stack([t[1] for t in acent])
+        if acent
+        else np.zeros((0, Q.shape[1]), dtype=np.int64)
+    )
     return member_ids, member_before, member_after, acent_ids, acent_vecs
 
 
@@ -4519,8 +4000,7 @@ def _ivf_rebal_gen(art_bc, plan_bc):
     """mapInPandas generator for the rebalanced-recall audit: per panel
     query emit exact truth over the index members plus the coarse-IVF
     top-k under the BEFORE (original lists/centroids) and AFTER
-    (rebalanced lists/centroid table) index states. Stable sorts keep
-    every tie on the lowest id — byte-identical to the oracle."""
+    (rebalanced lists/centroid table) index states."""
 
     def gen(batches):
         import numpy as np
@@ -4528,61 +4008,21 @@ def _ivf_rebal_gen(art_bc, plan_bc):
 
         ids, Q, _assign, _codes, cids, C, _wids, _W = art_bc.value
         member_ids, mb, ma, aids, avecs = plan_bc.value
-        mpos = np.searchsorted(ids, member_ids)
-        Qm = Q[mpos]
-        BIG = np.int64(1 << 62)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ia = pdf["vec_id"].to_numpy()
-            pos = np.searchsorted(ids, ia)
-            qa = Q[pos]
-            db = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (C * C).sum(axis=1)[None, :]
-                - 2 * (qa @ C.T)
-            )
-            pb = cids[np.argsort(db, axis=1, kind="stable")[:, :NPROBE]]
-            da = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (avecs * avecs).sum(axis=1)[None, :]
-                - 2 * (qa @ avecs.T)
-            )
-            pa = aids[np.argsort(da, axis=1, kind="stable")[:, :NPROBE]]
-            dm = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (Qm * Qm).sum(axis=1)[None, :]
-                - 2 * (qa @ Qm.T)
-            )
-            dm = np.where(ia[:, None] == member_ids[None, :], BIG, dm)
-            out_q, out_n, out_t = [], [], []
-
-            def take(q_id, nbr, tier):
-                out_q.extend([q_id] * len(nbr))
-                out_n.extend(int(v) for v in nbr)
-                out_t.extend([tier] * len(nbr))
-
-            for r in range(len(ia)):
-                take(
-                    int(ia[r]),
-                    member_ids[np.lexsort((member_ids, dm[r]))[:TOP_K]],
-                    "truth",
-                )
-                for tier, probes, lists in (
-                    ("before", pb[r], mb),
-                    ("after", pa[r], ma),
-                ):
-                    cand = np.isin(lists, probes) & (member_ids != ia[r])
-                    cidx = np.nonzero(cand)[0]
-                    nbr = member_ids[cidx]
-                    de = dm[r][cidx]
-                    take(
-                        int(ia[r]),
-                        nbr[np.lexsort((nbr, de))[:TOP_K]],
-                        tier,
-                    )
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "tier": out_t}
+        Qm = Q[np.searchsorted(ids, member_ids)]
+        before = InvertedLists(member_ids, mb)
+        after = InvertedLists(member_ids, ma)
+        for ia, qa in _query_rows(batches, ids, Q):
+            d = l2_matrix(qa, Qm)
+            yield pd.concat(
+                [
+                    rank_emit("truth", ia, d, before, TOP_K),
+                    rank_emit(
+                        "before", ia, d, before, TOP_K, probe(qa, C, cids)
+                    ),
+                    rank_emit(
+                        "after", ia, d, after, TOP_K, probe(qa, avecs, aids)
+                    ),
+                ]
             )
 
     return gen
@@ -4728,28 +4168,17 @@ def sim_ivf_rebalanced_recall(
     `sim_ivf_recall_clustered` shape.
 
     Reference basis: none; contract F10/F14 ANN audit family."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
+    emb, art = ivf_index(spark, sf_dir)
     plan = shared_broadcast(
         "ivf_rebalance_plan",
         sf_dir,
         spark,
         lambda: _rebalance_plan(art.value),
     )
-    panel = (
-        emb.withColumn("_pk", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_pk", "vec_id")
-        .limit(PQ_PANEL_N)
-        .select("vec_id")
-    )
+    panel = _md5_panel(emb).select("vec_id")
     rows = fan_out(panel, spark).mapInPandas(
         _ivf_rebal_gen(art, plan),
-        schema="query_id long, neighbor_id long, tier string",
+        schema=RANK_SCHEMA,
     )
     truth = rows.filter(F.col("tier") == "truth").select(
         "query_id", "neighbor_id"
@@ -4795,10 +4224,8 @@ def sim_ivf_rebalanced_recall(
 # lifecycle rung after ingest/maintain/rebalance).
 # ---------------------------------------------------------------------------
 
-DELETE_MOD = 25  # tombstone rule: members with vec_id % 25 == 3
-
 _DELETE_COMPACT_ORACLE = (
-    _INGEST_CTES
+    INGEST_CTES
     + f""",
     adm AS (
       SELECT b.vec_id, bc.cid,
@@ -4870,41 +4297,8 @@ def pipeline_vector_index_delete_compact(
 
     Reference basis: none; contract F10/F14 ANN family — the
     retirement rung beside `pipeline_vector_index_rebalance`."""
-    from ._shared import shared_df
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
-    batch = emb.filter(F.col("vec_id") % 10 == 9).select("vec_id")
-    adm = (
-        fan_out(batch, spark)
-        .mapInPandas(
-            _ingest_gen(art),
-            schema=(
-                "vec_id long, cid long, n_cand long, min_adc long,"
-                " sum_adc long, admitted long"
-            ),
-        )
-        .filter(F.col("admitted") == 1)
-        .select("vec_id", F.col("cid").alias("list_id"))
-    )
-    existing = (
-        fan_out(emb.filter(F.col("vec_id") % 10 != 9), spark)
-        .select("vec_id")
-        .mapInPandas(_assign_lookup_gen(art), "vec_id long, list_id long")
-    )
-    members = shared_df(
-        "ivf_rebalance_members",
-        sf_dir,
-        spark,
-        lambda: existing.unionByName(adm),
-        materialize=True,
-    )
-    dead = F.when(F.col("vec_id") % DELETE_MOD == 3, 1).otherwise(0)
+    members = members_table(spark, sf_dir)
+    dead = F.when(is_deleted(F.col("vec_id")), 1).otherwise(0)
     stat = members.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_before"),
         F.sum(dead).cast("long").alias("n_deleted"),
@@ -4934,7 +4328,7 @@ def pipeline_vector_index_delete_compact(
 # ---------------------------------------------------------------------------
 
 _MEM_CTES = (
-    _INGEST_CTES
+    INGEST_CTES
     + f""",
     adm AS (
       SELECT b.vec_id, bc.cid,
@@ -5018,41 +4412,8 @@ def pipeline_vector_index_compaction(
     Reference basis: none; contract F10/F14 ANN family — completes
     retire the way `pipeline_vector_index_rebalance` completed
     occupancy."""
-    from ._shared import shared_df
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
-    batch = emb.filter(F.col("vec_id") % 10 == 9).select("vec_id")
-    adm = (
-        fan_out(batch, spark)
-        .mapInPandas(
-            _ingest_gen(art),
-            schema=(
-                "vec_id long, cid long, n_cand long, min_adc long,"
-                " sum_adc long, admitted long"
-            ),
-        )
-        .filter(F.col("admitted") == 1)
-        .select("vec_id", F.col("cid").alias("list_id"))
-    )
-    existing = (
-        fan_out(emb.filter(F.col("vec_id") % 10 != 9), spark)
-        .select("vec_id")
-        .mapInPandas(_assign_lookup_gen(art), "vec_id long, list_id long")
-    )
-    members = shared_df(
-        "ivf_rebalance_members",
-        sf_dir,
-        spark,
-        lambda: existing.unionByName(adm),
-        materialize=True,
-    )
-    dead = F.col("vec_id") % DELETE_MOD == 3
+    members = members_table(spark, sf_dir)
+    dead = is_deleted(F.col("vec_id"))
     stat = members.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_before"),
         F.sum(F.when(dead, 1).otherwise(0)).cast("long").alias("n_deleted"),
@@ -5097,8 +4458,7 @@ def _ivf_compact_gen(art_bc, plan_bc):
     panel query emit exact truth + coarse-IVF top-k under the BEFORE
     (full membership, tombstones still probed) and AFTER (live-only
     membership — what the compacted/tombstone-filtered probe path
-    returns) index states. Same stable-sort lowest-id tie discipline
-    as `_ivf_rebal_gen` — byte-identical to the oracle."""
+    returns) index states."""
 
     def gen(batches):
         import numpy as np
@@ -5106,58 +4466,19 @@ def _ivf_compact_gen(art_bc, plan_bc):
 
         ids, Q, _assign, _codes, cids, C, _wids, _W = art_bc.value
         member_ids, mb, _ma, _aids, _avecs = plan_bc.value
-        mpos = np.searchsorted(ids, member_ids)
-        Qm = Q[mpos]
-        live = member_ids % DELETE_MOD != 3
-        BIG = np.int64(1 << 62)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ia = pdf["vec_id"].to_numpy()
-            pos = np.searchsorted(ids, ia)
-            qa = Q[pos]
-            db = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (C * C).sum(axis=1)[None, :]
-                - 2 * (qa @ C.T)
-            )
-            pb = cids[np.argsort(db, axis=1, kind="stable")[:, :NPROBE]]
-            dm = (
-                (qa * qa).sum(axis=1)[:, None]
-                + (Qm * Qm).sum(axis=1)[None, :]
-                - 2 * (qa @ Qm.T)
-            )
-            dm = np.where(ia[:, None] == member_ids[None, :], BIG, dm)
-            out_q, out_n, out_t = [], [], []
-
-            def take(q_id, nbr, tier):
-                out_q.extend([q_id] * len(nbr))
-                out_n.extend(int(v) for v in nbr)
-                out_t.extend([tier] * len(nbr))
-
-            for r in range(len(ia)):
-                probed = np.isin(mb, pb[r]) & (member_ids != ia[r])
-                for tier_t, tier_i, mask in (
-                    ("truth_before", "before", np.ones_like(live)),
-                    ("truth_after", "after", live),
-                ):
-                    tm = mask & (member_ids != ia[r])
-                    tidx = np.nonzero(tm)[0]
-                    nbr, de = member_ids[tidx], dm[r][tidx]
-                    take(
-                        int(ia[r]),
-                        nbr[np.lexsort((nbr, de))[:TOP_K]],
-                        tier_t,
-                    )
-                    cidx = np.nonzero(probed & mask)[0]
-                    nbr, de = member_ids[cidx], dm[r][cidx]
-                    take(
-                        int(ia[r]),
-                        nbr[np.lexsort((nbr, de))[:TOP_K]],
-                        tier_i,
-                    )
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "tier": out_t}
+        Qm = Q[np.searchsorted(ids, member_ids)]
+        members = InvertedLists(member_ids, mb)
+        live = ~is_deleted(member_ids)
+        for ia, qa in _query_rows(batches, ids, Q):
+            d = l2_matrix(qa, Qm)
+            probes = probe(qa, C, cids)
+            yield pd.concat(
+                [
+                    rank_emit("truth_before", ia, d, members, TOP_K),
+                    rank_emit("before", ia, d, members, TOP_K, probes),
+                    rank_emit("truth_after", ia, d, members, TOP_K, mask=live),
+                    rank_emit("after", ia, d, members, TOP_K, probes, live),
+                ]
             )
 
     return gen
@@ -5293,28 +4614,17 @@ def sim_ivf_compacted_recall(
     {PQ_PANEL_N}-query md5 panel (the round-8 quadratic-truth fix).
 
     Reference basis: none; contract F10/F14 ANN audit family."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
+    emb, art = ivf_index(spark, sf_dir)
     plan = shared_broadcast(
         "ivf_rebalance_plan",
         sf_dir,
         spark,
         lambda: _rebalance_plan(art.value),
     )
-    panel = (
-        emb.withColumn("_pk", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_pk", "vec_id")
-        .limit(PQ_PANEL_N)
-        .select("vec_id")
-    )
+    panel = _md5_panel(emb).select("vec_id")
     rows = fan_out(panel, spark).mapInPandas(
         _ivf_compact_gen(art, plan),
-        schema="query_id long, neighbor_id long, tier string",
+        schema=RANK_SCHEMA,
     )
     out = []
     for tier, truth_tier in (("after", "truth_after"), ("before", "truth_before")):
@@ -5412,43 +4722,10 @@ def pipeline_index_lifecycle_report(
     integer arithmetic, no corpus rescans.
 
     Reference basis: none; contract F10/F14 ANN family."""
-    from ._shared import shared_df
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
-    batch = emb.filter(F.col("vec_id") % 10 == 9).select("vec_id")
-    adm = (
-        fan_out(batch, spark)
-        .mapInPandas(
-            _ingest_gen(art),
-            schema=(
-                "vec_id long, cid long, n_cand long, min_adc long,"
-                " sum_adc long, admitted long"
-            ),
-        )
-        .filter(F.col("admitted") == 1)
-        .select("vec_id", F.col("cid").alias("list_id"))
-    )
-    existing = (
-        fan_out(emb.filter(F.col("vec_id") % 10 != 9), spark)
-        .select("vec_id")
-        .mapInPandas(_assign_lookup_gen(art), "vec_id long, list_id long")
-    )
-    members = shared_df(
-        "ivf_rebalance_members",
-        sf_dir,
-        spark,
-        lambda: existing.unionByName(adm),
-        materialize=True,
-    )
+    members = members_table(spark, sf_dir)
     occ = members.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_total"),
-        F.sum(F.when(F.col("vec_id") % DELETE_MOD == 3, 1).otherwise(0))
+        F.sum(F.when(is_deleted(F.col("vec_id")), 1).otherwise(0))
         .cast("long")
         .alias("n_deleted"),
     )
@@ -5517,43 +4794,11 @@ def pipeline_index_store_persist(
     rung that turns `live_md5` from a certificate into posting files.
     """
     from ..sources.pydatasource import SheetDirDataSource
-    from ._shared import shared_df
 
     spark.dataSource.register(SheetDirDataSource)
     verdict = pipeline_vector_index_compaction(spark, sf_dir)
 
-    def _members_builder():
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-        art = shared_broadcast(
-            "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-        )
-        batch = emb.filter(F.col("vec_id") % 10 == 9).select("vec_id")
-        adm = (
-            fan_out(batch, spark)
-            .mapInPandas(
-                _ingest_gen(art),
-                schema=(
-                    "vec_id long, cid long, n_cand long, min_adc long,"
-                    " sum_adc long, admitted long"
-                ),
-            )
-            .filter(F.col("admitted") == 1)
-            .select("vec_id", F.col("cid").alias("list_id"))
-        )
-        existing = (
-            fan_out(emb.filter(F.col("vec_id") % 10 != 9), spark)
-            .select("vec_id")
-            .mapInPandas(_assign_lookup_gen(art), "vec_id long, list_id long")
-        )
-        return existing.unionByName(adm)
-
-    members = shared_df(
-        "ivf_rebalance_members", sf_dir, spark, _members_builder,
-        materialize=True,
-    )
+    members = members_table(spark, sf_dir)
     # Fresh aliases break the shared checkpoint-scan lineage between
     # the members table and the verdict rows derived from it.
     vflag = verdict.select(
@@ -5563,7 +4808,7 @@ def pipeline_index_store_persist(
         members.join(vflag, F.col("list_id") == F.col("v_lid"))
         .filter(
             (F.col("v_comp") == 0)
-            | (F.col("vec_id") % DELETE_MOD != 3)
+            | ~is_deleted(F.col("vec_id"))
         )
         .select("list_id", "vec_id")
     )
@@ -5583,7 +4828,7 @@ def pipeline_index_store_persist(
         F.count(F.lit(1)).cast("long").alias("n_postings_store")
     )
     dig = (
-        rb.filter(F.col("vec_id") % DELETE_MOD != 3)
+        rb.filter(~is_deleted(F.col("vec_id")))
         .groupBy("list_id")
         .agg(
             F.md5(

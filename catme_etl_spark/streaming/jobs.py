@@ -2024,16 +2024,16 @@ def stream_holt_winters_weekly(
     return holt_winters_verdict(d)
 
 
-from ..operators.similarity import _INGEST_CTES  # noqa: E402
-from ..operators.similarity import INGEST_REJECT_FACTOR  # noqa: E402
+from ..operators import _ivf  # noqa: E402
+from ..operators.similarity import INGEST_CTES  # noqa: E402
 
 _IVF_MAINT_ORACLE = (
-    _INGEST_CTES
+    INGEST_CTES
     + f""",
     adm AS (
       SELECT b.vec_id, bc.cid,
              CAST(CASE WHEN st.n_cand IS NULL THEN 1
-                       WHEN {INGEST_REJECT_FACTOR} * st.min_adc * st.n_cand
+                       WHEN {_ivf.INGEST_REJECT_FACTOR} * st.min_adc * st.n_cand
                             < st.sum_adc THEN 0
                        ELSE 1 END AS BIGINT) AS admitted
       FROM batch b
@@ -2095,9 +2095,9 @@ def stream_ivf_list_maintenance(
     stream — the fourth streaming index family member (Bloom words,
     MinHash bands, winnowing fp-shard, now IVF inverted-list sizes),
     closing the loop the ingest arm opened: as vector batches arrive
-    (vec_id % 10 == 9, the repo's ingest stand-in), each micro-batch
+    (the ingest slice, `_ivf.is_ingest`), each micro-batch
     admits against the PERSISTED composed index (the same driver-fit
-    `_ivfpq_artifacts` broadcast the recall audit and
+    `_ivf.ivfpq_artifacts` broadcast the recall audit and
     `pipeline_vector_index_ingest` certify) and folds its per-list
     admitted counts into the stream state — a mergeable SUM keyed by
     centroid id, so out-of-order or replayed micro-batches cannot
@@ -2125,42 +2125,20 @@ def stream_ivf_list_maintenance(
     Reference basis: none; contract C7/C8 streaming-index family +
     F10/F14 ANN family, the maintenance rung above
     `pipeline_vector_index_ingest`."""
-    import numpy as np
-
-    from ..operators._shared import shared_broadcast, shared_matrix_broadcast
-    from ..operators.similarity import _ingest_gen, _ivfpq_artifacts
-    from ..sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
+    _emb, art = _ivf.ivf_index(spark, sf_dir)
     batch = (
         _stream_embeddings(spark, sf_dir)
-        .filter(F.col("vec_id") % 10 == 9)
+        .filter(_ivf.is_ingest(F.col("vec_id")))
         .select("vec_id")
     )
-    dec = batch.mapInPandas(
-        _ingest_gen(art),
-        schema=(
-            "vec_id long, cid long, n_cand long, min_adc long,"
-            " sum_adc long, admitted long"
-        ),
-    )
+    dec = batch.mapInPandas(_ivf.ingest_gen(art), schema=_ivf.INGEST_SCHEMA)
     agg = dec.groupBy("cid").agg(
         F.sum("admitted").cast("long").alias("n_admitted")
     )
     snap = _run_to_memory(agg, "complete")
 
-    ids, _Q, assign, _codes, cids, _C, _wids, _W = art.value
-    exmask = ids % 10 != 9
-    vals, cnts = np.unique(assign[exmask], return_counts=True)
-    m = {int(v): int(c) for v, c in zip(vals, cnts)}
     ex = spark.createDataFrame(
-        [(int(c), m.get(int(c), 0)) for c in cids],
+        list(_ivf.existing_list_sizes(art.value).items()),
         "cid long, n_existing long",
     )
     z = F.lit(0).cast("long")
@@ -2728,7 +2706,7 @@ def stream_release_admission_gate(
 # ---------------------------------------------------------------------------
 
 _COMPACT_SCHED_ORACLE = (
-    _INGEST_CTES
+    INGEST_CTES
     + """,
     exi AS MATERIALIZED (
       SELECT vec_id, cid AS list_id FROM assign WHERE vec_id % 10 <> 9
@@ -2771,7 +2749,7 @@ def stream_compaction_scheduler(
     sibling of `stream_ivf_list_maintenance` (which watches
     occupancy; this watches decay): deletion notices arrive on the
     embedding stream (persisted-index members hitting the repo's
-    tombstone rule `vec_id % 25 == 3`), each micro-batch looks up the
+    tombstone rule, `_ivf.is_deleted`), each micro-batch looks up the
     victim's inverted list through the SAME persisted driver-fit
     artifact every index op shares, and the stream state keeps one
     mergeable per-list DELETE counter — replay/out-of-order safe the
@@ -2793,52 +2771,31 @@ def stream_compaction_scheduler(
 
     Reference basis: none; contract C7/C8 streaming-index family +
     F10/F14 ANN retire rung."""
-    import numpy as np
-
     from pyspark.sql import Window
 
-    from ..operators._shared import shared_broadcast, shared_matrix_broadcast
-    from ..operators.similarity import (
-        _assign_lookup_gen,
-        _ivfpq_artifacts,
-        DELETE_MOD,
-    )
-    from ..sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
-    art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
-    )
+    _emb, art = _ivf.ivf_index(spark, sf_dir)
+    vid = F.col("vec_id")
     dels = (
         _stream_embeddings(spark, sf_dir)
-        .filter(
-            (F.col("vec_id") % 10 != 9)
-            & (F.col("vec_id") % DELETE_MOD == 3)
-        )
+        .filter(~_ivf.is_ingest(vid) & _ivf.is_deleted(vid))
         .select("vec_id")
     )
     looked = dels.mapInPandas(
-        _assign_lookup_gen(art), "vec_id long, list_id long"
+        _ivf.assign_lookup_gen(art), "vec_id long, list_id long"
     )
     agg = looked.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_deleted")
     )
     snap = _run_to_memory(agg, "complete")
 
-    ids, _Q, assign, _codes, cids, _C, _wids, _W = art.value
-    exmask = ids % 10 != 9
-    vals, cnts = np.unique(assign[exmask], return_counts=True)
-    m = {int(v): int(c) for v, c in zip(vals, cnts)}
+    sizes = _ivf.existing_list_sizes(art.value)
     # Universe = lists with >=1 EXISTING member, matching the oracle's
-    # exc CTE: a list whose members are all in the %10==9 ingest slice
+    # exc CTE: a list whose members are all in the ingest slice
     # has nothing to compact and must not occupy a queue_rank slot —
     # emitting it with n_existing=0 would flag it (4*0 >= 0) and shift
     # every later rank (round-13 advisor finding).
     ex = spark.createDataFrame(
-        [(int(c), m[int(c)]) for c in cids if int(c) in m],
+        [(c, n) for c, n in sizes.items() if n],
         "list_id long, n_existing long",
     )
     z = F.lit(0).cast("long")

@@ -124,8 +124,8 @@ def test_rebalanced_recall_oracle_and_plan_consistency(spark, tmp_path):
         shared_broadcast,
         shared_matrix_broadcast,
     )
+    from catme_etl_spark.operators._ivf import ivfpq_artifacts
     from catme_etl_spark.operators.similarity import (
-        _ivfpq_artifacts,
         _rebalance_plan,
         pipeline_vector_index_rebalance,
         sim_ivf_rebalanced_recall,
@@ -158,7 +158,7 @@ def test_rebalanced_recall_oracle_and_plan_consistency(spark, tmp_path):
         )
         art = shared_broadcast(
             "ivfpq_artifacts", str(tmp_path), spark,
-            lambda: _ivfpq_artifacts(bc),
+            lambda: ivfpq_artifacts(bc),
         )
         plan = _rebalance_plan(art.value)
     finally:

@@ -223,11 +223,11 @@ def test_compacted_recall_no_dead_neighbor(spark, tmp_path):
         shared_broadcast,
         shared_matrix_broadcast,
     )
+    from catme_etl_spark.operators._ivf import ivfpq_artifacts
     from catme_etl_spark.operators.similarity import (
         DELETE_MOD,
         TOP_K,
         _ivf_compact_gen,
-        _ivfpq_artifacts,
         _rebalance_plan,
         sim_ivf_compacted_recall,
     )
@@ -249,7 +249,7 @@ def test_compacted_recall_no_dead_neighbor(spark, tmp_path):
         )
         art = shared_broadcast(
             "ivfpq_artifacts", str(tmp_path), spark,
-            lambda: _ivfpq_artifacts(bc),
+            lambda: ivfpq_artifacts(bc),
         )
         plan = shared_broadcast(
             "ivf_rebalance_plan", str(tmp_path), spark,

@@ -271,13 +271,13 @@ def test_quant_guard_rejects_degenerate_corpus():
     per the round-6 degenerate-input discipline."""
     import numpy as np
 
-    from catme_etl_spark.operators.similarity import _quant_max_abs
+    from catme_etl_spark.operators._ivf import quant_max_abs
 
     with pytest.raises(ValueError, match="empty"):
-        _quant_max_abs(np.empty((0, 64)))
+        quant_max_abs(np.empty((0, 64)))
     with pytest.raises(ValueError, match="all-zero"):
-        _quant_max_abs(np.zeros((5, 64)))
-    assert _quant_max_abs(np.array([[0.0, -2.5]])) == 2.5
+        quant_max_abs(np.zeros((5, 64)))
+    assert quant_max_abs(np.array([[0.0, -2.5]])) == 2.5
 
 
 def test_maybe_broadcast_fails_closed_on_missing_table(spark, sf_dir):

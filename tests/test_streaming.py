@@ -555,7 +555,7 @@ def test_ivf_occupancy_restart_recovers_state(spark, sf_dir, tmp_path):
     """Kill-and-restart contract for the FOURTH streaming index store
     (`stream_ivf_list_maintenance`'s per-list admitted counts): the
     vector corpus lands in two files; a first query admits the first
-    file's batch vectors through the broadcast `_ivfpq_artifacts`
+    file's batch vectors through the broadcast `ivfpq_artifacts`
     kernel and dies after committing offsets + the groupBy(cid) SUM
     state; a brand-new query object on the same checkpointLocation
     consumes ONLY the second file, and its final snapshot must equal
@@ -573,10 +573,7 @@ def test_ivf_occupancy_restart_recovers_state(spark, sf_dir, tmp_path):
         shared_broadcast,
         shared_matrix_broadcast,
     )
-    from catme_etl_spark.operators.similarity import (
-        _ingest_gen,
-        _ivfpq_artifacts,
-    )
+    from catme_etl_spark.operators._ivf import ingest_gen, ivfpq_artifacts
     from catme_etl_spark.sources.tables import load_table
 
     landing = str(tmp_path / "landing")
@@ -589,7 +586,7 @@ def test_ivf_occupancy_restart_recovers_state(spark, sf_dir, tmp_path):
     )
     bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
     art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
+        "ivfpq_artifacts", sf_dir, spark, lambda: ivfpq_artifacts(bc)
     )
     dec_schema = (
         "vec_id long, cid long, n_cand long, min_adc long,"
@@ -600,7 +597,7 @@ def test_ivf_occupancy_restart_recovers_state(spark, sf_dir, tmp_path):
         return (
             df.filter(F.col("vec_id") % 10 == 9)
             .select("vec_id")
-            .mapInPandas(_ingest_gen(art), schema=dec_schema)
+            .mapInPandas(ingest_gen(art), schema=dec_schema)
             .groupBy("cid")
             .agg(F.sum("admitted").cast("long").alias("n_admitted"))
         )
@@ -802,13 +799,12 @@ def test_ingest_gen_vectorized_matches_loop(spark, sf_dir):
         shared_broadcast,
         shared_matrix_broadcast,
     )
+    from catme_etl_spark.operators._ivf import ingest_gen, ivfpq_artifacts
     from catme_etl_spark.operators.similarity import (
         INGEST_REJECT_FACTOR,
         NPROBE,
         PQ_M,
         PQ_SUB,
-        _ingest_gen,
-        _ivfpq_artifacts,
     )
     from catme_etl_spark.sources.tables import load_table
 
@@ -817,13 +813,13 @@ def test_ingest_gen_vectorized_matches_loop(spark, sf_dir):
     )
     bc = shared_matrix_broadcast("embeddings_matrix", sf_dir, spark, emb)
     art = shared_broadcast(
-        "ivfpq_artifacts", sf_dir, spark, lambda: _ivfpq_artifacts(bc)
+        "ivfpq_artifacts", sf_dir, spark, lambda: ivfpq_artifacts(bc)
     )
     ids, Q, assign, codes, cids, C, wids, W = art.value
     new_ids = ids[ids % 10 == 9]
     pdf = pd.DataFrame({"vec_id": new_ids})
 
-    got = pd.concat(list(_ingest_gen(art)(iter([pdf])))).reset_index(
+    got = pd.concat(list(ingest_gen(art)(iter([pdf])))).reset_index(
         drop=True
     )
 
