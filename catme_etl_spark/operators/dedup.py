@@ -28,6 +28,24 @@ oracle-checkable end to end — string hex where lexicographic order is
 enough, integer slices (``texttools.hex_prefix_long``) where the
 algorithm needs arithmetic. Swap ``F.xxhash64`` in production for ~5×
 hash throughput; the algorithms don't change.
+
+Each family's kernel is written once and every consumer calls it:
+
+- **SimHash**: ``_simhash_band_collisions`` (the banded self-join; the
+  pair builder and the Hamming histogram) and ``_cluster_best`` (the
+  per-component quality pick; cluster representatives and the dedup
+  corpus). Oracles share ``_SIMHASH_CAND_CTES`` and
+  ``_CLUSTER_RANK_CTES``.
+- **winnowing**: ``_winnow_windows`` (char k-gram md5 → window minima),
+  ``_df_capped`` (the stop-fingerprint cap), ``_winnow_shared_pairs``
+  (the inverted-index pair self-join); ``_winnow_live_index`` and the
+  span audit's ``_winnow_position_index`` are built from them. Oracles
+  share ``_WINNOW_WMIN_CTES``.
+- **release ladder**: ``release_manifest(spark, sf_dir, drop_mods)`` is
+  the one manifest builder (capstone, diff, gate, pin, retention, bias,
+  GC and the streaming admission gate); ``drop_mods`` is the train-only
+  slice rule, and ``_slice_pred`` is its oracle form. ``_pin``,
+  ``_manifest_row`` and ``_manifest_digest`` render the pin certificate.
 """
 
 from __future__ import annotations
@@ -738,11 +756,9 @@ _N_SIM_BANDS = 4
 _SIM_BAND_BITS = _SIMHASH_BITS // _N_SIM_BANDS  # 15
 _HAMMING_MAX = 8
 
-
-@query(
-    "dedup_simhash_pairs",
-    oracle=f"""
-    WITH {_simhash_sql_cte()},
+# the banded candidate CTEs every SimHash oracle shares: signatures,
+# 4 x 15-bit band values, DISTINCT band collisions with both signatures
+_SIMHASH_CAND_CTES = f"""{_simhash_sql_cte()},
     bands AS (
       SELECT doc_id, simhash, b,
              (simhash >> ({_SIMHASH_BITS} - {_SIM_BAND_BITS} * (b + 1)))
@@ -754,7 +770,13 @@ _HAMMING_MAX = 8
              a.simhash AS sig_a, b.simhash AS sig_b
       FROM bands a JOIN bands b
         ON a.b = b.b AND a.bval = b.bval AND a.doc_id < b.doc_id
-    )
+    )"""
+
+
+@query(
+    "dedup_simhash_pairs",
+    oracle=f"""
+    WITH {_SIMHASH_CAND_CTES}
     SELECT doc_a, doc_b,
            CAST(bit_count(xor(sig_a, sig_b)) AS BIGINT) AS hamming
     FROM cand
@@ -771,9 +793,13 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                      materialize=True)
 
 
-def _build_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # persist: the candidate self-join reads `banded` twice; without it
-    # the 60-sum signature aggregation runs once per side
+def _simhash_band_collisions(
+    spark: SparkSession, sf_dir: str, persist: bool = False
+) -> DataFrame:
+    """The banded SimHash self-join: one (doc_a, doc_b, sig_a, sig_b)
+    row per band on which doc_a < doc_b collide — a pair colliding on
+    several bands appears once per band. ``persist`` caches the banded
+    table the self-join reads twice."""
     sigs = _simhash_signatures(spark, sf_dir)
     banded = sigs.withColumn(
         "b", F.explode(F.sequence(F.lit(0), F.lit(_N_SIM_BANDS - 1)))
@@ -785,7 +811,9 @@ def _build_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"shiftright(simhash, {_SIMHASH_BITS} - {_SIM_BAND_BITS} * (b + 1))"
             f" & {(1 << _SIM_BAND_BITS) - 1}"
         ),
-    ).persist()
+    )
+    if persist:
+        banded = banded.persist()
     a = banded.select(
         F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"), "b", "bval"
     )
@@ -795,7 +823,17 @@ def _build_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b").alias("b2"),
         F.col("bval").alias("bval2"),
     )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long")
+    return a.join(
+        b,
+        (F.col("b") == F.col("b2"))
+        & (F.col("bval") == F.col("bval2"))
+        & (F.col("doc_a") < F.col("doc_b")),
+    ).select("doc_a", "doc_b", "sig_a", "sig_b")
+
+
+def _build_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # persist: without it the 60-sum signature aggregation runs once
+    # per side of the self-join.
     # Hamming-verify BEFORE deduplicating band collisions: the filter
     # is a narrow per-row op that cuts the candidate stream ~9× here,
     # so the distinct (a shuffle) runs over the small verified set of
@@ -803,13 +841,9 @@ def _build_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same result set: a (doc_a, doc_b) pair determines its signatures,
     # hence its hamming — distinct on the projection is distinct on
     # the pair.
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long")
     return (
-        a.join(
-            b,
-            (F.col("b") == F.col("b2"))
-            & (F.col("bval") == F.col("bval2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
+        _simhash_band_collisions(spark, sf_dir, persist=True)
         .select("doc_a", "doc_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= _HAMMING_MAX)
         .distinct()
@@ -885,19 +919,7 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_cross_source_matrix",
     oracle=f"""
-    WITH {_simhash_sql_cte()},
-    bands AS (
-      SELECT doc_id, simhash, b,
-             (simhash >> ({_SIMHASH_BITS} - {_SIM_BAND_BITS} * (b + 1)))
-               & {(1 << _SIM_BAND_BITS) - 1} AS bval
-      FROM sigs, (SELECT unnest(range({_N_SIM_BANDS})) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.simhash AS sig_a, b.simhash AS sig_b
-      FROM bands a JOIN bands b
-        ON a.b = b.b AND a.bval = b.bval AND a.doc_id < b.doc_id
-    ),
+    WITH {_SIMHASH_CAND_CTES},
     np AS (
       SELECT doc_a, doc_b FROM cand
       WHERE bit_count(xor(sig_a, sig_b)) <= {_HAMMING_MAX}
@@ -950,19 +972,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CC_ORACLE = f"""
-    WITH RECURSIVE {_simhash_sql_cte()},
-    bands AS (
-      SELECT doc_id, simhash, b,
-             (simhash >> ({_SIMHASH_BITS} - {_SIM_BAND_BITS} * (b + 1)))
-               & {(1 << _SIM_BAND_BITS) - 1} AS bval
-      FROM sigs, (SELECT unnest(range({_N_SIM_BANDS})) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.simhash AS sig_a, b.simhash AS sig_b
-      FROM bands a JOIN bands b
-        ON a.b = b.b AND a.bval = b.bval AND a.doc_id < b.doc_id
-    ),
+    WITH RECURSIVE {_SIMHASH_CAND_CTES},
     near_pairs AS (
       SELECT doc_a, doc_b FROM cand
       WHERE bit_count(xor(sig_a, sig_b)) <= {_HAMMING_MAX}
@@ -1207,10 +1217,8 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_cluster_representatives",
-    oracle=f"""
-    WITH comp AS ({_CC_ORACLE}),
+# the oracle's per-component quality rank (rn = 1 is the representative)
+_CLUSTER_RANK_CTES = f"""comp AS ({_CC_ORACLE}),
     q AS (
       SELECT doc_id,
              CAST(len(list_distinct(list_filter(string_split(text, ' '), t -> t <> ''))) AS DOUBLE)
@@ -1227,7 +1235,36 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 ORDER BY ratio DESC, doc_id ASC) AS rn,
              COUNT(*) OVER (PARTITION BY component) AS csize
       FROM j
+    )"""
+
+
+def _cluster_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per connected component: its size ``csize`` and its best member
+    ``_b`` = max(struct(ratio, nid = −doc_id)) — the highest
+    lexical-diversity ratio (distinct / all tokens), ties to the lowest
+    doc_id — as ONE mergeable aggregate over the session-shared CC
+    labels."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = tokens("text")
+    q = d.select(
+        "doc_id",
+        (
+            F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
+        ).alias("ratio"),
     )
+    best = F.max(F.struct(F.col("ratio"), (-F.col("doc_id")).alias("nid")))
+    return (
+        _cc_labels(spark, sf_dir)
+        .join(q, "doc_id")
+        .groupBy("component")
+        .agg(F.count(F.lit(1)).alias("csize"), best.alias("_b"))
+    )
+
+
+@query(
+    "dedup_cluster_representatives",
+    oracle=f"""
+    WITH {_CLUSTER_RANK_CTES}
     SELECT component, csize, doc_id AS rep_doc_id,
            ROUND(ratio, 4) AS rep_ratio,
            csize - 1 AS n_dropped
@@ -1247,22 +1284,8 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     (component, best-so-far) states shuffle, vs the oracle's
     sort-every-partition double window. Singleton clusters are
     excluded: the report lists where deduplication actually bites."""
-    from ..functions.texttools import tokens
-
-    labels = _cc_labels(spark, sf_dir)
-    d = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
-    q = d.select(
-        "doc_id",
-        (
-            F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-        ).alias("ratio"),
-    )
-    best = F.max(F.struct(F.col("ratio"), (-F.col("doc_id")).alias("nid")))
     return (
-        labels.join(q, "doc_id")
-        .groupBy("component")
-        .agg(F.count(F.lit(1)).alias("csize"), best.alias("_b"))
+        _cluster_best(spark, sf_dir)
         .filter(F.col("csize") >= 2)
         .select(
             "component",
@@ -1277,24 +1300,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
 @query(
     "pipeline_dedup_corpus",
     oracle=f"""
-    WITH comp AS ({_CC_ORACLE}),
-    q AS (
-      SELECT doc_id,
-             CAST(len(list_distinct(list_filter(string_split(text, ' '), t -> t <> ''))) AS DOUBLE)
-               / len(list_filter(string_split(text, ' '), t -> t <> '')) AS ratio
-      FROM documents
-    ),
-    j AS (
-      SELECT comp.component, comp.doc_id, q.ratio
-      FROM comp JOIN q USING (doc_id)
-    ),
-    r AS (
-      SELECT *,
-             ROW_NUMBER() OVER (PARTITION BY component
-                                ORDER BY ratio DESC, doc_id ASC) AS rn,
-             COUNT(*) OVER (PARTITION BY component) AS csize
-      FROM j
-    )
+    WITH {_CLUSTER_RANK_CTES}
     SELECT d.doc_id, r.component, r.csize, d.source, d.lang,
            LENGTH(d.text) AS text_chars
     FROM r JOIN documents d USING (doc_id)
@@ -1321,26 +1327,10 @@ def pipeline_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id. The surviving corpus then streams through the 2PC
     ``sheetdir`` sink (tests/test_round5_ops.py proves the
     commit-manifest and abort paths on exactly this output)."""
-    from ..functions.texttools import tokens
-
-    labels = _cc_labels(spark, sf_dir)
+    survivors = _cluster_best(spark, sf_dir).select(
+        "component", "csize", (-F.col("_b.nid")).alias("doc_id")
+    )
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
-    q = d.select(
-        "doc_id",
-        (
-            F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-        ).alias("ratio"),
-    )
-    best = F.max(F.struct(F.col("ratio"), (-F.col("doc_id")).alias("nid")))
-    survivors = (
-        labels.join(q, "doc_id")
-        .groupBy("component")
-        .agg(F.count(F.lit(1)).alias("csize"), best.alias("_b"))
-        .select(
-            "component", "csize", (-F.col("_b.nid")).alias("doc_id")
-        )
-    )
     return survivors.join(d, "doc_id").select(
         "doc_id",
         "component",
@@ -1850,19 +1840,7 @@ def sim_graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_simhash_hamming_histogram",
     oracle=f"""
-    WITH {_simhash_sql_cte()},
-    bands AS (
-      SELECT doc_id, simhash, b,
-             (simhash >> ({_SIMHASH_BITS} - {_SIM_BAND_BITS} * (b + 1)))
-               & {(1 << _SIM_BAND_BITS) - 1} AS bval
-      FROM sigs, (SELECT unnest(range({_N_SIM_BANDS})) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.simhash AS sig_a, b.simhash AS sig_b
-      FROM bands a JOIN bands b
-        ON a.b = b.b AND a.bval = b.bval AND a.doc_id < b.doc_id
-    )
+    WITH {_SIMHASH_CAND_CTES}
     SELECT CAST(bit_count(xor(sig_a, sig_b)) AS BIGINT) AS hamming,
            CAST(COUNT(*) AS BIGINT) AS n_pairs
     FROM cand GROUP BY hamming
@@ -1878,39 +1856,13 @@ def dedup_simhash_hamming_histogram(spark: SparkSession, sf_dir: str) -> DataFra
     hand-tunes, reported as a certified distribution instead of a
     guess.
 
-    Same banded self-join as the pair builder; the histogram
+    The pair builder's banded self-join (`_simhash_band_collisions`,
+    without its persist); the histogram
     aggregates the collision stream down to ≤ 61 rows, so the extra
     cost over the pair query is one tiny hash-agg (and no distinct-
     then-filter inversion, since every distance is kept).
     """
-    sigs = _simhash_signatures(spark, sf_dir)
-    banded = sigs.withColumn(
-        "b", F.explode(F.sequence(F.lit(0), F.lit(_N_SIM_BANDS - 1)))
-    ).withColumn(
-        "bval",
-        F.expr(
-            f"shiftright(simhash, {_SIMHASH_BITS} - {_SIM_BAND_BITS} * (b + 1))"
-            f" & {(1 << _SIM_BAND_BITS) - 1}"
-        ),
-    )
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"),
-        "b", "bval",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"),
-        F.col("b").alias("b2"), F.col("bval").alias("bval2"),
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("b") == F.col("b2"))
-            & (F.col("bval") == F.col("bval2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
-        .distinct()
-    )
+    cand = _simhash_band_collisions(spark, sf_dir).distinct()
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long")
     return cand.select(hamming.alias("hamming")).groupBy("hamming").agg(
         F.count(F.lit(1)).alias("n_pairs")
@@ -2225,7 +2177,7 @@ dedup_lsh_parameter_planner.__doc__ = dedup_lsh_parameter_planner.__doc__.format
 )
 
 
-# --- Bloom-filter ingest prefilter (pending round-9 debut) ---------------
+# --- Bloom-filter ingest prefilter ----------------------------------------
 # 4096 bits packed into 128 32-bit words (bit index <= 31 keeps every
 # shift exact-int64 on both engines — DuckDB raises on 1::BIGINT << 63),
 # 3 hash functions from disjoint md5 slices.
@@ -2864,11 +2816,63 @@ def pipeline_corpus_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY §2.10) — the capstone above `pipeline_training_export`,
     which packs sequences for a TRAINING RUN, where this signs off a
     CORPUS RELEASE."""
+    return release_manifest(spark, sf_dir)
+
+
+def release_manifest(
+    spark: SparkSession, sf_dir: str, drop_mods: tuple[int, ...] = ()
+) -> DataFrame:
+    """The certified corpus-release manifest (`pipeline_corpus_release`'s
+    rows) over the session-shared artifacts: documents, decon
+    survivors, near-dup pairs (Jaccard >= 0.5) and survivor token
+    stats. ``drop_mods`` leaves out a train-only ingest slice, which is
+    how a PRIOR release is re-derived: survivors with doc_id % 7 in
+    ``drop_mods`` go, and so do the train-split documents with it
+    (`_slice_pred` is the oracle's form of the same rule). The slice is
+    train-only, so the eval splits, the decon gram set and the pairs
+    are the same with or without it, and no artifact is rebuilt."""
+    from .sampling import hash_bucket
+
     d = load_table(spark, sf_dir, "documents")
     surv0 = _decon_survivors(spark, sf_dir)
+    if drop_mods:
+        sliced = (F.col("doc_id") % 7).isin(*drop_mods)
+        d = d.filter(~(sliced & (hash_bucket(F.col("doc_id"), 100) < 80)))
+        surv0 = surv0.filter(~sliced)
     nd = _neardup_pairs_05(spark, sf_dir)
     return _release_manifest(
         d, surv0, nd, tok_stats=_survivor_token_stats(spark, sf_dir)
+    )
+
+
+def _manifest_row():
+    """A manifest row's canonical rendering: source and the eight
+    integer columns verbatim, '|'-joined — the bytes a pin certificate
+    hashes."""
+    return F.concat_ws(
+        "|",
+        "source",
+        *(
+            F.col(c).cast("string")
+            for c in (
+                "n_train_raw",
+                "n_dropped_decon",
+                "n_dropped_neardup",
+                "n_train_final",
+                "share_before_ppm",
+                "share_after_ppm",
+                "passing_tokens",
+                "alloc_tokens",
+            )
+        ),
+    )
+
+
+def _manifest_digest():
+    """Aggregate: md5 over the canonical rows in column ``r``, sorted
+    ascending and newline-joined — a pin certificate's manifest_md5."""
+    return F.md5(
+        F.concat_ws("\n", F.array_sort(F.collect_list("r"))).cast("binary")
     )
 
 
@@ -3079,6 +3083,31 @@ WINNOW_T = 2  # pairs must share >= T distinct fingerprints
 WINNOW_DF_CAP = 64  # stop-fingerprint cap: a k-gram in > CAP docs is
 # boilerplate, not evidence of copying (the stop-shingle device)
 
+# the oracle's per-doc window minima (doc_id, i, fp) every winnowing
+# oracle starts from
+_WINNOW_WMIN_CTES = f"""docs AS (
+      SELECT doc_id, text, len(text) - {WINNOW_K} + 1 AS ng
+      FROM documents WHERE len(text) >= {WINNOW_K}
+    ),
+    grams AS (
+      SELECT doc_id, ng, UNNEST(range(ng)) AS i FROM docs
+    ),
+    hashed AS (
+      SELECT g.doc_id, g.ng, g.i,
+             {sql_hex_long(
+                 f"md5(substring(d.text, g.i + 1, {WINNOW_K}))", 14, 1
+             )} AS h
+      FROM grams g JOIN docs d USING (doc_id)
+    ),
+    wmin AS (
+      SELECT doc_id, i,
+             MIN(h) OVER (PARTITION BY doc_id ORDER BY i
+                          ROWS BETWEEN CURRENT ROW
+                          AND {WINNOW_W - 1} FOLLOWING) AS fp
+      FROM hashed
+      QUALIFY i <= ng - {WINNOW_W}
+    )"""
+
 
 def _winnow_live_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped winnowing fingerprint index (doc_id, fp) — one
@@ -3101,6 +3130,16 @@ def _winnow_live_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _winnow_live_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _df_capped(
+        _winnow_windows(spark, sf_dir).select("doc_id", "fp").distinct()
+    )
+
+
+def _winnow_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, i, fp): the minimum of the WINNOW_W k-gram hashes
+    (56-bit md5 slices of WINNOW_K-char k-grams) in the full window
+    starting at char i — one narrow char-position pass, then a per-doc
+    window. Docs shorter than WINNOW_K chars have no k-gram."""
     from pyspark.sql import Window
 
     d = (
@@ -3125,7 +3164,7 @@ def _winnow_live_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h"),
         )
     )
-    wmin = (
+    return (
         hashed.withColumn(
             "fp",
             F.min("h").over(
@@ -3135,43 +3174,41 @@ def _winnow_live_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .filter(F.col("i") <= F.col("ng") - WINNOW_W)
-        .select("doc_id", "fp")
-        .distinct()
+        .select("doc_id", "i", "fp")
     )
+
+
+def _df_capped(idx: DataFrame) -> DataFrame:
+    """The stop-fingerprint cap: keep the rows of a one-row-per-(doc,
+    fingerprint) index whose fingerprint occurs in at most
+    WINNOW_DF_CAP documents."""
     live = (
-        wmin.groupBy("fp")
+        idx.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") <= WINNOW_DF_CAP)
         .select("fp")
     )
-    return wmin.join(live, "fp")
+    return idx.join(live, "fp")
+
+
+def _winnow_shared_pairs(idx: DataFrame) -> DataFrame:
+    """(doc_a < doc_b, n_shared_fp): the inverted-index self-join over
+    the (doc_id, fp) index, keeping pairs that share at least
+    WINNOW_T fingerprints."""
+    return (
+        idx.select("fp", F.col("doc_id").alias("doc_a"))
+        .join(idx.select("fp", F.col("doc_id").alias("doc_b")), "fp")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_shared_fp"))
+        .filter(F.col("n_shared_fp") >= WINNOW_T)
+    )
 
 
 @query(
     "dedup_winnowing_fingerprint_pairs",
     oracle=f"""
-    WITH docs AS (
-      SELECT doc_id, text, len(text) - {WINNOW_K} + 1 AS ng
-      FROM documents WHERE len(text) >= {WINNOW_K}
-    ),
-    grams AS (
-      SELECT doc_id, ng, UNNEST(range(ng)) AS i FROM docs
-    ),
-    hashed AS (
-      SELECT g.doc_id, g.ng, g.i,
-             {sql_hex_long(
-                 f"md5(substring(d.text, g.i + 1, {WINNOW_K}))", 14, 1
-             )} AS h
-      FROM grams g JOIN docs d USING (doc_id)
-    ),
-    wmin AS (
-      SELECT doc_id, i,
-             MIN(h) OVER (PARTITION BY doc_id ORDER BY i
-                          ROWS BETWEEN CURRENT ROW
-                          AND {WINNOW_W - 1} FOLLOWING) AS fp
-      FROM hashed
-      QUALIFY i <= ng - {WINNOW_W}
-    ),
+    WITH {_WINNOW_WMIN_CTES},
     fp AS (SELECT DISTINCT doc_id, fp FROM wmin),
     live AS (
       SELECT fp FROM fp GROUP BY fp
@@ -3224,43 +3261,13 @@ def dedup_winnowing_fingerprint_pairs(
 
     Reference basis: none; contract dedup family (SURVEY §2.10 F8/F9
     extension) — the char-level rung under the token-level ladder."""
-    idx = _winnow_live_index(spark, sf_dir)
-    pairs = (
-        idx.select("fp", F.col("doc_id").alias("doc_a"))
-        .join(idx.select("fp", F.col("doc_id").alias("doc_b")), "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared_fp"))
-        .filter(F.col("n_shared_fp") >= WINNOW_T)
-    )
-    return pairs
+    return _winnow_shared_pairs(_winnow_live_index(spark, sf_dir))
 
 
 @query(
     "dedup_winnowing_containment",
     oracle=f"""
-    WITH docs AS (
-      SELECT doc_id, text, len(text) - {WINNOW_K} + 1 AS ng
-      FROM documents WHERE len(text) >= {WINNOW_K}
-    ),
-    grams AS (
-      SELECT doc_id, ng, UNNEST(range(ng)) AS i FROM docs
-    ),
-    hashed AS (
-      SELECT g.doc_id, g.ng, g.i,
-             {sql_hex_long(
-                 f"md5(substring(d.text, g.i + 1, {WINNOW_K}))", 14, 1
-             )} AS h
-      FROM grams g JOIN docs d USING (doc_id)
-    ),
-    wmin AS (
-      SELECT doc_id, i,
-             MIN(h) OVER (PARTITION BY doc_id ORDER BY i
-                          ROWS BETWEEN CURRENT ROW
-                          AND {WINNOW_W - 1} FOLLOWING) AS fp
-      FROM hashed
-      QUALIFY i <= ng - {WINNOW_W}
-    ),
+    WITH {_WINNOW_WMIN_CTES},
     fp AS (SELECT DISTINCT doc_id, fp FROM wmin),
     live AS (
       SELECT fp FROM fp GROUP BY fp
@@ -3330,14 +3337,7 @@ def dedup_winnowing_containment(
     sizes = idx.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("nf")
     )
-    pairs = (
-        idx.select("fp", F.col("doc_id").alias("doc_a"))
-        .join(idx.select("fp", F.col("doc_id").alias("doc_b")), "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared_fp"))
-        .filter(F.col("n_shared_fp") >= WINNOW_T)
-    )
+    pairs = _winnow_shared_pairs(idx)
     ct = (
         pairs.join(
             sizes.select(F.col("doc_id").alias("doc_a"), F.col("nf").alias("na")),
@@ -3370,28 +3370,7 @@ def dedup_winnowing_containment(
 
 
 _WINNOW_CLUSTERS_ORACLE = f"""
-    WITH RECURSIVE docs AS (
-      SELECT doc_id, text, len(text) - {WINNOW_K} + 1 AS ng
-      FROM documents WHERE len(text) >= {WINNOW_K}
-    ),
-    grams AS (
-      SELECT doc_id, ng, UNNEST(range(ng)) AS i FROM docs
-    ),
-    hashed AS (
-      SELECT g.doc_id, g.ng, g.i,
-             {sql_hex_long(
-                 f"md5(substring(d.text, g.i + 1, {WINNOW_K}))", 14, 1
-             )} AS h
-      FROM grams g JOIN docs d USING (doc_id)
-    ),
-    wmin AS (
-      SELECT doc_id, i,
-             MIN(h) OVER (PARTITION BY doc_id ORDER BY i
-                          ROWS BETWEEN CURRENT ROW
-                          AND {WINNOW_W - 1} FOLLOWING) AS fp
-      FROM hashed
-      QUALIFY i <= ng - {WINNOW_W}
-    ),
+    WITH RECURSIVE {_WINNOW_WMIN_CTES},
     fp AS (SELECT DISTINCT doc_id, fp FROM wmin),
     live AS (
       SELECT fp FROM fp GROUP BY fp
@@ -3623,14 +3602,25 @@ def _manifest_chain_sql(s: str, pred: str) -> str:
     )"""
 
 
-_DIFF_SLICE_PRED = "NOT (doc_id % 7 = 3 AND split = 'train')"
+def _slice_pred(drop_mods: tuple[int, ...]) -> str:
+    """The oracle's form of `release_manifest`'s train-only slice rule
+    over the ``tagged`` CTE: documents with doc_id % 7 in
+    ``drop_mods`` leave the train split."""
+    if not drop_mods:
+        return "TRUE"
+    hit = f"= {drop_mods[0]}" if len(drop_mods) == 1 else f"IN {drop_mods}"
+    return f"NOT (doc_id % 7 {hit} AND split = 'train')"
 
-# The byte-exact shared head of every release-family oracle (diff, gate;
-# registered as an oracle-prefix artifact below so check_oracle can
-# materialize pairs/ndj/ndu/tagged/eval_g once per local session instead
-# of replaying the LSH build per query — round-11 verdict item #4). The
-# composed oracle strings are UNCHANGED by this factoring; only the
-# local verification protocol reads the registration.
+
+# the diff family's simulated prior release: the doc_id % 7 == 3 slice
+_DIFF_SLICE_MODS = (3,)
+_DIFF_SLICE_PRED = _slice_pred(_DIFF_SLICE_MODS)
+
+# The byte-exact shared head of every release-family oracle, registered
+# as an oracle-prefix artifact below so check_oracle can materialize
+# pairs/ndj/ndu/tagged/eval_g once per local session instead of
+# replaying the LSH build per query; only the local verification
+# protocol reads the registration.
 _RELEASE_HEAD_CTES = f"""{_MINHASH_CTES},
     ndj AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.5),
     ndu AS (SELECT doc_a AS d, doc_b AS o FROM ndj
@@ -3706,23 +3696,8 @@ def pipeline_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: none; contract training-data pipeline family
     (SURVEY §2.10) — the monitoring rung above
     `pipeline_corpus_release`."""
-    from .sampling import hash_bucket
-
-    d = load_table(spark, sf_dir, "documents")
-    surv0 = _decon_survivors(spark, sf_dir)
-    nd = _neardup_pairs_05(spark, sf_dir)
-    in_slice = (F.col("doc_id") % 7 == 3) & (
-        hash_bucket(F.col("doc_id"), 100) < 80
-    )
-    man_b = _release_manifest(
-        d, surv0, nd, tok_stats=_survivor_token_stats(spark, sf_dir)
-    )
-    man_a = _release_manifest(
-        d.filter(~in_slice),
-        surv0.filter(~(F.col("doc_id") % 7 == 3)),
-        nd,
-        tok_stats=_survivor_token_stats(spark, sf_dir),
-    )
+    man_b = release_manifest(spark, sf_dir)
+    man_a = release_manifest(spark, sf_dir, _DIFF_SLICE_MODS)
     a = man_a.select(
         "source",
         F.col("n_train_raw").alias("raw_a"),
@@ -3811,12 +3786,7 @@ def quality_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: none; contract training-data pipeline family
     (SURVEY §2.10) — the decision rung above the capstone, beside the
     release-diff monitor."""
-    d = load_table(spark, sf_dir, "documents")
-    surv0 = _decon_survivors(spark, sf_dir)
-    nd = _neardup_pairs_05(spark, sf_dir)
-    man = _release_manifest(
-        d, surv0, nd, tok_stats=_survivor_token_stats(spark, sf_dir)
-    )
+    man = release_manifest(spark, sf_dir)
     drift = F.abs(F.col("share_after_ppm") - F.col("share_before_ppm"))
     return man.agg(
         F.count(F.lit(1)).cast("long").alias("n_sources"),
@@ -3837,7 +3807,7 @@ def quality_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: release PIN / REPRODUCE (the audit rung above
+# Training-data release family: release PIN / REPRODUCE (the audit rung above
 # the release diff).
 # ---------------------------------------------------------------------------
 
@@ -3899,51 +3869,30 @@ def pipeline_release_pin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference basis: none; contract training-data pipeline family
     (SURVEY §2.10)."""
-    from .sampling import hash_bucket
-
-    d = load_table(spark, sf_dir, "documents")
-    surv0 = _decon_survivors(spark, sf_dir)
-    nd = _neardup_pairs_05(spark, sf_dir)
-    in_slice = (F.col("doc_id") % 7 == 3) & (
-        hash_bucket(F.col("doc_id"), 100) < 80
-    )
-    man = _release_manifest(
-        d.filter(~in_slice),
-        surv0.filter(~(F.col("doc_id") % 7 == 3)),
-        nd,
-        tok_stats=_survivor_token_stats(spark, sf_dir),
-    )
-    canon = man.select(
-        F.concat_ws(
-            "|",
-            "source",
-            F.col("n_train_raw").cast("string"),
-            F.col("n_dropped_decon").cast("string"),
-            F.col("n_dropped_neardup").cast("string"),
-            F.col("n_train_final").cast("string"),
-            F.col("share_before_ppm").cast("string"),
-            F.col("share_after_ppm").cast("string"),
-            F.col("passing_tokens").cast("string"),
-            F.col("alloc_tokens").cast("string"),
-        ).alias("r"),
-        "n_train_final",
-        "alloc_tokens",
-    )
-    return canon.agg(
+    return _pin(release_manifest(spark, sf_dir, _DIFF_SLICE_MODS)).select(
         F.lit(_PIN_RELEASE_ID).alias("release_id"),
+        "n_sources",
+        "total_final",
+        "total_alloc",
+        "manifest_md5",
+    )
+
+
+def _pin(man: DataFrame) -> DataFrame:
+    """A manifest's one-row pin certificate: n_sources, total_final,
+    total_alloc and manifest_md5 over its canonical rows."""
+    return man.select(
+        _manifest_row().alias("r"), "n_train_final", "alloc_tokens"
+    ).agg(
         F.count(F.lit(1)).cast("long").alias("n_sources"),
         F.sum("n_train_final").cast("long").alias("total_final"),
         F.sum("alloc_tokens").cast("long").alias("total_alloc"),
-        F.md5(
-            F.concat_ws("\n", F.array_sort(F.collect_list("r"))).cast(
-                "binary"
-            )
-        ).alias("manifest_md5"),
+        _manifest_digest().alias("manifest_md5"),
     )
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: winnowing cross-source CONTAINMENT MATRIX.
+# Winnowing family: cross-source CONTAINMENT MATRIX.
 # ---------------------------------------------------------------------------
 
 _WINNOW_MATRIX_ORACLE = f"""
@@ -4078,16 +4027,15 @@ def dedup_winnowing_source_matrix(
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: release RETENTION LEDGER (the provenance rung
-# above the pin certificate — round-12 verdict item #8).
+# Training-data release family: release RETENTION LEDGER (the provenance rung
+# above the pin certificate).
 # ---------------------------------------------------------------------------
 
-_RETENTION_PREDS = [
-    (1, "rel-hist-train-docid-mod7-ne-3-5",
-     "NOT (doc_id % 7 IN (3, 5) AND split = 'train')"),
-    (2, "rel-prior-train-docid-mod7-ne-3",
-     "NOT (doc_id % 7 = 3 AND split = 'train')"),
-    (3, "rel-current-full", "TRUE"),
+# (seq, release id, train-only slice left out of that release)
+_RETENTION_RELEASES = [
+    (1, "rel-hist-train-docid-mod7-ne-3-5", (3, 5)),
+    (2, "rel-prior-train-docid-mod7-ne-3", (3,)),
+    (3, "rel-current-full", ()),
 ]
 
 _RETENTION_DRIFT_PPM = 20000  # the diff family's alert threshold
@@ -4121,9 +4069,9 @@ _RETENTION_CANON = """
 # oracle string itself is reconstructed byte-identically, so the
 # driver still runs a fully self-contained query.
 _RETENTION_CHAINS_PREFIX = f"""WITH {_RELEASE_HEAD_CTES},
-    {_manifest_chain_sql("x", _RETENTION_PREDS[0][2])},
-    {_manifest_chain_sql("p", _RETENTION_PREDS[1][2])},
-    {_manifest_chain_sql("c", _RETENTION_PREDS[2][2])}"""
+    {_manifest_chain_sql("x", _slice_pred(_RETENTION_RELEASES[0][2]))},
+    {_manifest_chain_sql("p", _slice_pred(_RETENTION_RELEASES[1][2]))},
+    {_manifest_chain_sql("c", _slice_pred(_RETENTION_RELEASES[2][2]))}"""
 
 _RETENTION_ORACLE = (
     "\n    "
@@ -4145,7 +4093,7 @@ _RETENTION_ORACLE = (
     )
     SELECT * FROM (
       SELECT CAST(1 AS BIGINT) AS seq,
-             '{_RETENTION_PREDS[0][1]}' AS release_id,
+             '{_RETENTION_RELEASES[0][1]}' AS release_id,
              n_sources, total_final, total_alloc, manifest_md5,
              (SELECT drift FROM dhp) AS drift_vs_next_ppm,
              CAST(CASE WHEN (SELECT drift FROM dhp)
@@ -4156,13 +4104,13 @@ _RETENTION_ORACLE = (
              END AS reason
       FROM pinx
       UNION ALL
-      SELECT CAST(2 AS BIGINT), '{_RETENTION_PREDS[1][1]}',
+      SELECT CAST(2 AS BIGINT), '{_RETENTION_RELEASES[1][1]}',
              n_sources, total_final, total_alloc, manifest_md5,
              (SELECT drift FROM dpc),
              CAST(1 AS BIGINT), 'rollback-window'
       FROM pinp
       UNION ALL
-      SELECT CAST(3 AS BIGINT), '{_RETENTION_PREDS[2][1]}',
+      SELECT CAST(3 AS BIGINT), '{_RETENTION_RELEASES[2][1]}',
              n_sources, total_final, total_alloc, manifest_md5,
              CAST(0 AS BIGINT), CAST(1 AS BIGINT), 'head'
       FROM pinc
@@ -4208,58 +4156,10 @@ def pipeline_release_retention(
 
     Reference basis: none; contract training-data pipeline family
     (SURVEY §2.10)."""
-    from .sampling import hash_bucket
-
-    d = load_table(spark, sf_dir, "documents")
-    surv0 = _decon_survivors(spark, sf_dir)
-    nd = _neardup_pairs_05(spark, sf_dir)
-    train = hash_bucket(F.col("doc_id"), 100) < 80
-
-    def man_for(mods):
-        if not mods:
-            return _release_manifest(
-        d, surv0, nd, tok_stats=_survivor_token_stats(spark, sf_dir)
-    )
-        sl = F.col("doc_id") % 7
-        hit = sl.isin(mods) & train
-        return _release_manifest(
-            d.filter(~hit),
-            surv0.filter(~(sl.isin(mods))),
-            nd,
-            tok_stats=_survivor_token_stats(spark, sf_dir),
-        )
-
-    mans = [man_for([3, 5]), man_for([3]), man_for([])]
-
-    def pin(man, seq, rid):
-        canon = man.select(
-            F.concat_ws(
-                "|",
-                "source",
-                F.col("n_train_raw").cast("string"),
-                F.col("n_dropped_decon").cast("string"),
-                F.col("n_dropped_neardup").cast("string"),
-                F.col("n_train_final").cast("string"),
-                F.col("share_before_ppm").cast("string"),
-                F.col("share_after_ppm").cast("string"),
-                F.col("passing_tokens").cast("string"),
-                F.col("alloc_tokens").cast("string"),
-            ).alias("r"),
-            "n_train_final",
-            "alloc_tokens",
-        )
-        return canon.agg(
-            F.lit(seq).cast("long").alias("seq"),
-            F.lit(rid).alias("release_id"),
-            F.count(F.lit(1)).cast("long").alias("n_sources"),
-            F.sum("n_train_final").cast("long").alias("total_final"),
-            F.sum("alloc_tokens").cast("long").alias("total_alloc"),
-            F.md5(
-                F.concat_ws("\n", F.array_sort(F.collect_list("r"))).cast(
-                    "binary"
-                )
-            ).alias("manifest_md5"),
-        )
+    mans = [
+        release_manifest(spark, sf_dir, mods)
+        for _, _, mods in _RETENTION_RELEASES
+    ]
 
     def drift(ma, mb):
         a = ma.select("source", F.col("share_after_ppm").alias("sa"))
@@ -4281,8 +4181,15 @@ def pipeline_release_retention(
 
     d12, d23 = drift(mans[0], mans[1]), drift(mans[1], mans[2])
     rows = []
-    for i, (seq, rid, _pred) in enumerate(_RETENTION_PREDS):
-        p = pin(mans[i], seq, rid)
+    for i, (seq, rid, _mods) in enumerate(_RETENTION_RELEASES):
+        p = _pin(mans[i]).select(
+            F.lit(seq).cast("long").alias("seq"),
+            F.lit(rid).alias("release_id"),
+            "n_sources",
+            "total_final",
+            "total_alloc",
+            "manifest_md5",
+        )
         if seq == 1:
             milestone = F.col("drift") > _RETENTION_DRIFT_PPM
             p = p.crossJoin(F.broadcast(d12)).select(
@@ -4320,7 +4227,7 @@ def pipeline_release_retention(
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: DEDUP SOURCE-BIAS AUDIT (does the scrub fall
+# Training-data release family: DEDUP SOURCE-BIAS AUDIT (does the scrub fall
 # evenly? — the selection-bias read of the release manifest).
 # ---------------------------------------------------------------------------
 
@@ -4391,12 +4298,7 @@ def quality_dedup_source_bias(
     Reference basis: none; contract training-data pipeline family
     (SURVEY §2.10) — the governance rung beside `quality_release_gate`
     and `pipeline_release_diff`."""
-    d = load_table(spark, sf_dir, "documents")
-    surv0 = _decon_survivors(spark, sf_dir)
-    nd = _neardup_pairs_05(spark, sf_dir)
-    man = _release_manifest(
-        d, surv0, nd, tok_stats=_survivor_token_stats(spark, sf_dir)
-    )
+    man = release_manifest(spark, sf_dir)
     g = man.agg(
         F.sum("n_train_raw").cast("long").alias("traw"),
         F.sum("n_dropped_decon").cast("long").alias("tdec"),
@@ -4437,7 +4339,7 @@ def quality_dedup_source_bias(
 
 
 # ---------------------------------------------------------------------------
-# Round-15 debut queue: PAGERANK over the similarity graph (the
+# Similarity-graph family: PAGERANK over the similarity graph (the
 # iterative-algorithm rung beside the one-shot graph audits — degree
 # histogram, triangles, connected components).
 # ---------------------------------------------------------------------------
@@ -4581,9 +4483,9 @@ sim_graph_pagerank_iter.__doc__ = sim_graph_pagerank_iter.__doc__.format(
 
 
 # ---------------------------------------------------------------------------
-# Round-15 debut queue: REPEATED-SPAN AUDIT (substring-level dedup —
-# WHERE the copied text sits, the localization rung under the
-# winnowing pair/containment/cluster reports).
+# Winnowing family: REPEATED-SPAN AUDIT (substring-level dedup — WHERE the
+# copied text sits, the localization rung under the winnowing
+# pair/containment/cluster reports).
 # ---------------------------------------------------------------------------
 
 _SPAN_GAP = WINNOW_K + WINNOW_W  # stitch tolerance: consecutive
@@ -4593,28 +4495,7 @@ _SPAN_MIN_FPS = 2  # a 1-fingerprint diagonal is collision noise
 _SPAN_TOP = 15
 
 _SPAN_ORACLE = f"""
-    WITH docs AS (
-      SELECT doc_id, text, len(text) - {WINNOW_K} + 1 AS ng
-      FROM documents WHERE len(text) >= {WINNOW_K}
-    ),
-    grams AS (
-      SELECT doc_id, ng, UNNEST(range(ng)) AS i FROM docs
-    ),
-    hashed AS (
-      SELECT g.doc_id, g.ng, g.i,
-             {sql_hex_long(
-                 f"md5(substring(d.text, g.i + 1, {WINNOW_K}))", 14, 1
-             )} AS h
-      FROM grams g JOIN docs d USING (doc_id)
-    ),
-    wmin AS (
-      SELECT doc_id, i,
-             MIN(h) OVER (PARTITION BY doc_id ORDER BY i
-                          ROWS BETWEEN CURRENT ROW
-                          AND {WINNOW_W - 1} FOLLOWING) AS fp
-      FROM hashed
-      QUALIFY i <= ng - {WINNOW_W}
-    ),
+    WITH {_WINNOW_WMIN_CTES},
     pos AS (
       SELECT doc_id, fp, CAST(MIN(i) AS BIGINT) AS i
       FROM wmin GROUP BY 1, 2
@@ -4658,6 +4539,16 @@ _SPAN_ORACLE = f"""
     """
 
 
+def _winnow_position_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The df-capped winnowing index with positions: (fp, doc_id, i),
+    i the FIRST window per (doc, fingerprint). Its (doc_id, fp) set is
+    `_winnow_live_index`'s."""
+    pos = _winnow_windows(spark, sf_dir).groupBy("doc_id", "fp").agg(
+        F.min("i").cast("long").alias("i")
+    )
+    return _df_capped(pos)
+
+
 @query("dedup_repeated_span_audit", oracle=_SPAN_ORACLE)
 def dedup_repeated_span_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REPEATED-SPAN LOCALIZATION — the substring-level rung the
@@ -4696,52 +4587,7 @@ def dedup_repeated_span_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dedup_winnowing_fingerprint_pairs`."""
     from pyspark.sql import Window
 
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id", "text", (F.length("text") - WINNOW_K + 1).alias("ng")
-        )
-        .filter(F.col("ng") >= 1)
-    )
-    hashed = (
-        fan_out(d, spark)
-        .select(
-            "doc_id",
-            "ng",
-            "text",
-            F.posexplode(F.expr("sequence(0, ng - 1)")).alias("_p", "i"),
-        )
-        .select(
-            "doc_id",
-            "ng",
-            "i",
-            hex_prefix_long(
-                F.md5(F.expr(f"substring(text, i + 1, {WINNOW_K})")), 14, 1
-            ).alias("h"),
-        )
-    )
-    wmin = (
-        hashed.withColumn(
-            "fp",
-            F.min("h").over(
-                Window.partitionBy("doc_id")
-                .orderBy("i")
-                .rowsBetween(0, WINNOW_W - 1)
-            ),
-        )
-        .filter(F.col("i") <= F.col("ng") - WINNOW_W)
-        .select("doc_id", "i", "fp")
-    )
-    pos = wmin.groupBy("doc_id", "fp").agg(
-        F.min("i").cast("long").alias("i")
-    )
-    live = (
-        pos.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= WINNOW_DF_CAP)
-        .select("fp")
-    )
-    idx = pos.join(live, "fp")
+    idx = _winnow_position_index(spark, sf_dir)
     a = idx.select(
         "fp", F.col("doc_id").alias("doc_a"), F.col("i").alias("ia")
     )
@@ -4794,12 +4640,11 @@ def dedup_repeated_span_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CROSS-RELEASE RETENTION GC (round-13 verdict candidate (b)): apply
-# the retention verdict to a PERSISTED manifest store — delete expired
+# Training-data release family: CROSS-RELEASE RETENTION GC — apply the
+# retention verdict to a PERSISTED manifest store: delete expired
 # releases' artifacts and certify the survivors still reproduce their
-# pin certificates from the stored bytes. Test-driven
-# (tests/test_round15_pending.py), the same discipline as the
-# compaction storage leg and the r11 2PC export leg.
+# pin certificates from the stored bytes. Not registered (it writes);
+# tests/test_round15_pending.py drives it.
 # ---------------------------------------------------------------------------
 
 
@@ -4828,48 +4673,14 @@ def pipeline_release_gc(
     Reference basis: none; contract training-data pipeline family
     (SURVEY §2.10) — the storage rung under the retention ledger."""
     from ..sources.pydatasource import SheetDirDataSource
-    from .sampling import hash_bucket
 
     spark.dataSource.register(SheetDirDataSource)
     verdict = pipeline_release_retention(spark, sf_dir)
 
-    d = load_table(spark, sf_dir, "documents")
-    surv0 = _decon_survivors(spark, sf_dir)
-    nd = _neardup_pairs_05(spark, sf_dir)
-    train = hash_bucket(F.col("doc_id"), 100) < 80
-
-    def man_for(mods):
-        if not mods:
-            return _release_manifest(
-        d, surv0, nd, tok_stats=_survivor_token_stats(spark, sf_dir)
-    )
-        sl = F.col("doc_id") % 7
-        hit = sl.isin(mods) & train
-        return _release_manifest(
-            d.filter(~hit),
-            surv0.filter(~(sl.isin(mods))),
-            nd,
-            tok_stats=_survivor_token_stats(spark, sf_dir),
-        )
-
     exports = None
-    for mods, (_seq, rid, _pred) in zip(
-        ([3, 5], [3], []), _RETENTION_PREDS
-    ):
-        rows = man_for(mods).select(
-            F.lit(rid).alias("release_id"),
-            F.concat_ws(
-                "|",
-                "source",
-                F.col("n_train_raw").cast("string"),
-                F.col("n_dropped_decon").cast("string"),
-                F.col("n_dropped_neardup").cast("string"),
-                F.col("n_train_final").cast("string"),
-                F.col("share_before_ppm").cast("string"),
-                F.col("share_after_ppm").cast("string"),
-                F.col("passing_tokens").cast("string"),
-                F.col("alloc_tokens").cast("string"),
-            ).alias("r"),
+    for _seq, rid, mods in _RETENTION_RELEASES:
+        rows = release_manifest(spark, sf_dir, mods).select(
+            F.lit(rid).alias("release_id"), _manifest_row().alias("r")
         )
         exports = rows if exports is None else exports.unionByName(rows)
     exports.write.format("sheetdir").mode("overwrite").save(store_dir)
@@ -4894,11 +4705,7 @@ def pipeline_release_gc(
     )
     dig = post.groupBy("s_rid").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_store"),
-        F.md5(
-            F.concat_ws("\n", F.array_sort(F.collect_list("r"))).cast(
-                "binary"
-            )
-        ).alias("store_md5"),
+        _manifest_digest().alias("store_md5"),
     )
     ok = (
         (F.col("retained") == 1)

@@ -2387,9 +2387,9 @@ def events_changepoint_two_level(
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: SESSION-SCOPED FUNNEL ATTRIBUTION (the session
-# sibling of the attribution trio, over the gap-session windows the
-# streaming family certified).
+# Attribution family: SESSION-SCOPED FUNNEL ATTRIBUTION (the session sibling
+# of the attribution trio, over the gap-session windows the streaming family
+# certified).
 # ---------------------------------------------------------------------------
 
 _SESSION_GAP_US = 1_800_000_000  # 30-minute gap — matches the C5/C6 op

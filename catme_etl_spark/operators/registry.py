@@ -45,17 +45,17 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # ---------------------------------------------------------------------------
 # Oracle CTE-prefix artifacts (tools/check_oracle.py --materialize).
 #
-# Round-11 verdict "What's wrong #3": release-family oracles replay the
-# same banded-LSH `pairs` build (and the tagged/eval_g head) per query,
-# so a LOCAL verification session re-executes the identical deterministic
-# CTE stack dozens of times while the Spark side materializes its shared
-# artifacts once (`shared_df`). Operators register the EXACT text of a
-# shared WITH-prefix here; check_oracle materializes each prefix's CTEs
-# as DuckDB temp tables once per session and rewrites matching oracles to
-# read them. The rewrite is equivalence-preserving by construction — the
-# prefix is deterministic SQL and the substitution is keyed on byte-exact
-# text — and it NEVER changes what the driver runs: ORACLE strings stay
-# self-contained; only the local tool consumes this registry.
+# Release-family oracles replay the same banded-LSH `pairs` build (and the
+# tagged/eval_g head) per query, so a local `check_oracle` run
+# re-executes the identical deterministic CTE stack dozens of times while
+# the Spark side materializes its shared artifacts once (`shared_df`).
+# Operators register the EXACT text of a shared WITH-prefix here;
+# check_oracle materializes each prefix's CTEs as DuckDB temp tables once
+# per session and rewrites matching oracles to read them. The rewrite is
+# equivalence-preserving by construction — the prefix is deterministic SQL
+# and the substitution is keyed on byte-exact text — and it NEVER changes
+# the Spark jobs or the ORACLE strings, which stay self-contained; only
+# tools/check_oracle.py consumes this registry.
 # ---------------------------------------------------------------------------
 
 ORACLE_CTE_PREFIXES: dict[str, str] = {}

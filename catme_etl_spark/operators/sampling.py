@@ -1534,7 +1534,7 @@ def sample_neyman_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: POST-STRATIFICATION WEIGHTS over the realized
+# Stratified-sampling family: POST-STRATIFICATION WEIGHTS over the realized
 # Neyman draw (allocation -> draw -> weighting).
 # ---------------------------------------------------------------------------
 
@@ -1669,8 +1669,8 @@ def sample_poststrat_weights(
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: IMPORTANCE REWEIGHTING toward a target mix
-# (the weights-side sibling of the temperature/Neyman DRAW ops).
+# Data-mix family: IMPORTANCE REWEIGHTING toward a target mix (the
+# weights-side sibling of the temperature/Neyman DRAW ops).
 # ---------------------------------------------------------------------------
 
 _IMPORTANCE_REWEIGHT_ORACLE = f"""
@@ -1804,10 +1804,9 @@ def sample_importance_reweight(
 
 
 # ---------------------------------------------------------------------------
-# Round-15 debut queue: CURRICULUM SCHEDULE (quality-decile pacing —
-# the ORDER-over-epochs complement of the mix/budget planners, which
-# decide HOW MUCH of each source; this decides WHEN quality tiers
-# enter training).
+# Data-mix family: CURRICULUM SCHEDULE (quality-decile pacing — the
+# ORDER-over-epochs complement of the mix/budget planners, which decide HOW
+# MUCH of each source; this decides WHEN quality tiers enter training).
 # ---------------------------------------------------------------------------
 
 _CURR_EPOCHS = 4

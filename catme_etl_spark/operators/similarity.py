@@ -1387,12 +1387,16 @@ def _int8_topk_against(bc, k: int):
             top = order[:, :k]
             n, kk = top.shape
             rows_idx = np.repeat(np.arange(n), kk)
+            cols = top.ravel()
+            # the masked self column sorts last, so it reaches the
+            # top-k only on a corpus of at most k vectors: drop it there
+            keep = ~self_mask[rows_idx, cols]
             yield pd.DataFrame(
                 {
-                    "query_id": ia[rows_idx],
-                    "rank": np.tile(np.arange(1, kk + 1), n),
-                    "neighbor_id": bids[top].ravel(),
-                    "qdot": dotm[rows_idx, top.ravel()],
+                    "query_id": ia[rows_idx][keep],
+                    "rank": np.tile(np.arange(1, kk + 1), n)[keep],
+                    "neighbor_id": bids[cols][keep],
+                    "qdot": dotm[rows_idx, cols][keep],
                 }
             )
 
@@ -2576,7 +2580,7 @@ sample_coreset_kcenter.__doc__ = sample_coreset_kcenter.__doc__.replace(
 )
 
 
-# k values for the recall-vs-k curve (pending round-9 debut)
+# k values for the recall-vs-k curve
 _K_CURVE = (1, 3, 5)
 
 
@@ -3474,6 +3478,31 @@ INGEST_CTES = f"""
     )"""
 
 
+# the batch's admission verdict (admitted = 1 unless the ADC spread
+# rejects it), and the index membership after admission: the prefix of
+# every oracle that grows the index
+INGEST_ADM_CTES = (
+    INGEST_CTES
+    + f""",
+    adm AS (
+      SELECT b.vec_id, bc.cid,
+             CAST(CASE WHEN st.n_cand IS NULL THEN 1
+                       WHEN {INGEST_REJECT_FACTOR} * st.min_adc * st.n_cand
+                            < st.sum_adc THEN 0
+                       ELSE 1 END AS BIGINT) AS admitted
+      FROM batch b
+      JOIN bcid bc ON bc.query_id = b.vec_id
+      LEFT JOIN st ON st.query_id = b.vec_id
+    )"""
+)
+_MEM_CTES = INGEST_ADM_CTES + """,
+    mem AS MATERIALIZED (
+      SELECT vec_id, cid AS list_id FROM assign WHERE vec_id % 10 <> 9
+      UNION ALL
+      SELECT vec_id, cid AS list_id FROM adm WHERE admitted = 1
+    )"""
+
+
 @query(
     "pipeline_vector_index_ingest",
     oracle=INGEST_CTES
@@ -3537,7 +3566,7 @@ def pipeline_vector_index_ingest(
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: the IVF REBALANCE EXECUTOR (verdict -> action).
+# IVF index family: the IVF REBALANCE EXECUTOR (verdict -> action).
 # ---------------------------------------------------------------------------
 
 _REBALANCE_CTES = (
@@ -4220,28 +4249,13 @@ def sim_ivf_rebalanced_recall(
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: DELETE + COMPACT over the vector index (the
-# lifecycle rung after ingest/maintain/rebalance).
+# IVF index family: DELETE + COMPACT over the vector index (the lifecycle
+# rung after ingest/maintain/rebalance).
 # ---------------------------------------------------------------------------
 
 _DELETE_COMPACT_ORACLE = (
-    INGEST_CTES
+    _MEM_CTES
     + f""",
-    adm AS (
-      SELECT b.vec_id, bc.cid,
-             CAST(CASE WHEN st.n_cand IS NULL THEN 1
-                       WHEN {INGEST_REJECT_FACTOR} * st.min_adc * st.n_cand
-                            < st.sum_adc THEN 0
-                       ELSE 1 END AS BIGINT) AS admitted
-      FROM batch b
-      JOIN bcid bc ON bc.query_id = b.vec_id
-      LEFT JOIN st ON st.query_id = b.vec_id
-    ),
-    mem AS MATERIALIZED (
-      SELECT vec_id, cid AS list_id FROM assign WHERE vec_id % 10 <> 9
-      UNION ALL
-      SELECT vec_id, cid AS list_id FROM adm WHERE admitted = 1
-    ),
     dstat AS (
       SELECT list_id,
              CAST(COUNT(*) AS BIGINT) AS n_before,
@@ -4321,31 +4335,10 @@ def pipeline_vector_index_delete_compact(
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: the COMPACTION EXECUTOR + post-compaction
-# recall re-audit + the lifecycle decision report (closing the index
-# family: probe -> admit -> observe -> rebalance -> retire -> compact
-# -> re-certify).
+# IVF index family: the COMPACTION EXECUTOR + post-compaction recall re-audit
+# + the lifecycle decision report (closing the index family: probe -> admit
+# -> observe -> rebalance -> retire -> compact -> re-certify).
 # ---------------------------------------------------------------------------
-
-_MEM_CTES = (
-    INGEST_CTES
-    + f""",
-    adm AS (
-      SELECT b.vec_id, bc.cid,
-             CAST(CASE WHEN st.n_cand IS NULL THEN 1
-                       WHEN {INGEST_REJECT_FACTOR} * st.min_adc * st.n_cand
-                            < st.sum_adc THEN 0
-                       ELSE 1 END AS BIGINT) AS admitted
-      FROM batch b
-      JOIN bcid bc ON bc.query_id = b.vec_id
-      LEFT JOIN st ON st.query_id = b.vec_id
-    ),
-    mem AS MATERIALIZED (
-      SELECT vec_id, cid AS list_id FROM assign WHERE vec_id % 10 <> 9
-      UNION ALL
-      SELECT vec_id, cid AS list_id FROM adm WHERE admitted = 1
-    )"""
-)
 
 _COMPACTION_ORACLE = (
     _MEM_CTES

@@ -2165,8 +2165,8 @@ def agg_theil_between_within(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: HOOVER (Robin Hood) index — the redistribution
-# rung of the inequality ladder.
+# Inequality family: HOOVER (Robin Hood) index — the redistribution rung of
+# the inequality ladder.
 # ---------------------------------------------------------------------------
 
 _HOOVER_ORACLE = """
@@ -2276,9 +2276,9 @@ def agg_hoover_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: TRIMMED + WINSORIZED MEAN (exact-rank robust
-# location estimates — the robust-stats rung beside the jackknife SE
-# and the IQR fences).
+# Robust-statistics family: TRIMMED + WINSORIZED MEAN (exact-rank robust
+# location estimates — the robust-stats rung beside the jackknife SE and the
+# IQR fences).
 # ---------------------------------------------------------------------------
 
 _TRIM_PCT = 5  # symmetric trim/winsorize fraction, percent per side
@@ -2409,9 +2409,9 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-15 debut queue: SPEARMAN RANK CORRELATION (the rank-statistic
-# rung beside the Pearson moments of `agg_stats_lineitem_by_flag` and
-# the rank tests agg_mann_whitney_u / agg_ks_drift_halves).
+# Rank-statistics family: SPEARMAN RANK CORRELATION (the rank-statistic rung
+# beside the Pearson moments of `agg_stats_lineitem_by_flag` and the rank
+# tests agg_mann_whitney_u / agg_ks_drift_halves).
 # ---------------------------------------------------------------------------
 
 _SPEARMAN_ORACLE = """

@@ -2035,8 +2035,8 @@ def text_source_signature_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: SOURCE-PROFILE COSINE (the pairwise rung above
-# the per-source signature profiles).
+# Source-profile family: SOURCE-PROFILE COSINE (the pairwise rung above the
+# per-source signature profiles).
 # ---------------------------------------------------------------------------
 
 _SIG_COS_K = 25  # wider profile than the top-5 display list: pairwise
@@ -2214,9 +2214,9 @@ def text_source_signature_cosine(
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: INGEST N-GRAM NOVELTY (how much genuinely new
-# text a crawl slice brings — the freshness audit beside the decon
-# scrub, same gram machinery).
+# N-gram family: INGEST N-GRAM NOVELTY (how much genuinely new text a crawl
+# slice brings — the freshness audit beside the decon scrub, same gram
+# machinery).
 # ---------------------------------------------------------------------------
 
 _NOVELTY_K = 8  # DECON_K — the release family's gram resolution
@@ -2352,9 +2352,8 @@ def text_ingest_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-15 debut queue: BPE MERGE CANDIDATES (one tokenizer-induction
-# round — the vocabulary-training step upstream of every token count
-# in the text family).
+# Tokenizer family: BPE MERGE CANDIDATES (one tokenizer-induction round — the
+# vocabulary-training step upstream of every token count in the text family).
 # ---------------------------------------------------------------------------
 
 _BPE_TOP = 20  # merge candidates reported (a trainer takes the argmax;

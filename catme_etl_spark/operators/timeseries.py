@@ -1162,7 +1162,7 @@ def holt_winters_verdict(d: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: ROLLING-ORIGIN BACKTEST of the Holt forecaster.
+# Forecasting family: ROLLING-ORIGIN BACKTEST of the Holt forecaster.
 # ---------------------------------------------------------------------------
 
 _BACKTEST_GUARD = "holt backtest undefined: fewer than 3 observed days"
@@ -1317,9 +1317,9 @@ def ts_forecast_backtest_holt(
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: ROLLING-ORIGIN BACKTEST of the Holt-Winters
-# seasonal forecaster (the seasonal sibling of
-# `ts_forecast_backtest_holt`, same one-pass intermediate-state read).
+# Forecasting family: ROLLING-ORIGIN BACKTEST of the Holt-Winters seasonal
+# forecaster (the seasonal sibling of `ts_forecast_backtest_holt`, same
+# one-pass intermediate-state read).
 # ---------------------------------------------------------------------------
 
 _HW_BT_GUARD = (

@@ -467,8 +467,8 @@ def window_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: USER LIFECYCLE STAGES (the longitudinal rung
-# above gaps-islands / retention cohorts).
+# Cohort family: USER LIFECYCLE STAGES (the longitudinal rung above
+# gaps-islands / retention cohorts).
 # ---------------------------------------------------------------------------
 
 _LIFECYCLE_GAP_DAYS = 7

@@ -1449,8 +1449,8 @@ def stream_volume_anomaly_weekly(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The weekly ingest-volume MAD alarm fed BY the stream (C7) —
-    the streaming arm of this round's `events_volume_anomaly_by_type_
-    week` debut, the `stream_drift_gate` split of labor: the STREAM
+    the streaming arm of `events_volume_anomaly_by_type_week`, in the
+    `stream_drift_gate` split of labor: the STREAM
     maintains only the compact mergeable state (one engine-managed
     count per (event_type, 7-day tumbling window) — Spark's epoch-
     anchored windows land on exactly the batch op's
@@ -2025,21 +2025,11 @@ def stream_holt_winters_weekly(
 
 
 from ..operators import _ivf  # noqa: E402
-from ..operators.similarity import INGEST_CTES  # noqa: E402
+from ..operators.similarity import INGEST_ADM_CTES, INGEST_CTES  # noqa: E402
 
 _IVF_MAINT_ORACLE = (
-    INGEST_CTES
-    + f""",
-    adm AS (
-      SELECT b.vec_id, bc.cid,
-             CAST(CASE WHEN st.n_cand IS NULL THEN 1
-                       WHEN {_ivf.INGEST_REJECT_FACTOR} * st.min_adc * st.n_cand
-                            < st.sum_adc THEN 0
-                       ELSE 1 END AS BIGINT) AS admitted
-      FROM batch b
-      JOIN bcid bc ON bc.query_id = b.vec_id
-      LEFT JOIN st ON st.query_id = b.vec_id
-    ),
+    INGEST_ADM_CTES
+    + """,
     ex AS (
       SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_existing
       FROM assign WHERE vec_id % 10 <> 9 GROUP BY 1
@@ -2181,7 +2171,7 @@ def stream_ivf_list_maintenance(
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: WATERMARK-LATENESS AUDIT (the observability
+# Streaming watermark family: WATERMARK-LATENESS AUDIT (the observability
 # rung under C6).
 # ---------------------------------------------------------------------------
 
@@ -2496,8 +2486,8 @@ def stream_session_window_gap(
 
 
 # ---------------------------------------------------------------------------
-# Round-13 debut queue: streaming RELEASE-ADMISSION GATE (the release
-# budget as an intake controller).
+# Streaming admission family: RELEASE-ADMISSION GATE (the release budget as
+# an intake controller).
 # ---------------------------------------------------------------------------
 
 _ADMIT_INTAKE_DIV = 10  # intake budget = |corpus| div 10 documents
@@ -2604,21 +2594,11 @@ def stream_release_admission_gate(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..operators.dedup import (
-        _decon_survivors,
-        _neardup_pairs_05,
-        _release_manifest,
-        _survivor_token_stats,
-    )
+    from ..operators.dedup import release_manifest
     from ..sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents")
-    man = _release_manifest(
-        d,
-        _decon_survivors(spark, sf_dir),
-        _neardup_pairs_05(spark, sf_dir),
-        tok_stats=_survivor_token_stats(spark, sf_dir),
-    )
+    man = release_manifest(spark, sf_dir)
     n_docs = d.count()
     intake = n_docs // _ADMIT_INTAKE_DIV
     # |sources|-bounded driver read: the caps table IS the controller's
@@ -2700,9 +2680,9 @@ def stream_release_admission_gate(
 
 
 # ---------------------------------------------------------------------------
-# Round-14 debut queue: streaming COMPACTION SCHEDULER (tombstone
-# telemetry -> prioritized compaction queue; the retire-side sibling
-# of `stream_ivf_list_maintenance`).
+# Streaming IVF index family: COMPACTION SCHEDULER (tombstone telemetry ->
+# prioritized compaction queue; the retire-side sibling of
+# `stream_ivf_list_maintenance`).
 # ---------------------------------------------------------------------------
 
 _COMPACT_SCHED_ORACLE = (
@@ -2834,9 +2814,9 @@ def stream_compaction_scheduler(
 
 
 # ---------------------------------------------------------------------------
-# Round-15 debut queue: SOURCE QUOTA WITH ROLLOVER (admission control
-# — the ingest-side budget arm of the streaming family, beside the
-# release admission gate).
+# Streaming admission family: SOURCE QUOTA WITH ROLLOVER (admission control —
+# the ingest-side budget arm of the streaming family, beside the release
+# admission gate).
 # ---------------------------------------------------------------------------
 
 _QUOTA_NUM, _QUOTA_DEN = 9, 10  # per-day quota = 90% of the observed

@@ -3,8 +3,8 @@
 `rank_emit` is pinned against the per-row loop form it replaced (an
 `np.isin` candidate mask per query, `lexsort((nbr, d))[:k]`), held here
 as the reference; `l2_matrix` against the subtract-square form; and the
-explicit self-exclusion against the DuckDB oracle on a corpus smaller
-than TOP_K.
+explicit self-exclusion, of these and of the int8 kernel
+`similarity._int8_topk_against`, on a corpus of TOP_K vectors.
 """
 
 from __future__ import annotations
@@ -185,18 +185,33 @@ def test_l2_matrix_matches_subtract_square_at_int8_extremes():
 
 def test_query_is_never_its_own_neighbour_on_tiny_corpus(spark, tmp_path):
     """A corpus of TOP_K vectors: every query has TOP_K - 1 true
-    neighbours, never itself. The IVF and IVF-PQ recall audits must
-    equal their oracles, which join ``b.vec_id <> p.vec_id``."""
+    neighbours, never itself. The IVF, IVF-PQ and int8 recall audits
+    must equal their oracles, which join ``b.vec_id <> p.vec_id``. The
+    int8 audits count hits against a truth set without self pairs, so
+    a self row would not move their counts: the int8 kernel's own rows
+    are checked too."""
     from catme_etl_spark.operators._shared import clear_shared
     from catme_etl_spark.operators.similarity import (
+        _int8_topk_against,
+        sim_int8_quant_recall,
         sim_ivf_recall_clustered,
         sim_ivfpq_recall_clustered,
+        sim_recall_vs_k_curve,
     )
 
     vecs = [
         (i, [float(((i + 1) * (j + 3)) % 11 - 5) for j in range(64)])
         for i in range(TOP_K)
     ]
+    ids = np.array([i for i, _ in vecs], dtype=np.int64)
+    mat = np.array([v for _, v in vecs], dtype=np.float64)
+    gen = _int8_topk_against(_FakeBC((ids, mat, None)), TOP_K)
+    batch = pd.DataFrame({"vec_id": ids, "embedding": list(mat)})
+    rows = pd.concat(gen([batch]))
+    assert not (rows["query_id"] == rows["neighbor_id"]).any()
+    assert len(rows) == TOP_K * (TOP_K - 1)
+    assert set(rows["rank"]) == set(range(1, TOP_K))
+
     out = str(tmp_path / "embeddings.parquet")
     spark.createDataFrame(
         vecs, "vec_id long, embedding array<float>"
@@ -208,12 +223,15 @@ def test_query_is_never_its_own_neighbour_on_tiny_corpus(spark, tmp_path):
         for name, fn in (
             ("sim_ivf_recall_clustered", sim_ivf_recall_clustered),
             ("sim_ivfpq_recall_clustered", sim_ivfpq_recall_clustered),
+            ("sim_int8_quant_recall", sim_int8_quant_recall),
+            ("sim_recall_vs_k_curve", sim_recall_vs_k_curve),
         ):
             got = sorted(tuple(r) for r in fn(spark, str(tmp_path)).collect())
             sql = _apply_prefix_artifacts(con, entry.oracle_sql()[name], {})
             want = sorted(tuple(r) for r in con.execute(sql).fetchall())
             assert got == want, name
-            n_queries, n_truth = got[0][0], got[0][1]
-            assert (n_queries, n_truth) == (TOP_K, TOP_K * (TOP_K - 1))
+            if name != "sim_recall_vs_k_curve":
+                n_queries, n_truth = got[0][0], got[0][1]
+                assert (n_queries, n_truth) == (TOP_K, TOP_K * (TOP_K - 1))
     finally:
         clear_shared()
