@@ -3107,6 +3107,7 @@ _WINNOW_WMIN_CTES = f"""docs AS (
       FROM hashed
       QUALIFY i <= ng - {WINNOW_W}
     )"""
+oracle_prefix("winnow_wmin", f"WITH {_WINNOW_WMIN_CTES}")
 
 
 def _winnow_live_index(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,11 +8,20 @@ Window identity crosses engines as integer epochs (``unix_micros`` ↔
 tz-dependent hash-flake, integers are not. All aggregations are single
 hash-shuffles on (window, key); at 100 TB the parquet would be
 date-partitioned and partition pruning keeps each window's scan local.
+
+The verdicts a streaming arm shares with its batch query live beside
+that query, as DataFrame → DataFrame kernels the stream runs on its
+snapshot: ``changepoint_verdict``, ``log2_latency_readoff``,
+``volume_mad_verdict`` and ``hourly_concurrency``. So do the oracle
+texts both sides start from: the gaps-and-islands sessionization
+(``_ISLANDS_CTES`` / ``_ISLANDS_EV_CTES``), the conversion latencies
+(``_LAT_CTES``), the log2 read-off (``_LOG2_SKETCH_SQL``) and the
+weekly MAD alarm (``_VOLUME_MAD_ORACLE``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import money_sum
@@ -23,6 +32,90 @@ from .registry import query
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
+
+
+# The oracles' gaps-and-islands sessionization (30-minute gap, breaking
+# only at a gap strictly greater than the timeout), with and without the
+# event type carried through; every session oracle in this module and in
+# the streaming module starts from one of these two CTE pairs.
+_ISLANDS_EV_CTES = """marked AS (
+      SELECT user_id, ts, event_type,
+             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
+                       > INTERVAL 30 MINUTE
+                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+                  THEN 1 ELSE 0 END AS is_new
+      FROM events
+    ),
+    islands AS (
+      SELECT user_id, ts, event_type,
+             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
+                               ROWS UNBOUNDED PRECEDING) AS sess
+      FROM marked
+    )"""
+_ISLANDS_CTES = _ISLANDS_EV_CTES.replace(
+    "user_id, ts, event_type,", "user_id, ts,"
+)
+
+
+def _islands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark side of ``_ISLANDS_EV_CTES``: ``(user_id, ts, event_type,
+    sess)``, one user-keyed window pass."""
+    from pyspark.sql import Window
+
+    e = _events(spark, sf_dir).select("user_id", "ts", "event_type")
+    w = Window.partitionBy("user_id").orderBy("ts")
+    marked = e.select(
+        "user_id",
+        "ts",
+        "event_type",
+        F.when(
+            F.lag("ts").over(w).isNull()
+            | (
+                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
+                > 30 * 60 * 1_000_000
+            ),
+            1,
+        )
+        .otherwise(0)
+        .alias("is_new"),
+    )
+    run = (
+        Window.partitionBy("user_id")
+        .orderBy("ts")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return marked.select(
+        "user_id", "ts", "event_type", F.sum("is_new").over(run).alias("sess")
+    )
+
+
+def _first_view(islands: DataFrame) -> DataFrame:
+    """Per session, the first view timestamp ``v`` (NULL without one)."""
+    return islands.groupBy("user_id", "sess").agg(
+        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("v")
+    )
+
+
+def _first_after(
+    prev: DataFrame, islands: DataFrame, event_type: str, anchor: str, out: str
+) -> DataFrame:
+    """One funnel step: ``prev``'s session rows plus ``out``, the first
+    ``event_type`` timestamp at or after ``prev``'s ``anchor`` column in
+    the same session."""
+    keys = prev.columns
+    return (
+        prev.join(islands, ["user_id", "sess"])
+        .groupBy(*keys)
+        .agg(
+            F.min(
+                F.when(
+                    (F.col("event_type") == event_type)
+                    & (F.col("ts") >= F.col(anchor)),
+                    F.col("ts"),
+                )
+            ).alias(out)
+        )
+    )
 
 
 @query(
@@ -406,21 +499,8 @@ def events_pareto_user_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_funnel_within_session",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, event_type,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    islands AS (
-      SELECT user_id, ts, event_type,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sess
-      FROM marked
-    ),
+    oracle=f"""
+    WITH {_ISLANDS_EV_CTES},
     s1 AS (
       SELECT user_id, sess,
              MIN(CASE WHEN event_type = 'view' THEN ts END) AS v
@@ -465,61 +545,9 @@ def events_funnel_within_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     each a join back to the (already partitioned) session rows —
     constant output.
     """
-    from pyspark.sql import Window
-
-    e = _events(spark, sf_dir).select("user_id", "ts", "event_type")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    marked = e.select(
-        "user_id",
-        "ts",
-        "event_type",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                > 30 * 60 * 1_000_000
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    run = (
-        Window.partitionBy("user_id")
-        .orderBy("ts")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    islands = marked.select(
-        "user_id", "ts", "event_type", F.sum("is_new").over(run).alias("sess")
-    )
-    s1 = islands.groupBy("user_id", "sess").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("v")
-    )
-    s2 = (
-        s1.join(islands, ["user_id", "sess"])
-        .groupBy("user_id", "sess", "v")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click") & (F.col("ts") >= F.col("v")),
-                    F.col("ts"),
-                )
-            ).alias("c")
-        )
-    )
-    s3 = (
-        s2.join(islands, ["user_id", "sess"])
-        .groupBy("user_id", "sess", "v", "c")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") >= F.col("c")),
-                    F.col("ts"),
-                )
-            ).alias("p")
-        )
-    )
+    islands = _islands(spark, sf_dir)
+    s2 = _first_after(_first_view(islands), islands, "click", "v", "c")
+    s3 = _first_after(s2, islands, "purchase", "c", "p")
     return s3.agg(
         F.count(F.lit(1)).alias("n_sessions"),
         F.count("v").cast("long").alias("n_with_view"),
@@ -531,20 +559,7 @@ def events_funnel_within_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Session-scoped view→purchase latency in exact microseconds, shared
 # by the exact-quartile and log2-sketch percentile queries (identical
 # CTE text keeps the two oracles' latency semantics one definition).
-_LAT_CTES = """marked AS (
-      SELECT user_id, ts, event_type,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    islands AS (
-      SELECT user_id, ts, event_type,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sess
-      FROM marked
-    ),
+_LAT_CTES = f"""{_ISLANDS_EV_CTES},
     s1 AS (
       SELECT user_id, sess,
              MIN(CASE WHEN event_type = 'view' THEN ts END) AS v
@@ -569,49 +584,8 @@ def _conversion_latencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     column ``us`` = exact first-view→first-subsequent-purchase
     microseconds. Sessionization is one user-keyed window; both
     follow-up aggregations reuse the (user_id, sess) partitioning."""
-    from pyspark.sql import Window
-
-    e = _events(spark, sf_dir).select("user_id", "ts", "event_type")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    marked = e.select(
-        "user_id",
-        "ts",
-        "event_type",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                > 30 * 60 * 1_000_000
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    run = (
-        Window.partitionBy("user_id")
-        .orderBy("ts")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    islands = marked.select(
-        "user_id", "ts", "event_type", F.sum("is_new").over(run).alias("sess")
-    )
-    s1 = islands.groupBy("user_id", "sess").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("v")
-    )
-    s3 = (
-        s1.join(islands, ["user_id", "sess"])
-        .groupBy("user_id", "sess", "v")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") >= F.col("v")),
-                    F.col("ts"),
-                )
-            ).alias("p")
-        )
-    )
+    islands = _islands(spark, sf_dir)
+    s3 = _first_after(_first_view(islands), islands, "purchase", "v", "p")
     return s3.filter(F.col("p").isNotNull()).select(
         (F.unix_micros("p") - F.unix_micros("v")).alias("us")
     )
@@ -1218,20 +1192,7 @@ _HOUR_US = 3_600_000_000
 @query(
     "events_concurrency_by_hour",
     oracle=f"""
-    WITH marked AS (
-      SELECT user_id, ts,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    islands AS (
-      SELECT user_id, ts,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sess
-      FROM marked
-    ),
+    WITH {_ISLANDS_CTES},
     sessions AS (
       SELECT user_id,
              epoch_us(MIN(ts)) // {_HOUR_US} AS h1,
@@ -1273,12 +1234,22 @@ def events_concurrency_by_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"unix_micros(min(ts)) div {_HOUR_US}").alias("h1"),
         F.expr(f"unix_micros(max(ts)) div {_HOUR_US}").alias("h2"),
     )
-    covered = sess.select(
+    return hourly_concurrency(sess)
+
+
+def hourly_concurrency(sessions: DataFrame) -> DataFrame:
+    """Sessions active per hour from ``(user_id, h1, h2)`` rows — a
+    session's first and last hour index — shared by
+    `events_concurrency_by_hour` and its streaming arm
+    (`stream_concurrency_by_hour`): each session expands to every hour
+    from h1 to h2, and each hour reports its sessions and distinct
+    users."""
+    covered = sessions.select(
         "user_id", F.explode(F.sequence("h1", "h2")).alias("h")
     )
     return covered.groupBy("h").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.count_distinct("user_id").alias("n_users"),
+        F.count(F.lit(1)).cast("long").alias("n_sessions"),
+        F.count_distinct("user_id").cast("long").alias("n_users"),
     ).select(
         (F.col("h") * _HOUR_US).cast("long").alias("hour_start_us"),
         "n_sessions",
@@ -1288,21 +1259,8 @@ def events_concurrency_by_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_session_paths_top20",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, event_type,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    islands AS (
-      SELECT user_id, ts, event_type,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sess
-      FROM marked
-    ),
+    oracle=f"""
+    WITH {_ISLANDS_EV_CTES},
     paths AS (
       SELECT user_id, sess,
              array_to_string(
@@ -1361,11 +1319,10 @@ def events_session_paths_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "events_latency_log2_sketch",
-    oracle=f"""
-    WITH {_LAT_CTES},
-    b AS (SELECT length(bin(us)) AS bl FROM lat),
+# The log2 read-off over a ``lat(us)`` CTE: bucket = bit length of the
+# microsecond count, cumulative counts, and each percentile's bucket
+# upper bound 2^bl - 1. `stream_latency_sketch_sealed` ends the same way.
+_LOG2_SKETCH_SQL = """b AS (SELECT length(bin(us)) AS bl FROM lat),
     g AS (SELECT bl, CAST(COUNT(*) AS BIGINT) AS k FROM b GROUP BY bl),
     c AS (
       SELECT a.bl, CAST(SUM(bb.k) AS BIGINT) AS cum
@@ -1386,7 +1343,14 @@ def events_session_paths_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS p99_hi_us
     FROM c, n
     GROUP BY n.n
-    """,
+    """
+
+
+@query(
+    "events_latency_log2_sketch",
+    oracle=f"""
+    WITH {_LAT_CTES},
+    {_LOG2_SKETCH_SQL}""",
 )
 def events_latency_log2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-bucketed latency percentiles — the HdrHistogram/DDSketch
@@ -1410,45 +1374,58 @@ def events_latency_log2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the latency derivation is the certified shared
     pipeline (one user-keyed sessionization); after it, ONE hash-agg
-    into ≤ 64 buckets, a triangular join over that constant-size
-    grid for cumulative counts, and a 1-row summary. Zero
+    into ≤ 64 buckets, a self-join of that constant-size grid for
+    cumulative counts and the total, and a 1-row summary. Zero
     data-volume-dependent state past the bucket agg.
 
     Reference basis: none; contract training/ops-analytics family
     (SURVEY §2.10)."""
-    lat = _conversion_latencies(spark, sf_dir)
-    b = lat.select(F.length(F.bin("us")).alias("bl"))
-    g = b.groupBy("bl").agg(F.count(F.lit(1)).cast("long").alias("k"))
-    g2 = g.select(F.col("bl").alias("bl2"), F.col("k").alias("k2"))
-    c = (
-        g.join(F.broadcast(g2), F.col("bl2") <= F.col("bl"))
-        .groupBy("bl")
-        .agg(F.sum("k2").cast("long").alias("cum"))
+    return log2_latency_readoff(_conversion_latencies(spark, sf_dir))
+
+
+def log2_latency_readoff(lat: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """The log2 latency read-off over ``lat(*by, us)``, per ``by`` group
+    — the kernel of `events_latency_log2_sketch` and of its streaming
+    arms (`stream_latency_sketch_sealed` corpus-wide,
+    `stream_latency_alert_daily` per day). Buckets are the bit length
+    of ``us``; one self-join of the ≤ 64-row bucket grid within a group
+    gives each bucket its cumulative count ``cum`` and the group total
+    ``n_converted``; p50/p90/p99 are the smallest bucket whose ``cum``
+    reaches the rank (integer cross-multiplication), reported as the
+    bucket's inclusive upper bound 2^bl − 1. Returns ``(*by,
+    n_converted, n_buckets, p50_hi_us, p90_hi_us, p99_hi_us)``."""
+    g = lat.groupBy(*by, F.length(F.bin("us")).alias("bl")).agg(
+        F.count(F.lit(1)).cast("long").alias("k")
     )
-    n = b.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    hi = F.expr("shiftleft(CAST(1 AS BIGINT), bl) - 1")
-    return (
-        c.crossJoin(F.broadcast(n))
-        .groupBy("n")
+    g2 = g.select(
+        *(F.col(c).alias(f"_{c}") for c in by),
+        F.col("bl").alias("_bl"),
+        F.col("k").alias("_k"),
+    )
+    same_group = F.lit(True)
+    for c in by:
+        same_group = same_group & (F.col(f"_{c}") == F.col(c))
+    c = (
+        g.join(F.broadcast(g2), same_group)
+        .groupBy(*by, "bl")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_buckets"),
-            F.min(F.when(2 * F.col("cum") >= F.col("n"), hi))
+            F.sum(F.when(F.col("_bl") <= F.col("bl"), F.col("_k")))
             .cast("long")
-            .alias("p50_hi_us"),
-            F.min(F.when(10 * F.col("cum") >= 9 * F.col("n"), hi))
-            .cast("long")
-            .alias("p90_hi_us"),
-            F.min(F.when(100 * F.col("cum") >= 99 * F.col("n"), hi))
-            .cast("long")
-            .alias("p99_hi_us"),
+            .alias("cum"),
+            F.sum("_k").cast("long").alias("n_converted"),
         )
-        .select(
-            F.col("n").alias("n_converted"),
-            "n_buckets",
-            "p50_hi_us",
-            "p90_hi_us",
-            "p99_hi_us",
-        )
+    )
+    hi = F.expr("shiftleft(CAST(1 AS BIGINT), bl) - 1")
+
+    def upper(num: int, den: int) -> Column:
+        reached = num * F.col("cum") >= den * F.col("n_converted")
+        return F.min(F.when(reached, hi)).cast("long")
+
+    return c.groupBy(*by, "n_converted").agg(
+        F.count(F.lit(1)).cast("long").alias("n_buckets"),
+        upper(2, 1).alias("p50_hi_us"),
+        upper(10, 9).alias("p90_hi_us"),
+        upper(100, 99).alias("p99_hi_us"),
     )
 
 
@@ -1766,9 +1743,7 @@ def events_retention_halflife_fit(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@query(
-    "events_volume_anomaly_by_type_week",
-    oracle="""
+_VOLUME_MAD_ORACLE = """
     WITH w AS (
       SELECT event_type, epoch_us(ts) // 604800000000 AS wk,
              CAST(COUNT(*) AS BIGINT) AS n
@@ -1806,7 +1781,12 @@ def events_retention_halflife_fit(spark: SparkSession, sf_dir: str) -> DataFrame
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalous_weeks
     FROM dev JOIN mad USING (event_type)
     GROUP BY dev.event_type
-    """,
+    """
+
+
+@query(
+    "events_volume_anomaly_by_type_week",
+    oracle=_VOLUME_MAD_ORACLE,
 )
 def events_volume_anomaly_by_type_week(
     spark: SparkSession, sf_dir: str
@@ -1833,8 +1813,6 @@ def events_volume_anomaly_by_type_week(
 
     Reference basis: none; contract ops-quality family (SURVEY
     §2.10), the input-side sibling of `quality_psi_drift`."""
-    from pyspark.sql import Window
-
     w = (
         _events(spark, sf_dir)
         .select(
@@ -1844,25 +1822,48 @@ def events_volume_anomaly_by_type_week(
         .groupBy("event_type", "wk")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
+    return volume_mad_verdict(w)
 
-    def lower_median(df, col, out):
-        wr = Window.partitionBy("event_type").orderBy(col)
-        wk_ = Window.partitionBy("event_type")
-        return (
-            df.withColumn("rk", F.row_number().over(wr))
-            .withColumn("k", F.count(F.lit(1)).over(wk_))
-            .filter(2 * F.col("rk") >= F.col("k"))
-            .groupBy("event_type")
-            .agg(F.min(col).cast("long").alias(out))
-        )
 
-    med = lower_median(w, "n", "m")
-    dev = w.join(med, "event_type").select(
+def _lower_median(df: DataFrame, col: str, out: str) -> DataFrame:
+    """Per ``event_type``, the lower median of ``col`` (smallest value
+    whose doubled rank reaches the count) as ``out``."""
+    from pyspark.sql import Window
+
+    wr = Window.partitionBy("event_type").orderBy(col)
+    wk = Window.partitionBy("event_type")
+    return (
+        df.withColumn("rk", F.row_number().over(wr))
+        .withColumn("k", F.count(F.lit(1)).over(wk))
+        .filter(2 * F.col("rk") >= F.col("k"))
+        .groupBy("event_type")
+        .agg(F.min(col).cast("long").alias(out))
+    )
+
+
+def volume_mad_verdict(weekly: DataFrame) -> DataFrame:
+    """The weekly volume MAD alarm over ``(event_type, n)`` weekly
+    counts — shared by `events_volume_anomaly_by_type_week` and its
+    streaming arm (`stream_volume_anomaly_weekly`), certified by one
+    oracle: lower median ``m``, lower-median absolute deviation
+    ``mad``, and the weeks with ``10000·|n − m| > 44478·mad``.
+
+    Each join's right side renames its key: on the streaming arm both
+    sides descend from one memory-sink view, and a join on the shared
+    attribute id would be a trivially true self-join condition (the
+    `_build_minhash_pairs` same-lineage rule). Batch rows are the same
+    either way."""
+    med = _lower_median(weekly, "n", "m").withColumnRenamed(
+        "event_type", "et_med"
+    )
+    dev = weekly.join(med, F.col("event_type") == F.col("et_med")).select(
         "event_type", "n", "m", F.abs(F.col("n") - F.col("m")).alias("d")
     )
-    mad = lower_median(dev, "d", "mad")
+    mad = _lower_median(dev, "d", "mad").withColumnRenamed(
+        "event_type", "et_mad"
+    )
     return (
-        dev.join(mad, "event_type")
+        dev.join(mad, F.col("event_type") == F.col("et_mad"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_weeks"),

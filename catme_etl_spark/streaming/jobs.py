@@ -12,8 +12,20 @@ queries:
   dropped: the watermark only bounds STATE eviction, and complete mode
   re-emits all windows) → full DuckDB oracle applies;
 - append-mode session windows emit only sessions sealed by the final
-  watermark (max event time − delay) — genuinely streaming-only
-  output, registered rows-only.
+  watermark (max event time − delay); their oracles are the batch
+  sessionization filtered by the same seal (``_SEALED_PRED``).
+
+A stream arm is its batch twin run incrementally: the stream keeps only
+a state shape, written once here — ``_sealed_sessions`` (append-mode
+session windows), ``_sealed_latencies`` (first view → first later
+purchase per sealed session), ``_daily_counts`` (complete-mode daily
+counts), ``_bin_fold`` / ``_unpack_bins`` (a per-key bin-count state and
+its ``bins_csv`` snapshot) and ``_final_state`` (the update sink's
+latest row per key) — and the verdict over the snapshot is the batch
+query's own kernel from ``operators/events.py`` (``changepoint_verdict``,
+``log2_latency_readoff``, ``volume_mad_verdict``,
+``hourly_concurrency``) or ``operators/timeseries.py`` (the Holt
+verdicts), certified by the batch query's oracle text.
 
 Production notes, same code path: swap the memory sink for
 parquet/Kafka + ``checkpointLocation`` (exactly-once via offset + state
@@ -34,6 +46,18 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import money_sum
+from ..operators.events import (
+    _CHANGEPOINT_ORACLE,
+    _HOUR_US,
+    _ISLANDS_CTES,
+    _ISLANDS_EV_CTES,
+    _LOG2_SKETCH_SQL,
+    _VOLUME_MAD_ORACLE,
+    changepoint_verdict,
+    hourly_concurrency,
+    log2_latency_readoff,
+    volume_mad_verdict,
+)
 from ..operators.registry import query
 
 _SINK_SEQ = count()
@@ -231,7 +255,8 @@ def _run_to_memory(df: DataFrame, mode: str) -> DataFrame:
 
     SINGLE-THREADED assumption: the conf override is session-global
     for the query's lifetime, so a batch query run CONCURRENTLY on the
-    same session (another thread) would see 8 shuffle partitions. The
+    same session (another thread) would see
+    ``_STREAM_SHUFFLE_PARTITIONS`` (4) shuffle partitions. The
     sweep/bench/pytest harnesses all run queries sequentially; a
     multi-tenant deployment would run streams on their own session
     (``spark.newSession()``) instead.
@@ -261,6 +286,18 @@ def _run_to_memory(df: DataFrame, mode: str) -> DataFrame:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
+
+
+def _final_state(sunk: DataFrame, key: str, *fields: str) -> DataFrame:
+    """The latest row per ``key`` of an update-mode memory sink, which
+    keeps every micro-batch's update: each stateful arm here emits
+    ``fields`` led by a counter that only grows, so the max of their
+    struct is the final state. Returns ``(key, *fields)``."""
+    return (
+        sunk.groupBy(key)
+        .agg(F.max(F.struct(*fields)).alias("_s"))
+        .select(key, *(F.col(f"_s.{f}").alias(f) for f in fields))
+    )
 
 
 def tumbling_event_agg(e: DataFrame) -> DataFrame:
@@ -373,13 +410,7 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     sunk = _run_to_memory(out, "update")
-    # the memory sink keeps every per-batch update; the final state per
-    # user is the row with the (monotonically growing) max n_events
-    final = F.max(F.struct("n_events", "sum_value")).alias("s")
-    return sunk.groupBy("user_id").agg(final).select(
-        "user_id", F.col("s.n_events").alias("n_events"),
-        F.col("s.sum_value").alias("sum_value"),
-    )
+    return _final_state(sunk, "user_id", "n_events", "sum_value")
 
 
 def has_transform_with_state_runtime() -> bool:
@@ -457,14 +488,8 @@ def stream_tws_user_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="None",
     )
     sunk = _run_to_memory(out, "update")
-    # memory sink keeps every per-batch update; final state per user is
-    # the row with the (monotonically growing) max n_events
-    final = F.max(F.struct("n_events", "sum_value", "max_value")).alias("s")
-    return sunk.groupBy("user_id").agg(final).select(
-        "user_id",
-        F.col("s.n_events").alias("n_events"),
-        F.col("s.sum_value").alias("sum_value"),
-        F.col("s.max_value").alias("max_value"),
+    return _final_state(
+        sunk, "user_id", "n_events", "sum_value", "max_value"
     )
 
 
@@ -556,23 +581,35 @@ def stream_to_parquet(
     return spark.read.parquet(out_dir).count()
 
 
+def _sealed_sessions(
+    spark: SparkSession, sf_dir: str, *aggs: Column
+) -> DataFrame:
+    """The sealed-session state shape every session arm here shares:
+    per ``(user_id, w)`` — ``w`` a 30-minute-gap ``session_window`` —
+    the aggregates ``aggs``, watermark 1 h, run to an APPEND sink, so
+    only sessions the final watermark has sealed come out (each once).
+    State is one row per OPEN session; sealed sessions leave the store
+    as the watermark advances."""
+    e = _stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
+    agg = e.groupBy(
+        "user_id", F.session_window("ts", "30 minutes").alias("w")
+    ).agg(*aggs)
+    return _run_to_memory(agg, "append")
+
+
+# The oracles' watermark seal: a session (last event ``sess_end``) is
+# sealed once its window end, last event + gap, is at or before the
+# final watermark, max(ts) - 1 h.
+_SEALED_PRED = (
+    "sess_end + INTERVAL 30 MINUTE\n"
+    "            <= (SELECT MAX(ts) - INTERVAL 1 HOUR FROM events)"
+)
+
+
 @query(
     "stream_session_sealed",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    islands AS (
-      SELECT user_id, ts,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sess
-      FROM marked
-    ),
+    oracle=f"""
+    WITH {_ISLANDS_CTES},
     g AS (
       SELECT user_id, epoch_us(MIN(ts)) AS sess_start_us,
              COUNT(*) AS n_events, MAX(ts) AS sess_end
@@ -599,11 +636,9 @@ def stream_session_sealed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001 and sf0.01. Sessions still OPEN at end-of-stream are
     (correctly) absent from both sides — that is the append-mode
     contract this query demonstrates."""
-    e = _stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
-    agg = e.groupBy(
-        "user_id", F.session_window("ts", "30 minutes").alias("w")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    sunk = _run_to_memory(agg, "append")
+    sunk = _sealed_sessions(
+        spark, sf_dir, F.count(F.lit(1)).alias("n_events")
+    )
     return sunk.select(
         "user_id",
         F.unix_micros(F.col("w.start")).alias("sess_start_us"),
@@ -645,6 +680,57 @@ def stream_sliding_10min_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bin_fold(binned: DataFrame, n_bins: int) -> DataFrame:
+    """Per ``event_type``, a dense ``n_bins``-bin count histogram kept
+    as ``applyInPandasWithState`` state across micro-batches. Input is
+    any stream of ``(event_type string, bin long)`` with bin already in
+    [0, n_bins); state is ``n_bins`` longs + 1 count per key. Emits the
+    running ``(event_type, n_total, bins_csv)`` snapshot per key per
+    trigger, for the update sink."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def hist(key, pdfs, state):
+        (bins_list, n_total) = (
+            state.get if state.exists else ([0] * n_bins, 0)
+        )
+        bins = np.array(bins_list, dtype="int64")
+        for pdf in pdfs:
+            b = pdf["bin"].to_numpy().astype("int64")
+            bins += np.bincount(b, minlength=n_bins).astype("int64")
+            n_total += len(pdf)
+        state.update((bins.tolist(), n_total))
+        yield pd.DataFrame(
+            {
+                "event_type": [key[0]],
+                "n_total": [n_total],
+                "bins_csv": [",".join(str(int(x)) for x in bins)],
+            }
+        )
+
+    return binned.groupBy("event_type").applyInPandasWithState(
+        hist,
+        outputStructType="event_type string, n_total long, bins_csv string",
+        stateStructType="bins array<long>, n long",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _unpack_bins(final: DataFrame, n: str) -> DataFrame:
+    """``(event_type, bins_csv)`` snapshots back to ``(event_type, bin,
+    n)`` rows, one per bin."""
+    return final.select(
+        "event_type",
+        F.posexplode(F.split("bins_csv", ",")).alias("bin", "_n"),
+    ).select(
+        "event_type",
+        F.col("bin").cast("long").alias("bin"),
+        F.col("_n").cast("long").alias(n),
+    )
+
+
 @query(
     "stream_histogram_value_bins",
     oracle="""
@@ -682,67 +768,25 @@ def stream_histogram_value_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     n) rows and equals the batch histogram exactly — the oracle is the
     plain GROUP BY over the same parquet.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     # NULL values are out of the histogram's domain on both sides (the
-    # oracle's NULL bin falls out of the grid join; the pandas int cast
-    # would crash on NaN) — filter before the stateful operator.
-    e = (
+    # oracle's NULL bin falls out of the grid join) — filter before the
+    # stateful operator. Cents are floor(x·100 + 0.5): half-away for
+    # the non-negative values, and every negative cent lands in a bin
+    # ≤ 0 on both engines, which the clip collapses.
+    cents = F.floor(F.col("value") * 100 + 0.5)
+    binned = (
         _stream_events(spark, sf_dir)
-        .select("event_type", "value")
         .filter(F.col("value").isNotNull())
-    )
-
-    def hist(key, pdfs, state):
-        (bins_list, n_total) = (
-            state.get if state.exists else ([0] * 20, 0)
+        .select(
+            "event_type",
+            F.least(F.lit(19), F.greatest(F.lit(0), F.floor(cents / 500)))
+            .cast("long")
+            .alias("bin"),
         )
-        bins = np.array(bins_list, dtype="int64")
-        for pdf in pdfs:
-            # half-AWAY cents, the repo's floor(x+0.5) discipline —
-            # pandas .round() is half-to-even while the oracle's DuckDB
-            # ROUND is half-away; the two agree at this query's $5
-            # (even-cent) bin edges, but the tie rule is made explicit
-            # so an odd-cent bin width cannot silently diverge. (For
-            # negative values floor(x·100+0.5) is half-up, not
-            # half-away, but every such cent lands in a bin ≤ 0 on
-            # both engines and the clip collapses the difference.)
-            vc = np.floor(pdf["value"].to_numpy() * 100 + 0.5).astype("int64")
-            b = (vc // 500).clip(min=0, max=19).astype("int64")
-            bins += np.bincount(b, minlength=20).astype("int64")
-            n_total += len(pdf)
-        state.update((bins.tolist(), n_total))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_total": [n_total],
-                "bins_csv": [",".join(str(int(x)) for x in bins)],
-            }
-        )
-
-    out = e.groupBy("event_type").applyInPandasWithState(
-        hist,
-        outputStructType="event_type string, n_total long, bins_csv string",
-        stateStructType="bins array<long>, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sunk = _run_to_memory(out, "update")
-    final = (
-        sunk.groupBy("event_type")
-        .agg(F.max(F.struct("n_total", "bins_csv")).alias("s"))
-        .select("event_type", F.col("s.bins_csv").alias("bins_csv"))
-    )
-    return final.select(
-        "event_type",
-        F.posexplode(F.split("bins_csv", ",")).alias("bin", "n_str"),
-    ).select(
-        "event_type",
-        F.col("bin").cast("long").alias("bin"),
-        F.col("n_str").cast("long").alias("n"),
-    )
+    sunk = _run_to_memory(_bin_fold(binned, 20), "update")
+    final = _final_state(sunk, "event_type", "n_total", "bins_csv")
+    return _unpack_bins(final, "n")
 
 
 # ---------------------------------------------------------------------------
@@ -766,35 +810,7 @@ def drift_current_histogram(binned: DataFrame) -> DataFrame:
     pages on. Kill-and-restart safe: state lives in the checkpoint
     (proven for this exact state shape in
     ``tests/test_round7_ops.py``)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def hist(key, pdfs, state):
-        (bins_list, n_total) = (
-            state.get if state.exists else ([0] * 10, 0)
-        )
-        bins = np.array(bins_list, dtype="int64")
-        for pdf in pdfs:
-            b = pdf["bin"].to_numpy().astype("int64")
-            bins += np.bincount(b, minlength=10).astype("int64")
-            n_total += len(pdf)
-        state.update((bins.tolist(), n_total))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_total": [n_total],
-                "bins_csv": [",".join(str(int(x)) for x in bins)],
-            }
-        )
-
-    return binned.groupBy("event_type").applyInPandasWithState(
-        hist,
-        outputStructType="event_type string, n_total long, bins_csv string",
-        stateStructType="bins array<long>, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _bin_fold(binned, 10)
 
 
 _PSI_BIN_SQL = (
@@ -952,18 +968,8 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", bin_col)
     )
     sunk = _run_to_memory(drift_current_histogram(cur), "update")
-    final = (
-        sunk.groupBy("event_type")
-        .agg(F.max(F.struct("n_total", "bins_csv")).alias("s"))
-        .select("event_type", F.col("s.bins_csv").alias("bins_csv"))
-    )
-    curb = final.select(
-        "event_type",
-        F.posexplode(F.split("bins_csv", ",")).alias("bin", "n_str"),
-    ).select(
-        "event_type",
-        F.col("bin").cast("long").alias("bin"),
-        F.col("n_str").cast("long").alias("nb"),
+    curb = _unpack_bins(
+        _final_state(sunk, "event_type", "n_total", "bins_csv"), "nb"
     )
     dense = refd.join(curb, ["event_type", "bin"], "left").select(
         "event_type",
@@ -1077,23 +1083,10 @@ def stream_bloom_index_maintenance(
     return _run_to_memory(agg, "complete")
 
 
-@query(
-    "stream_latency_sketch_sealed",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, event_type,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    islands AS (
-      SELECT user_id, ts, event_type,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sess
-      FROM marked
-    ),
+# Per session, the first view ``v``, the first purchase at or after it
+# ``p``, and the last event ``sess_end`` — the sealed latency arms'
+# sessions, which `_SEALED_PRED` then filters.
+_SEALED_CONV_CTES = f"""{_ISLANDS_EV_CTES},
     s1 AS (
       SELECT user_id, sess,
              MIN(CASE WHEN event_type = 'view' THEN ts END) AS v,
@@ -1107,36 +1100,47 @@ def stream_bloom_index_maintenance(
       FROM s1 JOIN islands i
         ON i.user_id = s1.user_id AND i.sess = s1.sess
       GROUP BY s1.user_id, s1.sess, s1.v, s1.sess_end
-    ),
+    )"""
+
+
+def _sealed_latencies(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark side of ``_SEALED_CONV_CTES`` + ``_SEALED_PRED``: one row
+    ``(day, us)`` per sealed converting session — the first-view day
+    and the first-view→first-later-purchase microseconds. The session
+    state carries the first view ts and the purchase-ts list; the
+    latency is one ``array_min(filter(...))`` over the sealed row."""
+    sealed = _sealed_sessions(
+        spark,
+        sf_dir,
+        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("v"),
+        F.collect_list(
+            F.when(F.col("event_type") == "purchase", F.unix_micros("ts"))
+        ).alias("purchases"),
+    )
+    return (
+        sealed.filter(F.col("v").isNotNull())
+        .select(
+            F.expr("unix_micros(v) div 86400000000").alias("day"),
+            F.unix_micros("v").alias("v_us"),
+            F.expr("array_min(filter(purchases, p -> p >= unix_micros(v)))")
+            .alias("p_us"),
+        )
+        .filter(F.col("p_us").isNotNull())
+        .select("day", (F.col("p_us") - F.col("v_us")).alias("us"))
+    )
+
+
+@query(
+    "stream_latency_sketch_sealed",
+    oracle=f"""
+    WITH {_SEALED_CONV_CTES},
     lat AS (
       SELECT epoch_us(p) - epoch_us(v) AS us
       FROM s3
       WHERE p IS NOT NULL
-        AND sess_end + INTERVAL 30 MINUTE
-            <= (SELECT MAX(ts) - INTERVAL 1 HOUR FROM events)
+        AND {_SEALED_PRED}
     ),
-    b AS (SELECT length(bin(us)) AS bl FROM lat),
-    g AS (SELECT bl, CAST(COUNT(*) AS BIGINT) AS k FROM b GROUP BY bl),
-    c AS (
-      SELECT a.bl, CAST(SUM(bb.k) AS BIGINT) AS cum
-      FROM g a JOIN g bb ON bb.bl <= a.bl
-      GROUP BY a.bl
-    ),
-    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM b)
-    SELECT n.n AS n_converted,
-           CAST(COUNT(*) AS BIGINT) AS n_buckets,
-           CAST(MIN(CASE WHEN 2 * cum >= n.n
-                         THEN (CAST(1 AS BIGINT) << bl) - 1 END)
-                AS BIGINT) AS p50_hi_us,
-           CAST(MIN(CASE WHEN 10 * cum >= 9 * n.n
-                         THEN (CAST(1 AS BIGINT) << bl) - 1 END)
-                AS BIGINT) AS p90_hi_us,
-           CAST(MIN(CASE WHEN 100 * cum >= 99 * n.n
-                         THEN (CAST(1 AS BIGINT) << bl) - 1 END)
-                AS BIGINT) AS p99_hi_us
-    FROM c, n
-    GROUP BY n.n
-    """,
+    {_LOG2_SKETCH_SQL}""",
 )
 def stream_latency_sketch_sealed(
     spark: SparkSession, sf_dir: str
@@ -1175,65 +1179,7 @@ def stream_latency_sketch_sealed(
     latency sibling of `stream_bloom_index_maintenance`'s
     filter-maintenance pattern (state the stream OWNS, snapshots the
     batch can certify)."""
-    e = (
-        _stream_events(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .select("user_id", "ts", "event_type")
-    )
-    agg = e.groupBy(
-        "user_id", F.session_window("ts", "30 minutes").alias("w")
-    ).agg(
-        F.min(
-            F.when(F.col("event_type") == "view", F.col("ts"))
-        ).alias("v"),
-        F.collect_list(
-            F.when(F.col("event_type") == "purchase", F.unix_micros("ts"))
-        ).alias("purchases"),
-    )
-    sealed = _run_to_memory(agg, "append")
-    lat = (
-        sealed.filter(F.col("v").isNotNull())
-        .select(
-            F.unix_micros("v").alias("v_us"),
-            F.expr("array_min(filter(purchases, p -> p >= unix_micros(v)))")
-            .alias("p_us"),
-        )
-        .filter(F.col("p_us").isNotNull())
-        .select((F.col("p_us") - F.col("v_us")).alias("us"))
-    )
-    b = lat.select(F.length(F.bin("us")).alias("bl"))
-    g = b.groupBy("bl").agg(F.count(F.lit(1)).cast("long").alias("k"))
-    g2 = g.select(F.col("bl").alias("bl2"), F.col("k").alias("k2"))
-    c = (
-        g.join(F.broadcast(g2), F.col("bl2") <= F.col("bl"))
-        .groupBy("bl")
-        .agg(F.sum("k2").cast("long").alias("cum"))
-    )
-    n = b.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    hi = F.expr("shiftleft(CAST(1 AS BIGINT), bl) - 1")
-    return (
-        c.crossJoin(F.broadcast(n))
-        .groupBy("n")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_buckets"),
-            F.min(F.when(2 * F.col("cum") >= F.col("n"), hi))
-            .cast("long")
-            .alias("p50_hi_us"),
-            F.min(F.when(10 * F.col("cum") >= 9 * F.col("n"), hi))
-            .cast("long")
-            .alias("p90_hi_us"),
-            F.min(F.when(100 * F.col("cum") >= 99 * F.col("n"), hi))
-            .cast("long")
-            .alias("p99_hi_us"),
-        )
-        .select(
-            F.col("n").alias("n_converted"),
-            "n_buckets",
-            "p50_hi_us",
-            "p90_hi_us",
-            "p99_hi_us",
-        )
-    )
+    return log2_latency_readoff(_sealed_latencies(spark, sf_dir))
 
 
 def _minhash_band_cols():
@@ -1405,45 +1351,7 @@ def stream_minhash_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_volume_anomaly_weekly",
-    oracle="""
-    WITH w AS (
-      SELECT event_type, epoch_us(ts) // 604800000000 AS wk,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    ranked AS (
-      SELECT event_type, n,
-             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY n) AS rk,
-             COUNT(*) OVER (PARTITION BY event_type) AS k
-      FROM w
-    ),
-    med AS (
-      SELECT event_type, CAST(MIN(n) AS BIGINT) AS m
-      FROM ranked WHERE 2 * rk >= k GROUP BY event_type
-    ),
-    dev AS (
-      SELECT w.event_type, w.n, ABS(w.n - med.m) AS d, med.m
-      FROM w JOIN med USING (event_type)
-    ),
-    dranked AS (
-      SELECT event_type, d,
-             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d) AS rk,
-             COUNT(*) OVER (PARTITION BY event_type) AS k
-      FROM dev
-    ),
-    mad AS (
-      SELECT event_type, CAST(MIN(d) AS BIGINT) AS mad
-      FROM dranked WHERE 2 * rk >= k GROUP BY event_type
-    )
-    SELECT dev.event_type,
-           CAST(COUNT(*) AS BIGINT)  AS n_weeks,
-           CAST(MAX(dev.m) AS BIGINT) AS median_weekly,
-           CAST(MAX(mad.mad) AS BIGINT) AS mad,
-           CAST(SUM(CASE WHEN 10000 * dev.d > 44478 * mad.mad
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalous_weeks
-    FROM dev JOIN mad USING (event_type)
-    GROUP BY dev.event_type
-    """,
+    oracle=_VOLUME_MAD_ORACLE,
 )
 def stream_volume_anomaly_weekly(
     spark: SparkSession, sf_dir: str
@@ -1467,75 +1375,18 @@ def stream_volume_anomaly_weekly(
     constant-size grid per evaluation.
 
     Reference basis: none; contract C7 streaming family."""
-    from pyspark.sql import Window
-
     e = _stream_events(spark, sf_dir)
     agg = e.groupBy(
         "event_type", F.window("ts", "7 days").alias("w")
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     snap = _run_to_memory(agg, "complete").select("event_type", "n")
-
-    def lower_median(df, col, out):
-        wr = Window.partitionBy("event_type").orderBy(col)
-        wk_ = Window.partitionBy("event_type")
-        return (
-            df.withColumn("rk", F.row_number().over(wr))
-            .withColumn("k", F.count(F.lit(1)).over(wk_))
-            .filter(2 * F.col("rk") >= F.col("k"))
-            .groupBy("event_type")
-            .agg(F.min(col).cast("long").alias(out))
-        )
-
-    # both sides of each join descend from the same memory-sink view,
-    # so rename the right side's key (the `_build_minhash_pairs`
-    # same-lineage self-join rule) instead of joining on the shared
-    # attribute id
-    med = lower_median(snap, "n", "m").withColumnRenamed(
-        "event_type", "et_med"
-    )
-    dev = snap.join(
-        med, F.col("event_type") == F.col("et_med")
-    ).select(
-        "event_type", "n", "m", F.abs(F.col("n") - F.col("m")).alias("d")
-    )
-    mad = lower_median(dev, "d", "mad").withColumnRenamed(
-        "event_type", "et_mad"
-    )
-    return (
-        dev.join(mad, F.col("event_type") == F.col("et_mad"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_weeks"),
-            F.max("m").cast("long").alias("median_weekly"),
-            F.max("mad").cast("long").alias("mad"),
-            F.sum(
-                F.when(
-                    10000 * F.col("d") > 44478 * F.col("mad"), 1
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_anomalous_weeks"),
-        )
-    )
+    return volume_mad_verdict(snap)
 
 
 @query(
     "stream_concurrency_by_hour",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    islands AS (
-      SELECT user_id, ts,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sess
-      FROM marked
-    ),
+    oracle=f"""
+    WITH {_ISLANDS_CTES},
     g AS (
       SELECT user_id,
              epoch_us(MIN(ts)) // 3600000000 AS h1,
@@ -1545,8 +1396,7 @@ def stream_volume_anomaly_weekly(
     ),
     sealed AS (
       SELECT * FROM g
-      WHERE sess_end + INTERVAL 30 MINUTE
-            <= (SELECT MAX(ts) - INTERVAL 1 HOUR FROM events)
+      WHERE {_SEALED_PRED}
     ),
     covered AS (
       SELECT user_id, unnest(range(h1, h2 + 1)) AS h FROM sealed
@@ -1576,29 +1426,17 @@ def stream_concurrency_by_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour expansion is a bounded explode over sealed rows only.
 
     Reference basis: none; contract C5/C7 streaming family."""
-    e = _stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
-    agg = e.groupBy(
-        "user_id", F.session_window("ts", "30 minutes").alias("w")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    sealed = _run_to_memory(agg, "append")
-    covered = sealed.select(
-        "user_id",
-        F.explode(
-            F.sequence(
-                F.expr("unix_micros(w.start) div 3600000000"),
-                F.expr(
-                    "unix_micros(w.end - INTERVAL 30 MINUTES) div 3600000000"
-                ),
-            )
-        ).alias("h"),
+    sealed = _sealed_sessions(
+        spark, sf_dir, F.count(F.lit(1)).alias("n_events")
     )
-    return covered.groupBy("h").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sessions"),
-        F.count_distinct("user_id").cast("long").alias("n_users"),
-    ).select(
-        (F.col("h") * 3600000000).cast("long").alias("hour_start_us"),
-        "n_sessions",
-        "n_users",
+    return hourly_concurrency(
+        sealed.select(
+            "user_id",
+            F.expr(f"unix_micros(w.start) div {_HOUR_US}").alias("h1"),
+            F.expr(
+                f"unix_micros(w.end - INTERVAL 30 MINUTES) div {_HOUR_US}"
+            ).alias("h2"),
+        )
     )
 
 
@@ -1608,41 +1446,13 @@ _LAT_ALERT_SLA_US = 1_200_000_000  # 20-minute conversion-latency SLA
 @query(
     "stream_latency_alert_daily",
     oracle=f"""
-    WITH marked AS (
-      SELECT user_id, ts, event_type,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    islands AS (
-      SELECT user_id, ts, event_type,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sess
-      FROM marked
-    ),
-    s1 AS (
-      SELECT user_id, sess,
-             MIN(CASE WHEN event_type = 'view' THEN ts END) AS v,
-             MAX(ts) AS sess_end
-      FROM islands GROUP BY user_id, sess
-    ),
-    s3 AS (
-      SELECT s1.user_id, s1.sess, s1.v, s1.sess_end,
-             MIN(CASE WHEN i.event_type = 'purchase' AND i.ts >= s1.v
-                      THEN i.ts END) AS p
-      FROM s1 JOIN islands i
-        ON i.user_id = s1.user_id AND i.sess = s1.sess
-      GROUP BY s1.user_id, s1.sess, s1.v, s1.sess_end
-    ),
+    WITH {_SEALED_CONV_CTES},
     lat AS (
       SELECT epoch_us(v) // 86400000000 AS day,
              epoch_us(p) - epoch_us(v) AS us
       FROM s3
       WHERE p IS NOT NULL
-        AND sess_end + INTERVAL 30 MINUTE
-            <= (SELECT MAX(ts) - INTERVAL 1 HOUR FROM events)
+        AND {_SEALED_PRED}
     ),
     g AS (
       SELECT day, length(bin(us)) AS bl, CAST(COUNT(*) AS BIGINT) AS k
@@ -1686,7 +1496,8 @@ def stream_latency_alert_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts, purchase-ts list) per OPEN session — identical to the sealed
     sketch's store, bounded by open sessions, never corpus-sized. The
     verdict side stays a per-day ≤ 64-row log2 grid: `length(bin(us))`
-    buckets, cumulative rank via the bounded bl≤bl self-join, integer
+    buckets, cumulative rank via the bounded same-day self-join of the
+    grid (`log2_latency_readoff`, the batch sketch's kernel), integer
     cross-multiplication for the percentile ranks (2·cum ≥ n,
     10·cum ≥ 9·n — no division), and the alert compares the bucket's
     exact 2^bl − 1 upper bound against the SLA constant, so the
@@ -1703,67 +1514,10 @@ def stream_latency_alert_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     completes the state-on-stream / verdict-batch-side split with the
     threshold decision itself certified.
     """
-    e = (
-        _stream_events(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .select("user_id", "ts", "event_type")
-    )
-    agg = e.groupBy(
-        "user_id", F.session_window("ts", "30 minutes").alias("w")
-    ).agg(
-        F.min(
-            F.when(F.col("event_type") == "view", F.col("ts"))
-        ).alias("v"),
-        F.collect_list(
-            F.when(F.col("event_type") == "purchase", F.unix_micros("ts"))
-        ).alias("purchases"),
-    )
-    sealed = _run_to_memory(agg, "append")
-    lat = (
-        sealed.filter(F.col("v").isNotNull())
-        .select(
-            F.expr("unix_micros(v) div 86400000000").alias("day"),
-            F.unix_micros("v").alias("v_us"),
-            F.expr("array_min(filter(purchases, p -> p >= unix_micros(v)))")
-            .alias("p_us"),
-        )
-        .filter(F.col("p_us").isNotNull())
-        .select("day", (F.col("p_us") - F.col("v_us")).alias("us"))
-    )
-    b = lat.select("day", F.length(F.bin("us")).alias("bl"))
-    g = b.groupBy("day", "bl").agg(
-        F.count(F.lit(1)).cast("long").alias("k")
-    )
-    g2 = g.select(
-        F.col("day").alias("day2"),
-        F.col("bl").alias("bl2"),
-        F.col("k").alias("k2"),
-    )
-    c = (
-        g.join(
-            g2,
-            (F.col("day2") == F.col("day")) & (F.col("bl2") <= F.col("bl")),
-        )
-        .groupBy("day", "bl")
-        .agg(F.sum("k2").cast("long").alias("cum"))
-    )
-    n = b.groupBy("day").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    hi = F.expr("shiftleft(CAST(1 AS BIGINT), bl) - 1")
-    ro = (
-        c.join(n, "day")
-        .groupBy("day", "n")
-        .agg(
-            F.min(F.when(2 * F.col("cum") >= F.col("n"), hi))
-            .cast("long")
-            .alias("p50_hi_us"),
-            F.min(F.when(10 * F.col("cum") >= 9 * F.col("n"), hi))
-            .cast("long")
-            .alias("p90_hi_us"),
-        )
-    )
+    ro = log2_latency_readoff(_sealed_latencies(spark, sf_dir), by=("day",))
     return ro.select(
         (F.col("day") * 86400000000).cast("long").alias("day_start_us"),
-        F.col("n").alias("n_converted"),
+        "n_converted",
         "p50_hi_us",
         "p90_hi_us",
         F.when(F.col("p90_hi_us") > F.lit(_LAT_ALERT_SLA_US), F.lit(1))
@@ -1773,8 +1527,20 @@ def stream_latency_alert_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..operators.events import _CHANGEPOINT_ORACLE  # noqa: E402
-from ..operators.events import changepoint_verdict  # noqa: E402
+def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The daily-series arms' state: event counts per epoch-anchored
+    1-day tumbling window, run to a COMPLETE sink (COUNT merges in any
+    order, so out-of-order micro-batches cannot corrupt a day), as
+    ``(day, n)`` with ``day`` the epoch-day index. State is one row per
+    observed day."""
+    agg = (
+        _stream_events(spark, sf_dir)
+        .groupBy(F.window("ts", "1 day").alias("w"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
+    return _run_to_memory(agg, "complete").select(
+        F.expr("unix_micros(w.start) div 86400000000").alias("day"), "n"
+    )
 
 
 @query(
@@ -1801,15 +1567,7 @@ def stream_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     |days|² bounded triangular argmax.
 
     Reference basis: none; contract C5/C7 streaming family."""
-    e = _stream_events(spark, sf_dir)
-    agg = e.groupBy(F.window("ts", "1 day").alias("w")).agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    snap = _run_to_memory(agg, "complete")
-    d = snap.select(
-        F.expr("unix_micros(w.start) div 86400000000").alias("day"), "n"
-    )
-    return changepoint_verdict(d)
+    return changepoint_verdict(_daily_counts(spark, sf_dir))
 
 
 from ..functions.texttools import sql_hex_long  # noqa: E402
@@ -1981,15 +1739,7 @@ def stream_holt_forecast_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the horizon-bounded recursion plus 7 output rows.
 
     Reference basis: none; contract C5/C7 streaming family."""
-    e = _stream_events(spark, sf_dir)
-    agg = e.groupBy(F.window("ts", "1 day").alias("w")).agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    snap = _run_to_memory(agg, "complete")
-    d = snap.select(
-        F.expr("unix_micros(w.start) div 86400000000").alias("day"), "n"
-    )
-    return holt_forecast_verdict(d)
+    return holt_forecast_verdict(_daily_counts(spark, sf_dir))
 
 
 from ..operators.timeseries import _HW_ORACLE  # noqa: E402
@@ -2013,15 +1763,7 @@ def stream_holt_winters_weekly(
     the horizon-bounded 9-state recursion plus 7 output rows.
 
     Reference basis: none; contract C5/C7 streaming family."""
-    e = _stream_events(spark, sf_dir)
-    agg = e.groupBy(F.window("ts", "1 day").alias("w")).agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    snap = _run_to_memory(agg, "complete")
-    d = snap.select(
-        F.expr("unix_micros(w.start) div 86400000000").alias("day"), "n"
-    )
-    return holt_winters_verdict(d)
+    return holt_winters_verdict(_daily_counts(spark, sf_dir))
 
 
 from ..operators import _ivf  # noqa: E402
@@ -2472,11 +2214,9 @@ def stream_session_window_gap(
     Reference basis: none; contract C5/C6 streaming family — the
     dynamic-window rung beside `stream_tumbling_10min` /
     `stream_sliding_10min_5min`."""
-    e = _stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
-    s = e.groupBy(
-        F.session_window("ts", "30 minutes").alias("w"), "user_id"
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    snap = _run_to_memory(s, "append")
+    snap = _sealed_sessions(
+        spark, sf_dir, F.count(F.lit(1)).cast("long").alias("n_events")
+    )
     return snap.select(
         "user_id",
         F.unix_micros(F.col("w.start")).alias("session_start_us"),
@@ -2643,11 +2383,8 @@ def stream_release_admission_gate(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     sunk = _run_to_memory(out, "update")
-    # latest state per source: admitted grows monotonically and the
-    # exhaustion slice is set once, so max(struct) is the final row
-    fin = sunk.groupBy("source").agg(
-        F.max(F.struct("n_admitted", "exhausted_at_slice")).alias("s")
-    )
+    # admitted only grows and the exhaustion slice is set once
+    fin = _final_state(sunk, "source", "n_admitted", "exhausted_at_slice")
     arr = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_arrived")
     )
@@ -2662,16 +2399,13 @@ def stream_release_admission_gate(
             "source",
             F.coalesce("cap_docs", F.lit(0)).cast("long").alias("cap_docs"),
             "n_arrived",
-            F.coalesce(F.col("s.n_admitted"), F.lit(0))
+            F.coalesce("n_admitted", F.lit(0))
             .cast("long")
             .alias("n_admitted"),
-            (
-                F.col("n_arrived")
-                - F.coalesce(F.col("s.n_admitted"), F.lit(0))
-            )
+            (F.col("n_arrived") - F.coalesce("n_admitted", F.lit(0)))
             .cast("long")
             .alias("n_rejected"),
-            F.coalesce(F.col("s.exhausted_at_slice"), F.lit(-1))
+            F.coalesce("exhausted_at_slice", F.lit(-1))
             .cast("long")
             .alias("exhausted_at_slice"),
         )

@@ -100,3 +100,71 @@ def test_no_rewrite_without_match():
     sql = "SELECT 1 AS x"
     assert _apply_prefix_artifacts(con, sql, done) == sql
     assert done == {}
+
+
+_WINNOW_ORACLES = (
+    "dedup_winnowing_fingerprint_pairs",
+    "dedup_winnowing_containment",
+    "dedup_winnowing_clusters",
+    "dedup_repeated_span_audit",
+)
+
+
+def test_winnow_prefix_matches_all_winnowing_oracles():
+    """The window-minima prefix is byte-identical in all four
+    winnowing oracles, and the rewrite matches each of them — the
+    clusters oracle under its ``WITH RECURSIVE`` head."""
+    from catme_etl_spark.operators.registry import (
+        ORACLE,
+        ORACLE_CTE_PREFIXES,
+    )
+
+    prefix = ORACLE_CTE_PREFIXES["winnow_wmin"]
+    assert [n for n, _ in _split_with_ctes(prefix)] == [
+        "docs", "grams", "hashed", "wmin"
+    ]
+    ctes = prefix[len("WITH "):]
+    for name in _WINNOW_ORACLES:
+        assert ctes in ORACLE[name], name
+    assert "WITH RECURSIVE " + ctes in ORACLE["dedup_winnowing_clusters"]
+
+
+def test_rewrite_keeps_recursive_winnowing_clusters():
+    """On a crafted ``documents`` table (a three-document copy chain, a
+    copied pair, an unrelated document and one too short to winnow),
+    the rewritten clusters oracle keeps ``WITH RECURSIVE`` — its
+    ``walk`` CTE recurses — and returns the verbatim oracle's rows."""
+    from catme_etl_spark.operators.registry import ORACLE
+
+    base = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "sleeps on the warm windowsill in the afternoon sun"
+    )
+    other = (
+        "a completely different passage about rivers mountains and "
+        "the long road that winds through the quiet valley below"
+    )
+    docs = [
+        (1, base),
+        (2, base + " and then wakes up hungry for dinner"),
+        (3, "and then wakes up hungry for dinner " + base[:60]),
+        (4, "zebra crossing at midnight under neon lights " * 3),
+        (5, other),
+        (6, other + " at dusk"),
+        (7, "tiny"),
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * FROM (VALUES "
+        + ", ".join(f"({i}, '{t}')" for i, t in docs)
+        + ") t(doc_id, text)"
+    )
+    sql = ORACLE["dedup_winnowing_clusters"]
+    raw = sorted(con.execute(sql).fetchall())
+    done: dict = {}
+    rewritten = _apply_prefix_artifacts(con, sql, done)
+    assert "winnow_wmin" in done
+    assert rewritten.lstrip().startswith("WITH RECURSIVE docs AS (SELECT")
+    assert sorted(con.execute(rewritten).fetchall()) == raw
+    assert len(raw) >= 2  # the chain and the pair both cluster
+    con.close()

@@ -748,12 +748,37 @@ def test_single_batch_trigger_matches_multi_batch(spark, monkeypatch):
         "stream_session_sealed",        # append-mode session windows
         "stream_stateful_user_totals",  # update-mode custom state
         "stream_dedup_event_id",        # dropDuplicatesWithinWatermark
+        "stream_drift_gate",            # update-mode bin-count fold
+        "stream_latency_alert_daily",   # sealed sessions → log2 read-off
+        "stream_volume_anomaly_weekly", # complete-mode counts → MAD
     ):
         monkeypatch.setattr(jobs, "STREAM_MAX_FILES", 1)
         multi = sorted(tuple(r) for r in qs[name](spark, sf).collect())
         monkeypatch.undo()
         single = sorted(tuple(r) for r in qs[name](spark, sf).collect())
         assert multi == single and multi, name
+
+
+def test_drift_gate_matches_oracle_sf0001(spark):
+    """`stream_drift_gate` (the update-mode bin-count fold, its
+    final-state read and the bins_csv unpack feeding the batch PSI
+    verdict) equals its DuckDB oracle at sf0.001, by the row count and
+    value hash the correctness gate compares."""
+    import duckdb
+
+    import __spark_entry__ as e
+    from tools.check_oracle import _canon, _hash
+
+    sf = SF0001
+    got = e.queries()["stream_drift_gate"](spark, sf).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'"
+    )
+    want = con.execute(e.oracle_sql()["stream_drift_gate"]).fetchdf()
+    con.close()
+    assert len(got) == len(want) > 0
+    assert _hash(_canon(got)) == _hash(_canon(want))
 
 
 def test_scratch_parent_is_per_user_and_local_only(spark, tmp_path, monkeypatch):

@@ -16,6 +16,7 @@ from __future__ import annotations
 import argparse
 import hashlib
 import os
+import re
 import sys
 import time
 
@@ -78,8 +79,6 @@ def _split_with_ctes(prefix_sql: str) -> list[tuple[str, str]]:
             items.append(s[start:i])
             start = i + 1
     items.append(s[start:])
-    import re
-
     out = []
     for item in items:
         # `name AS (body)` or `name (col, …) AS (body)` — the column
@@ -105,15 +104,23 @@ def _apply_prefix_artifacts(con, sql: str, done: dict) -> str:
     """If ``sql`` embeds a registered oracle CTE prefix, materialize
     that prefix's CTEs as uniquely-named temp tables (once per
     session) and rewrite the query to read them. Equivalence-
-    preserving: keyed on byte-exact prefix text, deterministic SQL,
-    and the rewritten WITH keeps every CTE name in query scope (no
-    name pollution for non-matching queries)."""
+    preserving: keyed on the prefix's byte-exact CTE text (under a
+    plain WITH or a WITH RECURSIVE head, which the rewrite keeps),
+    deterministic SQL, and the rewritten WITH keeps every CTE name in
+    query scope (no name pollution for non-matching queries)."""
     from catme_etl_spark.operators.registry import ORACLE_CTE_PREFIXES
 
     for label, prefix in sorted(
         ORACLE_CTE_PREFIXES.items(), key=lambda kv: -len(kv[1])
     ):
-        if prefix not in sql:
+        # the CTE list may open a plain WITH or a WITH RECURSIVE (a
+        # later CTE of the query recurses); the rewrite keeps the head
+        ctes_sql = re.sub(r"^WITH(\s+RECURSIVE)?(?=\s)", "", prefix, flags=re.I)
+        head = next(
+            (h for h in ("WITH", "WITH RECURSIVE") if h + ctes_sql in sql),
+            None,
+        )
+        if head is None:
             continue
         if label not in done:
             ctes = _split_with_ctes(prefix)
@@ -129,7 +136,7 @@ def _apply_prefix_artifacts(con, sql: str, done: dict) -> str:
             f"{n} AS (SELECT * FROM __oart_{label}_{n})"
             for n, _ in done[label]
         )
-        return sql.replace(prefix, "WITH " + aliases, 1)
+        return sql.replace(head + ctes_sql, f"{head} {aliases}", 1)
     return sql
 
 
