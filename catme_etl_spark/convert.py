@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .monitor import observe_counts
 from .operators.pipeline import run_pipeline
 from .sinks.json_sink import merged_json_array, write_json
-from .sources.files import discover_input, read_auto
+from .sources.files import read_auto
 
 DEFAULT_CHUNK_SIZE = 500  # `unified_code.py:397,484`
 TEST_MODE_CHUNKS = 3  # `unified_code.py:441`
@@ -85,11 +85,3 @@ def convert(
     if array_parity:
         stats = merged_json_array(df, output_path + ".array.json", order_by=order_by)
     return ConvertResult(rows=rows, output_path=output_path, stats=stats)
-
-
-def convert_dir(
-    spark: SparkSession, input_dir: str, output_path: str, **kwargs
-) -> ConvertResult:
-    """Directory entry point: first supported file, like the reference's
-    input discovery (`unified_code.py:493-496`)."""
-    return convert(spark, discover_input(input_dir), output_path, **kwargs)

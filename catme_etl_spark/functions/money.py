@@ -48,6 +48,22 @@ def money_sum(col: Column | str) -> Column:
     return money_from_cents(F.sum(cents(col)))
 
 
+def half_up(c: Column, digits: int) -> Column:
+    """Round half up to ``digits`` decimals on the binary double:
+    ``floor(x * 10^digits + 0.5) / 10^digits``.
+
+    This is the float grid the oracles spell out, and DuckDB computes
+    the same IEEE operations, so both engines land on the same value
+    for either sign. ``F.round`` is not a substitute: it rounds the
+    decimal expansion, and on binary ties it disagrees with DuckDB's
+    ``ROUND``. Spark's ``floor`` returns a bigint, so the result is
+    never ``-0.0``. The integer literals keep every plan built on it
+    the same as the spelled-out expression.
+    """
+    scale = 10**digits
+    return F.floor(c * scale + F.lit(0.5)) / scale
+
+
 def money_from_cents(sum_col: Column, scale: int = 100) -> Column:
     """Exact integer aggregate → dollars, rounded to 2 decimals.
 

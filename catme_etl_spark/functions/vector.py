@@ -62,10 +62,6 @@ def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     return acc
 
 
-def norm_unrolled(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_unrolled(a, a, dim))
-
-
 def dim_of(df, col: str = "embedding") -> int:
     """Vector width probe (one-row scan). Parquet arrays carry no static
     length, so O(n²) kernels probe once and unroll to that width."""

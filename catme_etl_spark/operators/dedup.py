@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import half_up
 from ..functions.texttools import (
     MINHASH_P,
     hex_prefix_long,
@@ -1547,13 +1548,12 @@ def dedup_minhash_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.sum(F.when(F.col("ha") == F.col("hb"), 1).otherwise(0)).alias("k"))
     )
     est = F.col("k") / 32.0
-    half = lambda c: F.floor(c * 10000 + F.lit(0.5)) / 10000  # noqa: E731
     return agree.select(
         "doc_a",
         "doc_b",
-        half(est).alias("est_jaccard"),
-        half(F.col("jaccard")).alias("exact_jaccard"),
-        half(F.abs(est - F.col("jaccard"))).alias("abs_err"),
+        half_up(est, 4).alias("est_jaccard"),
+        half_up(F.col("jaccard"), 4).alias("exact_jaccard"),
+        half_up(F.abs(est - F.col("jaccard")), 4).alias("abs_err"),
     )
 
 
@@ -1646,19 +1646,13 @@ def dedup_minhash_scurve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagged.groupBy("j_bucket").agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.sum("hit").cast("long").alias("n_candidates"),
-        (
-            F.floor(
-                (F.sum("hit").cast("double") / F.count(F.lit(1))) * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("obs_rate"),
+        half_up(F.sum("hit").cast("double") / F.count(F.lit(1)), 6).alias("obs_rate"),
     ).select(
         "j_bucket",
         "n_pairs",
         "n_candidates",
         "obs_rate",
-        (F.floor(theo * 1000000 + F.lit(0.5)) / 1000000).alias("theo_rate"),
+        half_up(theo, 6).alias("theo_rate"),
     )
 
 
@@ -1932,8 +1926,8 @@ def sim_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σdeg² — the wedge count this query itself reports, the number to
     watch before re-running at a lower threshold. Wedges are exact
     integer Σ d·(d−1)/2; the coefficient is one final division of exact
-    integers, rounded via the pinned half-away idiom
-    floor(x*1e6+0.5)/1e6 identical on both engines."""
+    integers, rounded with ``half_up(x, 6)``, which both engines
+    compute identically."""
     e = _cos_pair_edges(spark, sf_dir)
     deg = (
         e.select(F.explode(F.array("vec_a", "vec_b")).alias("v"))
@@ -1964,13 +1958,7 @@ def sim_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_wedges",
             "n_triangles",
             F.when(F.col("n_wedges") == 0, F.lit(0.0))
-            .otherwise(
-                F.floor(
-                    3.0 * F.col("n_triangles") / F.col("n_wedges") * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            )
+            .otherwise(half_up(3.0 * F.col("n_triangles") / F.col("n_wedges"), 6))
             .alias("clustering_coeff"),
         )
     )
@@ -2158,13 +2146,8 @@ def dedup_lsh_parameter_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "n_bands",
         "rows_per_band",
-        (
-            F.floor(
-                F.pow(1.0 / F.col("n_bands"), 1.0 / F.col("rows_per_band"))
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        half_up(
+            F.pow(1.0 / F.col("n_bands"), 1.0 / F.col("rows_per_band")), 6
         ).alias("s_star"),
         "fp_area_ppm",
         "fn_area_ppm",

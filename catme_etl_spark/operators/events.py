@@ -24,9 +24,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import money_sum
+from ..functions.money import half_up, money_sum
 from ..sources.tables import load_table
-from ._shared import require_bounded
+from ._shared import require_bounded, shared_df
 from .registry import query
 
 
@@ -491,8 +491,8 @@ def events_pareto_user_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "decile",
             "n_users",
             "n_events",
-            (F.floor(share * 1000000 + F.lit(0.5)) / 1000000).alias("share"),
-            (F.floor(cum * 1000000 + F.lit(0.5)) / 1000000).alias("cum_share"),
+            half_up(share, 6).alias("share"),
+            half_up(cum, 6).alias("cum_share"),
         )
     )
 
@@ -583,12 +583,21 @@ def _conversion_latencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side of ``_LAT_CTES``: one row per converting session,
     column ``us`` = exact first-view→first-subsequent-purchase
     microseconds. Sessionization is one user-keyed window; both
-    follow-up aggregations reuse the (user_id, sess) partitioning."""
-    islands = _islands(spark, sf_dir)
-    s3 = _first_after(_first_view(islands), islands, "purchase", "v", "p")
-    return s3.filter(F.col("p").isNotNull()).select(
-        (F.unix_micros("p") - F.unix_micros("v")).alias("us")
-    )
+    follow-up aggregations reuse the (user_id, sess) partitioning.
+
+    The set is small and its lineage is not: the quartile query reads
+    it in four branches and the log2 sketch in two, and each branch
+    would rerun the windows. So it is built once per session and
+    checkpointed (``shared_df(materialize=True)``)."""
+
+    def build() -> DataFrame:
+        islands = _islands(spark, sf_dir)
+        s3 = _first_after(_first_view(islands), islands, "purchase", "v", "p")
+        return s3.filter(F.col("p").isNotNull()).select(
+            (F.unix_micros("p") - F.unix_micros("v")).alias("us")
+        )
+
+    return shared_df("conversion_latencies", sf_dir, spark, build, materialize=True)
 
 
 @query(
@@ -741,7 +750,7 @@ def events_poisson_burst_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "bucket",
             "n",
-            (F.floor(z * 10000 + F.lit(0.5)) / 10000).alias("z"),
+            half_up(z, 4).alias("z"),
         )
     )
 
@@ -790,13 +799,8 @@ def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("gap_us").isNotNull())
     return g.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_gaps"),
-        (
-            F.floor(
-                (F.sum("gap_us").cast("double") / F.count(F.lit(1)) / 1000000.0)
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        half_up(
+            F.sum("gap_us").cast("double") / F.count(F.lit(1)) / 1000000.0, 4
         ).alias("mean_gap_s"),
         F.expr("max(gap_us) div 1000000").alias("max_gap_s"),
     )
@@ -931,10 +935,9 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (two tiny re-aggs into |weeks| rows joined at the end, both
     reusing the same exchange under AQE). No window functions, no
     per-event shuffle. avg_dau is an average of integer day-counts and
-    stickiness a ratio of such averages — both pinned with the module's
-    half-away idiom floor(x*1e4+0.5)/1e4 written identically on both
-    engines (Spark F.round vs DuckDB ROUND disagree on binary ties);
-    the counts are BIGINT on both sides."""
+    stickiness a ratio of such averages — both pinned with
+    ``half_up(x, 4)``, which both engines compute identically; the
+    counts are BIGINT on both sides."""
     du = (
         _events(spark, sf_dir)
         .select(F.to_date("ts").alias("d"), "user_id")
@@ -943,9 +946,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     dau = du.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
     wk_dau = (
         dau.groupBy(F.to_date(F.date_trunc("week", "d")).alias("wk"))
-        .agg(
-            (F.floor(F.avg("dau") * 10000 + F.lit(0.5)) / 10000).alias("avg_dau")
-        )
+        .agg(half_up(F.avg("dau"), 4).alias("avg_dau"))
     )
     wau = (
         du.groupBy(F.to_date(F.date_trunc("week", "d")).alias("wk"))
@@ -955,9 +956,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "wk",
         "avg_dau",
         "wau",
-        (
-            F.floor(F.col("avg_dau") / F.col("wau") * 10000 + F.lit(0.5)) / 10000
-        ).alias("stickiness"),
+        half_up(F.col("avg_dau") / F.col("wau"), 4).alias("stickiness"),
     )
 
 
@@ -1021,16 +1020,12 @@ def events_assoc_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ca = ct.select(F.col("event_type").alias("type_a"), F.col("n_t").alias("n_a"))
     cb = ct.select(F.col("event_type").alias("type_b"), F.col("n_t").alias("n_b"))
-    lift = (
-        F.floor(
-            F.col("n_ab").cast("double")
-            * F.col("n_users")
-            / F.col("n_a")
-            / F.col("n_b")
-            * 10000
-            + F.lit(0.5)
-        )
-        / 10000
+    lift = half_up(
+        F.col("n_ab").cast("double")
+        * F.col("n_users")
+        / F.col("n_a")
+        / F.col("n_b"),
+        4,
     )
     return (
         pairs.join(F.broadcast(ca), "type_a")
@@ -1565,13 +1560,11 @@ def events_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         degen.alias("degenerate"),
         F.when(degen, F.lit(0.0))
         .otherwise(
-            F.floor(
+            half_up(
                 num.cast("double")
-                / (F.sqrt(d1.cast("double")) * F.sqrt(d2.cast("double")))
-                * 10000
-                + F.lit(0.5)
+                / (F.sqrt(d1.cast("double")) * F.sqrt(d2.cast("double"))),
+                4,
             )
-            / 10000
         )
         .alias("autocorr"),
     )
@@ -1733,12 +1726,10 @@ def events_retention_halflife_fit(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("k").alias("n_points"),
         degen.alias("degenerate"),
         F.when(degen, F.lit(0.0))
-        .otherwise(F.floor(slope * 1000000 + F.lit(0.5)) / 1000000)
+        .otherwise(half_up(slope, 6))
         .alias("slope_per_week"),
         F.when(degen | (slope >= 0), F.lit(0.0))
-        .otherwise(
-            F.floor(F.log(F.lit(2.0)) / (-slope) * 10000 + F.lit(0.5)) / 10000
-        )
+        .otherwise(half_up(F.log(F.lit(2.0)) / (-slope), 4))
         .alias("halflife_weeks"),
     )
 
@@ -2334,7 +2325,6 @@ def events_changepoint_two_level(
 
     Reference basis: none; contract ops-analytics/time-series family
     — the depth-2 rung above `events_changepoint_max_meanshift`."""
-    from ._shared import shared_df
 
     def build() -> DataFrame:
         d = (

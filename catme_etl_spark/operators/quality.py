@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import cents, pct100
+from ..functions.money import cents, half_up, pct100
 from ..functions.texttools import sql_hex_long
 from ..sources.tables import load_table
 from .registry import query
@@ -30,12 +30,6 @@ from .sampling import hash_bucket
 # the deterministic 80/10/10 split bucket of sample_train_val_test,
 # as DuckDB SQL (md5 of the doc id -> 56-bit int -> mod 100)
 _SPLIT_BKT_SQL = "(" + sql_hex_long("md5(CAST(doc_id AS VARCHAR))", 14, 1) + " % 100)"
-
-
-def _r4(c: Column) -> Column:
-    """Round half away from zero to 4 decimals — the engine-identical
-    ``floor(x*10000+0.5)/10000`` idiom the oracles spell out."""
-    return F.floor(c * 10000 + F.lit(0.5)) / 10000
 
 
 def _fk_violations(
@@ -468,8 +462,8 @@ def quality_anomaly_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = dev.join(F.broadcast(mad), "event_type")
     return j.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        _r4(F.max("m") / 100.0).alias("med_value"),
-        _r4(F.max("mad") / 100.0).alias("mad_value"),
+        half_up(F.max("m") / 100.0, 4).alias("med_value"),
+        half_up(F.max("mad") / 100.0, 4).alias("mad_value"),
         F.count(
             F.when(10000 * F.col("d") > 44478 * F.col("mad"), 1)
         ).cast("long").alias("n_outliers"),
@@ -714,8 +708,8 @@ def _profile_base_aggs() -> list[Column]:
             x
             for _, col in _PROFILE_NUM
             for x in (
-                _r4(F.min(col)).alias(f"{col}_min"),
-                _r4(F.max(col)).alias(f"{col}_max"),
+                half_up(F.min(col), 4).alias(f"{col}_min"),
+                half_up(F.max(col), 4).alias(f"{col}_max"),
             )
         ],
     ]
@@ -1020,12 +1014,7 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ta").alias("n_first_half"),
             F.col("tb").alias("n_second_half"),
         )
-        .agg(
-            (
-                F.floor(F.sum((pa - pb) * F.log(pa / pb)) * 10000 + 0.5)
-                / 10000
-            ).alias("psi_r4")
-        )
+        .agg(half_up(F.sum((pa - pb) * F.log(pa / pb)), 4).alias("psi_r4"))
         .orderBy("event_type")
     )
 
@@ -1085,7 +1074,7 @@ def pipeline_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "psi_r4",
             "ks_d",
-            (F.floor(crit * 1000000 + F.lit(0.5)) / 1000000).alias("ks_crit"),
+            half_up(crit, 6).alias("ks_crit"),
             F.when(
                 (F.col("psi_r4") >= 0.25) | (F.col("ks_d") > crit), "hold"
             )

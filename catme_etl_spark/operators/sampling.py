@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.money import cents
+from ..functions.money import cents, half_up
 from ..functions.texttools import hex_prefix_long, sql_hex_long, tokens
 from ..sources.tables import load_table
 from .registry import query
@@ -547,8 +547,8 @@ def sample_epoch_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast triangular self-join (module-wide single-partition
     WindowExec ban); epoch ceiling is pure integer
     ((target+avail−1) div avail) — no float boundary anywhere except
-    the reported repeat_factor, rounded via the pinned half-away idiom
-    floor(x*1e4+0.5)/1e4 identically on both engines.
+    the reported repeat_factor, rounded with ``half_up(x, 4)``, which
+    both engines compute identically.
 
     Degenerate edge, guarded LOUDLY on both engines: a source whose
     every document tokenizes to 0 tokens (reachable since ``tokens()``
@@ -583,11 +583,7 @@ def sample_epoch_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("target").cast("long").alias("target_tokens"),
         F.when(
             F.col("avail") > 0,
-            F.floor(
-                F.col("target").cast("double") / F.col("avail") * 10000
-                + F.lit(0.5)
-            )
-            / 10000,
+            half_up(F.col("target").cast("double") / F.col("avail"), 4),
         )
         .otherwise(F.expr(f"raise_error('{guard_msg}')"))
         .alias("repeat_factor"),
@@ -1190,8 +1186,6 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: none; contract curation-economics family (SURVEY
     §2.10), beside `sample_token_budget_apportion` (proportional) and
     `sample_sqrt_temperature_mix` (tau=0.5 rebalance)."""
-    from ..functions.money import cents
-
     x = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("stratum"),
         F.expr(
@@ -1611,7 +1605,6 @@ def sample_poststrat_weights(
 
     Reference basis: none; contract curation-economics family (SURVEY
     §2.10) — the rung above `sample_neyman_draw`."""
-    from ..functions.money import cents
     from ._shared import shared_df
 
     draw = shared_df(
@@ -1787,16 +1780,12 @@ def sample_importance_reweight(
             F.expr("(n_docs * weight_ppm) div 1000000")
             .cast("long")
             .alias("effective_docs"),
-            (
-                F.floor(
-                    F.col("sw").cast("double")
-                    * F.col("sw")
-                    / F.col("total_g")
-                    / F.col("sww").cast("double")
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
+            half_up(
+                F.col("sw").cast("double")
+                * F.col("sw")
+                / F.col("total_g")
+                / F.col("sww").cast("double"),
+                4,
             ).alias("ess_ratio"),
         )
         .orderBy("source")

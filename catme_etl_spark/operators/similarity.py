@@ -34,9 +34,10 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import half_up
 from ..functions.texttools import hex_prefix_long, sql_hex_long
 from ..functions.vector import SQL_NORM, make_cosine_pandas_udf, sql_cosine
 from ..sources.tables import load_table
@@ -504,24 +505,19 @@ def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     km = ivf_kmeans_topk_plan(spark, sf_dir).select("query_id", "neighbor_id")
     stride = sim_ivf_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    km_hit = km.join(truth, ["query_id", "neighbor_id"])
-    st_hit = stride.join(truth, ["query_id", "neighbor_id"])
     return (
-        truth.agg(
-            F.countDistinct("query_id").alias("n_queries"),
-            F.count(F.lit(1)).alias("_n_truth"),
-        )
-        .crossJoin(km_hit.agg(F.count(F.lit(1)).alias("_n_km")))
-        .crossJoin(st_hit.agg(F.count(F.lit(1)).alias("_n_st")))
+        _truth_counts(truth)
+        .crossJoin(_hit_count(km, truth, "_n_km"))
+        .crossJoin(_hit_count(stride, truth, "_n_st"))
         .select(
             "n_queries",
             F.lit(TOP_K).alias("top_k"),
             (
-                F.col("_n_km") >= _KMEANS_RECALL_FLOOR * F.col("_n_truth")
+                F.col("_n_km") >= _KMEANS_RECALL_FLOOR * F.col("n_truth")
             ).alias("recall_floor_ok"),
             (
                 F.col("_n_km")
-                >= F.col("_n_st") - _STRIDE_SLACK * F.col("_n_truth")
+                >= F.col("_n_st") - _STRIDE_SLACK * F.col("n_truth")
             ).alias("at_least_stride_ok"),
         )
     )
@@ -1253,13 +1249,8 @@ def sim_srp_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_true",
             "n_candidates",
             "n_retrieved",
-            (
-                F.floor(
-                    (F.col("n_retrieved").cast("double") / F.col("n_true"))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            half_up(
+                F.col("n_retrieved").cast("double") / F.col("n_true"), 6
             ).alias("recall"),
         )
     )
@@ -1336,27 +1327,7 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ivf = sim_ivf_topk(spark, sf_dir).select("query_id", "neighbor_id")
     brute = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = ivf.join(brute, ["query_id", "neighbor_id"])
-    return (
-        brute.agg(
-            F.count_distinct("query_id").alias("n_queries"),
-            F.count(F.lit(1)).alias("n_truth"),
-        )
-        .crossJoin(F.broadcast(hits.agg(F.count(F.lit(1)).alias("n_hits"))))
-        .select(
-            "n_queries",
-            "n_truth",
-            "n_hits",
-            (
-                F.floor(
-                    (F.col("n_hits").cast("double") / F.col("n_truth"))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias(f"recall_at_{TOP_K}"),
-        )
-    )
+    return _recall_row(ivf, brute)
 
 
 def _int8_topk_against(bc, k: int):
@@ -1482,27 +1453,7 @@ def sim_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="query_id long, rank long, neighbor_id long, qdot long",
     ).select("query_id", "neighbor_id")
     brute = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = qtop.join(brute, ["query_id", "neighbor_id"])
-    return (
-        brute.agg(
-            F.count_distinct("query_id").alias("n_queries"),
-            F.count(F.lit(1)).alias("n_truth"),
-        )
-        .crossJoin(F.broadcast(hits.agg(F.count(F.lit(1)).alias("n_hits"))))
-        .select(
-            "n_queries",
-            "n_truth",
-            "n_hits",
-            (
-                F.floor(
-                    (F.col("n_hits").cast("double") / F.col("n_truth"))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias(f"recall_at_{TOP_K}"),
-        )
-    )
+    return _recall_row(qtop, brute)
 
 
 # --- product quantization (PQ) audit tier -------------------------------
@@ -1746,24 +1697,19 @@ def sim_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained = fan_out(emb, spark).mapInPandas(
         trained_gen, schema=RANK_SCHEMA
     ).select("query_id", "neighbor_id")
-    t_hit = trained.join(exact, ["query_id", "neighbor_id"])
-    s_hit = stride.join(exact, ["query_id", "neighbor_id"])
     return (
-        exact.agg(
-            F.count_distinct("query_id").alias("n_queries"),
-            F.count(F.lit(1)).alias("_n_truth"),
-        )
-        .crossJoin(F.broadcast(t_hit.agg(F.count(F.lit(1)).alias("_n_t"))))
-        .crossJoin(F.broadcast(s_hit.agg(F.count(F.lit(1)).alias("_n_s"))))
+        _truth_counts(exact)
+        .crossJoin(F.broadcast(_hit_count(trained, exact, "_n_t")))
+        .crossJoin(F.broadcast(_hit_count(stride, exact, "_n_s")))
         .select(
             "n_queries",
             F.lit(TOP_K).alias("top_k"),
             (
-                F.col("_n_t") >= _PQ_TRAINED_FLOOR * F.col("_n_truth")
+                F.col("_n_t") >= _PQ_TRAINED_FLOOR * F.col("n_truth")
             ).alias("trained_floor_ok"),
             (
                 F.col("_n_t")
-                >= F.col("_n_s") - _PQ_TRAINED_STRIDE_MARGIN * F.col("_n_truth")
+                >= F.col("_n_s") - _PQ_TRAINED_STRIDE_MARGIN * F.col("n_truth")
             ).alias("at_least_stride_ok"),
         )
     )
@@ -1788,6 +1734,54 @@ def _md5_panel(emb: DataFrame) -> DataFrame:
         .orderBy("_pk", "vec_id")
         .limit(PQ_PANEL_N)
         .drop("_pk")
+    )
+
+
+# --- recall@k tail shared by the ANN audits -----------------------------
+# truth and found are (query_id, neighbor_id) sets; recall@k is the share
+# of true pairs that the tier found.
+
+
+def _truth_counts(truth: DataFrame) -> DataFrame:
+    """One row: ``n_queries`` (distinct queries) and ``n_truth`` (true
+    pairs), the recall denominator."""
+    return truth.agg(
+        F.count_distinct("query_id").alias("n_queries"),
+        F.count(F.lit(1)).alias("n_truth"),
+    )
+
+
+def _hits(found: DataFrame, truth: DataFrame) -> DataFrame:
+    """The found (query_id, neighbor_id) pairs that are true pairs."""
+    return found.join(truth, ["query_id", "neighbor_id"])
+
+
+def _hit_count(
+    found: DataFrame, truth: DataFrame, name: str = "n_hits", by: tuple = ()
+) -> DataFrame:
+    """The number of found pairs that are true pairs, as ``name``: one
+    row, or one per ``by`` group."""
+    return _hits(found, truth).groupBy(*by).agg(F.count(F.lit(1)).alias(name))
+
+
+def _recall(hits: Column | str = "n_hits") -> Column:
+    """``hits / n_truth`` on the 6-decimal half-up grid."""
+    h = F.col(hits) if isinstance(hits, str) else hits
+    return half_up(h.cast("double") / F.col("n_truth"), 6)
+
+
+def _recall_row(found: DataFrame, truth: DataFrame) -> DataFrame:
+    """The exact-recall audit row: ``n_queries``, ``n_truth``,
+    ``n_hits`` and ``recall_at_{TOP_K}``."""
+    return (
+        _truth_counts(truth)
+        .crossJoin(F.broadcast(_hit_count(found, truth)))
+        .select(
+            "n_queries",
+            "n_truth",
+            "n_hits",
+            _recall().alias(f"recall_at_{TOP_K}"),
+        )
     )
 
 
@@ -1851,24 +1845,19 @@ def sim_pq_recall_sampled_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained = fan_out(panel, spark).mapInPandas(
         trained_gen, schema=RANK_SCHEMA
     ).select("query_id", "neighbor_id")
-    t_hit = trained.join(exact, ["query_id", "neighbor_id"])
-    s_hit = stride.join(exact, ["query_id", "neighbor_id"])
     return (
-        exact.agg(
-            F.count_distinct("query_id").alias("n_queries"),
-            F.count(F.lit(1)).alias("_n_truth"),
-        )
-        .crossJoin(F.broadcast(t_hit.agg(F.count(F.lit(1)).alias("_n_t"))))
-        .crossJoin(F.broadcast(s_hit.agg(F.count(F.lit(1)).alias("_n_s"))))
+        _truth_counts(exact)
+        .crossJoin(F.broadcast(_hit_count(trained, exact, "_n_t")))
+        .crossJoin(F.broadcast(_hit_count(stride, exact, "_n_s")))
         .select(
             "n_queries",
             F.lit(TOP_K).alias("top_k"),
             (
-                F.col("_n_t") >= _PQ_TRAINED_FLOOR * F.col("_n_truth")
+                F.col("_n_t") >= _PQ_TRAINED_FLOOR * F.col("n_truth")
             ).alias("trained_floor_ok"),
             (
                 F.col("_n_t")
-                >= F.col("_n_s") - _PQ_TRAINED_STRIDE_MARGIN * F.col("_n_truth")
+                >= F.col("_n_s") - _PQ_TRAINED_STRIDE_MARGIN * F.col("n_truth")
             ).alias("at_least_stride_ok"),
         )
     )
@@ -1973,27 +1962,7 @@ def sim_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = fan_out(emb, spark).mapInPandas(
         exact_gen, schema=RANK_SCHEMA
     ).select("query_id", "neighbor_id")
-    hits = pqtop.join(exact, ["query_id", "neighbor_id"])
-    return (
-        exact.agg(
-            F.count_distinct("query_id").alias("n_queries"),
-            F.count(F.lit(1)).alias("n_truth"),
-        )
-        .crossJoin(F.broadcast(hits.agg(F.count(F.lit(1)).alias("n_hits"))))
-        .select(
-            "n_queries",
-            "n_truth",
-            "n_hits",
-            (
-                F.floor(
-                    (F.col("n_hits").cast("double") / F.col("n_truth"))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias(f"recall_at_{TOP_K}"),
-        )
-    )
+    return _recall_row(pqtop, exact)
 
 
 @query(
@@ -2025,25 +1994,19 @@ def emb_dimension_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable hash-agg into |dims| rows — the same shuffle shape as
     `embeddings_centroid_by_label` (partial (sum, sumsq, count, min,
     max) per task per dim, never raw vectors). Float32 inputs widen to
-    double exactly; population stddev on both engines; the module's
-    half-away idiom floor(x*1e5+0.5)/1e5 — written identically on both
-    engines, deterministic for either sign, and never producing -0.0 —
-    pins accumulation-order noise (F.round vs DuckDB ROUND disagree on
-    binary ties)."""
+    double exactly; population stddev on both engines; ``half_up(x, 5)``
+    pins accumulation-order noise on a grid both engines compute the
+    same way."""
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.col("v").cast("double")
-
-    def _r5(c):
-        return F.floor(c * 100000 + F.lit(0.5)) / 100000
-
     return (
         emb.select(F.posexplode("embedding").alias("pos", "v"))
         .groupBy((F.col("pos") + 1).alias("dim"))
         .agg(
-            _r5(F.avg(v)).alias("mean_v"),
-            _r5(F.stddev_pop(v)).alias("std_v"),
-            _r5(F.min(v)).alias("min_v"),
-            _r5(F.max(v)).alias("max_v"),
+            half_up(F.avg(v), 5).alias("mean_v"),
+            half_up(F.stddev_pop(v), 5).alias("std_v"),
+            half_up(F.min(v), 5).alias("min_v"),
+            half_up(F.max(v), 5).alias("max_v"),
         )
     )
 
@@ -2075,20 +2038,19 @@ def sim_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle, so the doubles agree to the last ulp BEFORE
     rounding) — then a map-side-combinable agg into a constant-size
     bin grid. Nothing but the histogram crosses the driver. Both
-    roundings use the module's half-away idiom floor(x*10^k+0.5)/10^k
-    written identically on both engines (F.round vs DuckDB ROUND
-    disagree on binary ties)."""
+    roundings are ``half_up``, which both engines compute
+    identically."""
     from ..functions.vector import norm
 
     n = load_table(spark, sf_dir, "embeddings").select(
-        (F.floor(norm(F.col("embedding")) * 1000000 + F.lit(0.5)) / 1000000)
+        half_up(norm(F.col("embedding")), 6)
         .alias("nr")
     )
     return n.groupBy(
         F.floor(F.col("nr") / 0.25).cast("long").alias("norm_bin")
     ).agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        (F.floor(F.avg("nr") * 10000 + F.lit(0.5)) / 10000).alias("avg_norm"),
+        half_up(F.avg("nr"), 4).alias("avg_norm"),
     )
 
 
@@ -2129,10 +2091,9 @@ def sim_centroid_distance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, kilobytes at any corpus size. Centroids are rounded to 5 ON
     BOTH ENGINES before any pair math (the `sim_centroid_assign_audit`
     float discipline), so distances derive from identical inputs; the
-    64-term pair sums are order-stable well past the final half-away
-    floor-round at 4 decimals (the module's pinned idiom — F.round vs
-    DuckDB ROUND disagree on binary ties, and cosine can be negative,
-    where floor(x*1e4+0.5)/1e4 stays engine-identical)."""
+    64-term pair sums are order-stable well past the final
+    ``half_up(x, 4)``, which stays engine-identical for negative
+    cosines too."""
     c = embeddings_centroid_by_label(spark, sf_dir)
     a = c.select(
         F.col("label").alias("label_a"), "dim", F.col("centroid_v").alias("va")
@@ -2149,30 +2110,19 @@ def sim_centroid_distance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("label_a", "label_b")
         .agg(
-            (
-                F.floor(
-                    F.sqrt(
-                        F.sum(
-                            (F.col("va") - F.col("vb"))
-                            * (F.col("va") - F.col("vb"))
-                        )
-                    )
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
+            half_up(
+                F.sqrt(
+                    F.sum((F.col("va") - F.col("vb")) * (F.col("va") - F.col("vb")))
+                ),
+                4,
             ).alias("l2_dist"),
-            (
-                F.floor(
-                    F.sum(F.col("va") * F.col("vb"))
-                    / (
-                        F.sqrt(F.sum(F.col("va") * F.col("va")))
-                        * F.sqrt(F.sum(F.col("vb") * F.col("vb")))
-                    )
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
+            half_up(
+                F.sum(F.col("va") * F.col("vb"))
+                / (
+                    F.sqrt(F.sum(F.col("va") * F.col("va")))
+                    * F.sqrt(F.sum(F.col("vb") * F.col("vb")))
+                ),
+                4,
             ).alias("cosine"),
         )
     )
@@ -2324,7 +2274,7 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         tier_rank(4).alias("rank4"),
     )
     brute = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = ranked.join(brute, ["query_id", "neighbor_id"]).agg(
+    hits = _hits(ranked, brute).agg(
         *[
             F.sum(
                 F.when(
@@ -2337,25 +2287,15 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in (1, 2, 4)
         ]
     )
-    t = brute.agg(
-        F.count_distinct("query_id").cast("long").alias("n_queries"),
-        F.count(F.lit(1)).cast("long").alias("n_truth"),
-    )
     curve = hits.selectExpr(
         "stack(3, 1, h1, 2, h2, 4, h4) AS (nprobe, n_hits)"
     )
-    return curve.crossJoin(F.broadcast(t)).select(
+    return curve.crossJoin(F.broadcast(_truth_counts(brute))).select(
         F.col("nprobe").cast("long").alias("nprobe"),
         "n_queries",
         "n_truth",
         "n_hits",
-        (
-            F.floor(
-                F.col("n_hits").cast("double") / F.col("n_truth") * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
-        ).alias(f"recall_at_{TOP_K}"),
+        _recall().alias(f"recall_at_{TOP_K}"),
     )
 
 
@@ -2676,7 +2616,7 @@ def sim_recall_vs_k_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
     )
     h = (
-        qtop.join(brute, ["query_id", "neighbor_id"])
+        _hits(qtop, brute)
         .crossJoin(F.broadcast(ks))
         .filter((F.col("rk") <= F.col("k")) & (F.col("rank_b") <= F.col("k")))
         .groupBy("k")
@@ -2688,15 +2628,7 @@ def sim_recall_vs_k_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("k").alias("top_k"),
             F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
             "n_truth",
-            (
-                F.floor(
-                    F.coalesce("n_hits", F.lit(0)).cast("double")
-                    / F.col("n_truth")
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("recall"),
+            _recall(F.coalesce("n_hits", F.lit(0))).alias("recall"),
         )
     )
 
@@ -2932,25 +2864,20 @@ def sim_pq_trained_recall_clustered(
     trained = fan_out(panel, spark).mapInPandas(
         _swap_clustered_gen(trained_gen, cl_bc), schema=RANK_SCHEMA
     ).select("query_id", "neighbor_id")
-    t_hit = trained.join(exact, ["query_id", "neighbor_id"])
-    s_hit = stride.join(exact, ["query_id", "neighbor_id"])
     return (
-        exact.agg(
-            F.count_distinct("query_id").alias("n_queries"),
-            F.count(F.lit(1)).alias("_n_truth"),
-        )
-        .crossJoin(F.broadcast(t_hit.agg(F.count(F.lit(1)).alias("_n_t"))))
-        .crossJoin(F.broadcast(s_hit.agg(F.count(F.lit(1)).alias("_n_s"))))
+        _truth_counts(exact)
+        .crossJoin(F.broadcast(_hit_count(trained, exact, "_n_t")))
+        .crossJoin(F.broadcast(_hit_count(stride, exact, "_n_s")))
         .select(
             "n_queries",
             F.lit(TOP_K).alias("top_k"),
             (
-                F.col("_n_t") >= _CLUSTERED_TRAINED_FLOOR * F.col("_n_truth")
+                F.col("_n_t") >= _CLUSTERED_TRAINED_FLOOR * F.col("n_truth")
             ).alias("clustered_floor_ok"),
             (
                 F.col("_n_t")
                 >= F.col("_n_s")
-                - _CLUSTERED_STRIDE_MARGIN * F.col("_n_truth")
+                - _CLUSTERED_STRIDE_MARGIN * F.col("n_truth")
             ).alias("beats_stride_ok"),
         )
     )
@@ -3119,29 +3046,7 @@ def sim_ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
     ivf = rows.filter(F.col("tier") == "ivf").select("query_id", "neighbor_id")
-    hits = ivf.join(truth, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).cast("long").alias("n_hits")
-    )
-    return (
-        truth.agg(
-            F.count_distinct("query_id").cast("long").alias("n_queries"),
-            F.count(F.lit(1)).cast("long").alias("n_truth"),
-        )
-        .crossJoin(F.broadcast(hits))
-        .select(
-            "n_queries",
-            "n_truth",
-            "n_hits",
-            (
-                F.floor(
-                    (F.col("n_hits").cast("double") / F.col("n_truth"))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias(f"recall_at_{TOP_K}"),
-        )
-    )
+    return _recall_row(ivf, truth)
 
 
 def _query_rows(batches, ids, Q):
@@ -3365,31 +3270,17 @@ def sim_ivfpq_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq = rows.filter(F.col("tier") == "ivfpq").select(
         "query_id", "neighbor_id"
     )
-    hits_i = ivf.join(truth, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).cast("long").alias("n_hits_ivf")
-    )
-    hits_p = pq.join(truth, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).cast("long").alias("n_hits_ivfpq")
-    )
-    r6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000  # noqa: E731
     return (
-        truth.agg(
-            F.count_distinct("query_id").cast("long").alias("n_queries"),
-            F.count(F.lit(1)).cast("long").alias("n_truth"),
-        )
-        .crossJoin(F.broadcast(hits_i))
-        .crossJoin(F.broadcast(hits_p))
+        _truth_counts(truth)
+        .crossJoin(F.broadcast(_hit_count(ivf, truth, "n_hits_ivf")))
+        .crossJoin(F.broadcast(_hit_count(pq, truth, "n_hits_ivfpq")))
         .select(
             "n_queries",
             "n_truth",
             "n_hits_ivf",
-            r6(F.col("n_hits_ivf").cast("double") / F.col("n_truth")).alias(
-                f"recall_ivf_at_{TOP_K}"
-            ),
+            _recall("n_hits_ivf").alias(f"recall_ivf_at_{TOP_K}"),
             "n_hits_ivfpq",
-            r6(
-                F.col("n_hits_ivfpq").cast("double") / F.col("n_truth")
-            ).alias(f"recall_ivfpq_at_{TOP_K}"),
+            _recall("n_hits_ivfpq").alias(f"recall_ivfpq_at_{TOP_K}"),
         )
     )
 
@@ -4212,37 +4103,19 @@ def sim_ivf_rebalanced_recall(
     truth = rows.filter(F.col("tier") == "truth").select(
         "query_id", "neighbor_id"
     )
-    denom = truth.agg(
-        F.count_distinct("query_id").cast("long").alias("n_queries"),
-        F.count(F.lit(1)).cast("long").alias("n_truth"),
-    )
     tiers = rows.filter(F.col("tier") != "truth")
-    hits = (
-        tiers.join(truth, ["query_id", "neighbor_id"])
-        .groupBy("tier")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    )
+    hits = _hit_count(tiers, truth, by=("tier",))
     # a tier with zero hits still needs its row
     base = tiers.select("tier").distinct()
     return (
         base.join(hits, "tier", "left")
-        .crossJoin(F.broadcast(denom))
+        .crossJoin(F.broadcast(_truth_counts(truth)))
         .select(
             "tier",
             "n_queries",
             "n_truth",
             F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            (
-                F.floor(
-                    (
-                        F.coalesce("n_hits", F.lit(0)).cast("double")
-                        / F.col("n_truth")
-                    )
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias(f"recall_at_{TOP_K}"),
+            _recall(F.coalesce("n_hits", F.lit(0))).alias(f"recall_at_{TOP_K}"),
         )
         .orderBy("tier")
     )
@@ -4624,29 +4497,16 @@ def sim_ivf_compacted_recall(
         truth = rows.filter(F.col("tier") == truth_tier).select(
             "query_id", "neighbor_id"
         )
-        denom = truth.agg(
-            F.count_distinct("query_id").cast("long").alias("n_queries"),
-            F.count(F.lit(1)).cast("long").alias("n_truth"),
-        )
-        hits = (
-            rows.filter(F.col("tier") == tier)
-            .join(truth, ["query_id", "neighbor_id"])
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-        )
+        hits = _hit_count(rows.filter(F.col("tier") == tier), truth)
         out.append(
-            denom.crossJoin(F.broadcast(hits)).select(
+            _truth_counts(truth)
+            .crossJoin(F.broadcast(hits))
+            .select(
                 F.lit(tier).alias("tier"),
                 "n_queries",
                 "n_truth",
                 "n_hits",
-                (
-                    F.floor(
-                        (F.col("n_hits").cast("double") / F.col("n_truth"))
-                        * 1000000
-                        + F.lit(0.5)
-                    )
-                    / 1000000
-                ).alias(f"recall_at_{TOP_K}"),
+                _recall().alias(f"recall_at_{TOP_K}"),
             )
         )
     return out[0].unionByName(out[1]).orderBy("tier")

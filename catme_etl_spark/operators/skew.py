@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import half_up
 from ..sources.tables import load_table
 from .registry import query
 
@@ -161,10 +162,7 @@ def skew_salt_plan_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).cast("long"),
             F.ceil(F.col("n").cast("double") / 50000.0).cast("long"),
         ).alias("salt_n"),
-        (
-            F.floor(F.col("n").cast("double") / F.col("tot") * 1000000 + F.lit(0.5))
-            / 1000000
-        ).alias("share"),
+        half_up(F.col("n").cast("double") / F.col("tot"), 6).alias("share"),
     )
 
 

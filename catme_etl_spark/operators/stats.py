@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.money import cents, money_sum
+from ..functions.money import cents, half_up, money_sum
 from ..functions.texttools import hex_prefix_long, sql_hex_long
 from ..sources.tables import load_table
 from ._shared import maybe_broadcast
@@ -591,18 +591,14 @@ def agg_ks_drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("ta").alias("n_a"),
         F.max("tb").alias("n_b"),
         # half-away on the binary double (see ts_interpolate_linear)
-        (
-            F.floor(
-                F.max(
-                    F.abs(
-                        F.col("ca").cast("double") / F.col("ta")
-                        - F.col("cb").cast("double") / F.col("tb")
-                    )
+        half_up(
+            F.max(
+                F.abs(
+                    F.col("ca").cast("double") / F.col("ta")
+                    - F.col("cb").cast("double") / F.col("tb")
                 )
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+            ),
+            6,
         ).alias("ks_d"),
     )
 
@@ -760,10 +756,7 @@ def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_a",
         "n_b",
         u_a.alias("u_a"),
-        (
-            F.floor((u_a / F.col("n_a") / F.col("n_b")) * 1000000 + F.lit(0.5))
-            / 1000000
-        ).alias("auc"),
+        half_up(u_a / F.col("n_a") / F.col("n_b"), 6).alias("auc"),
     )
 
 
@@ -913,7 +906,7 @@ def agg_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         # matches the oracle's CASE guard
         F.when(
             sse_t > 0,
-            F.floor((1.0 - F.col("sse_w") / sse_t) * 10000 + F.lit(0.5)) / 10000,
+            half_up(1.0 - F.col("sse_w") / sse_t, 4),
         ).alias("eta_sq"),
         "peak_hour",
     )
@@ -1037,9 +1030,7 @@ def agg_hhi_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.max("n_customers").cast("long").alias("n_customers"),
-            (
-                F.floor(F.sum(share * share) * 1000000 + F.lit(0.5)) / 1000000
-            ).alias("hhi"),
+            half_up(F.sum(share * share), 6).alias("hhi"),
         )
     )
 
@@ -1100,13 +1091,7 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.max("n").cast("long").alias("n_customers"),
-            (
-                F.floor(
-                    F.sum(ratio * F.log(ratio)) / F.max("n") * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("theil_t"),
+            half_up(F.sum(ratio * F.log(ratio)) / F.max("n"), 6).alias("theil_t"),
         )
     )
 
@@ -1146,16 +1131,8 @@ def agg_pareto_alpha_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     pc = cents("o_totalprice")
     return o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_tail"),
-        (
-            F.floor(
-                (
-                    F.count(F.lit(1))
-                    / F.sum(F.log(pc.cast("double") / 5000000.0))
-                )
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        half_up(
+            F.count(F.lit(1)) / F.sum(F.log(pc.cast("double") / 5000000.0)), 4
         ).alias("alpha_hill"),
     )
 
@@ -1241,17 +1218,8 @@ def agg_winsorized_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.join(F.broadcast(b), "l_returnflag")
         .groupBy("l_returnflag", "n", "lo", "hi")
         .agg(
-            (
-                F.floor(
-                    (
-                        F.sum(clipped * F.col("k")).cast("double")
-                        / F.col("n")
-                        / 100.0
-                    )
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
+            half_up(
+                F.sum(clipped * F.col("k")).cast("double") / F.col("n") / 100.0, 4
             ).alias("winsorized_mean")
         )
         .select(
@@ -1488,8 +1456,7 @@ def stats_kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         > 0
     )
     survival = F.when(hit_zero, F.lit(0.0)).otherwise(
-        F.floor(F.exp(F.sum(F.log(factor)).over(wk)) * 10000 + F.lit(0.5))
-        / 10000
+        half_up(F.exp(F.sum(F.log(factor)).over(wk)), 4)
     )
     return k.select(
         "t_days", "n_risk", "d", "censored", survival.alias("survival")
@@ -1608,39 +1575,26 @@ def agg_jackknife_mean_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = tot.crossJoin(F.broadcast(agg)).select(
         F.col("n").alias("n_orders"),
-        (
-            F.floor(F.col("s").cast("double") / F.col("n") / 100 * 10000 + F.lit(0.5))
-            / 10000
-        ).alias("mean_total"),
-        (
-            F.floor(
-                F.sqrt(
-                    (
-                        (F.col("nb") - 1)
-                        * (F.col("nb") * F.col("ssq") - F.col("sr") * F.col("sr"))
-                    ).cast("double")
-                )
-                / F.col("nb")
-                / 10
-                / 100
-                * 10000
-                + F.lit(0.5)
+        half_up(F.col("s").cast("double") / F.col("n") / 100, 4).alias("mean_total"),
+        half_up(
+            F.sqrt(
+                (
+                    (F.col("nb") - 1)
+                    * (F.col("nb") * F.col("ssq") - F.col("sr") * F.col("sr"))
+                ).cast("double")
             )
-            / 10000
+            / F.col("nb")
+            / 10
+            / 100,
+            4,
         ).alias("jk_se"),
     )
     return raw.select(
         "n_orders",
         "mean_total",
         "jk_se",
-        (
-            F.floor((F.col("mean_total") - 1.96 * F.col("jk_se")) * 10000 + F.lit(0.5))
-            / 10000
-        ).alias("ci95_lo"),
-        (
-            F.floor((F.col("mean_total") + 1.96 * F.col("jk_se")) * 10000 + F.lit(0.5))
-            / 10000
-        ).alias("ci95_hi"),
+        half_up(F.col("mean_total") - 1.96 * F.col("jk_se"), 4).alias("ci95_lo"),
+        half_up(F.col("mean_total") + 1.96 * F.col("jk_se"), 4).alias("ci95_hi"),
     )
 
 
@@ -2089,7 +2043,6 @@ def agg_theil_between_within(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference basis: none; contract inequality family (SURVEY §2.10)
     beside Gini / HHI / Pareto / per-nation Theil."""
-    from ..functions.money import cents
     from ._shared import maybe_broadcast
 
     o = load_table(spark, sf_dir, "orders")
@@ -2148,7 +2101,6 @@ def agg_theil_between_within(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ng = t.agg(F.count(F.lit(1)).cast("long").alias("n_nations"))
-    r6 = lambda c_: F.floor(c_ * 1000000 + F.lit(0.5)) / 1000000  # noqa: E731
     return (
         gl.crossJoin(F.broadcast(ng))
         .crossJoin(F.broadcast(tt))
@@ -2157,9 +2109,9 @@ def agg_theil_between_within(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("n_all").alias("n_customers"),
             "n_nations",
-            r6(F.col("v_t")).alias("theil_total"),
-            r6(F.col("v_b")).alias("theil_between"),
-            r6(F.col("v_w")).alias("theil_within"),
+            half_up(F.col("v_t"), 6).alias("theil_total"),
+            half_up(F.col("v_b"), 6).alias("theil_between"),
+            half_up(F.col("v_w"), 6).alias("theil_within"),
         )
     )
 
@@ -2335,9 +2287,9 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(n*{_TRIM_PCT}/100) ranks for the trimmed mean, and CLAMP
     them to the kept min/max for the winsorized mean (computed
     exactly as sum_kept + k*lo + k*hi over the FULL n — no row
-    rewrite needed). Both means land on the pinned
-    floor(x*1e4+0.5)/1e4 grid from exact integer sums, so the hashes
-    are bit-stable cross-engine.
+    rewrite needed). Both means land on the ``half_up(x, 4)`` grid
+    from exact integer sums, so the hashes are bit-stable
+    cross-engine.
 
     Exact ranks, not approx_percentile: the trim boundary is a rank
     statistic and the certified estimate must not depend on a sketch
@@ -2353,8 +2305,6 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: none; contract A-family robust statistics
     (SURVEY §2.4)."""
     from pyspark.sql import Window
-
-    from ..functions.money import cents
 
     c = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("pri"),
@@ -2384,26 +2334,14 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pri").alias("o_orderpriority"),
         F.col("n").alias("n_orders"),
         F.col("kt").alias("k_trimmed"),
-        (
-            F.floor(
-                F.col("s").cast("double") / F.col("m") / 100 * 10000
-                + F.lit(0.5)
-            )
-            / 10000
-        ).alias("trimmed_mean"),
-        (
-            F.floor(
-                (
-                    F.col("s")
-                    + F.col("kt") * F.col("lo")
-                    + F.col("kt") * F.col("hi")
-                ).cast("double")
-                / F.col("n")
-                / 100
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        half_up(F.col("s").cast("double") / F.col("m") / 100, 4).alias("trimmed_mean"),
+        half_up(
+            (
+                F.col("s") + F.col("kt") * F.col("lo") + F.col("kt") * F.col("hi")
+            ).cast("double")
+            / F.col("n")
+            / 100,
+            4,
         ).alias("winsorized_mean"),
     ).orderBy("o_orderpriority")
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import half_up
 from ..functions.texttools import sql_hex_long, tokens, word_shingles
 from ..sources.tables import load_table
 from .registry import query
@@ -920,11 +921,7 @@ def text_lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang_label",
             "lang_pred",
             "n",
-            (
-                F.floor((F.col("n").cast("double") / F.col("r")) * 1000000
-                        + F.lit(0.5))
-                / 1000000
-            ).alias("row_share"),
+            half_up(F.col("n").cast("double") / F.col("r"), 6).alias("row_share"),
         )
     )
 
@@ -983,13 +980,8 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "n_shingles",
             "n_novel",
-            (
-                F.floor(
-                    (F.col("n_novel").cast("double") / F.col("n_shingles"))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            half_up(
+                F.col("n_novel").cast("double") / F.col("n_shingles"), 6
             ).alias("novelty"),
         )
     )
@@ -1197,7 +1189,7 @@ def text_zipf_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n_tokens"),
         F.when(
             den > 0,
-            F.floor((num / den) * 10000 + F.lit(0.5)) / 10000 + F.lit(0.0),
+            half_up(num / den, 4) + F.lit(0.0),
         ).alias("zipf_slope"),
     )
 
@@ -1243,8 +1235,8 @@ def text_vocab_overlap_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is the only shuffle that grows with data, and it grows with
     VOCABULARY (Heaps-sublinear, see `text_vocab_growth_heaps`), not
     rows. Jaccard via inclusion-exclusion — no union pass; the ratio
-    of exact integers rounds once via the module's pinned half-away
-    idiom floor(x*1e4+0.5)/1e4, identical on both engines."""
+    of exact integers rounds once with ``half_up(x, 4)``, identical on
+    both engines."""
     v = (
         _docs(spark, sf_dir)
         .select("source", F.explode(tokens("text")).alias("tok"))
@@ -1267,14 +1259,10 @@ def text_vocab_overlap_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src_a",
             "src_b",
             "n_common",
-            (
-                F.floor(
-                    F.col("n_common").cast("double")
-                    / (F.col("vsz_a") + F.col("vsz_b") - F.col("n_common"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
+            half_up(
+                F.col("n_common").cast("double")
+                / (F.col("vsz_a") + F.col("vsz_b") - F.col("n_common")),
+                4,
             ).alias("jaccard"),
         )
     )
@@ -1323,8 +1311,8 @@ def text_oov_rate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     one data-sized shuffle — and collapse straight into 2 output rows.
     Occurrence-weighted on purpose: rate = share of tokens a model
     would see as <unk>, not share of distinct types. The rate (a ratio
-    of exact integers) rounds once via the pinned half-away idiom
-    floor(x*1e6+0.5)/1e6, identical on both engines."""
+    of exact integers) rounds once with ``half_up(x, 6)``, identical
+    on both engines."""
     from .sampling import hash_bucket
 
     bkt = hash_bucket(F.col("doc_id"), 100)
@@ -1347,16 +1335,10 @@ def text_oov_rate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum(F.when(F.col("known").isNull(), 1).otherwise(0)).alias("n_oov"),
-            (
-                F.floor(
-                    F.sum(
-                        F.when(F.col("known").isNull(), 1).otherwise(0)
-                    ).cast("double")
-                    / F.count(F.lit(1))
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            half_up(
+                F.sum(F.when(F.col("known").isNull(), 1).otherwise(0)).cast("double")
+                / F.count(F.lit(1)),
+                6,
             ).alias("oov_rate"),
         )
     )
@@ -1426,18 +1408,14 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     cx = big.groupBy("prev").agg(F.count(F.lit(1)).cast("long").alias("n_x"))
     cy = big.groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("n_y"))
     n2 = big.agg(F.count(F.lit(1)).cast("long").alias("n_big"))
-    pmi = (
-        F.floor(
-            F.log(
-                F.col("n_xy").cast("double")
-                * F.col("n_big")
-                / F.col("n_x")
-                / F.col("n_y")
-            )
-            * 10000
-            + F.lit(0.5)
-        )
-        / 10000
+    pmi = half_up(
+        F.log(
+            F.col("n_xy").cast("double")
+            * F.col("n_big")
+            / F.col("n_x")
+            / F.col("n_y")
+        ),
+        4,
     )
     return (
         c2.join(cx, "prev")
@@ -1704,13 +1682,11 @@ def text_diversity_length_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         degen.alias("degenerate"),
         F.when(degen, F.lit(0.0))
         .otherwise(
-            F.floor(
+            half_up(
                 num.cast("double")
-                / (F.sqrt(d1.cast("double")) * F.sqrt(d2.cast("double")))
-                * 10000
-                + F.lit(0.5)
+                / (F.sqrt(d1.cast("double")) * F.sqrt(d2.cast("double"))),
+                4,
             )
-            / 10000
         )
         .alias("pearson_r"),
     )
@@ -1860,7 +1836,7 @@ def text_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_common_types", F.lit(0)).cast("long").alias(
             "n_common_types"
         ),
-        (F.floor(js * 1000000 + F.lit(0.5)) / 1000000).alias("js_nats"),
+        half_up(js, 6).alias("js_nats"),
     )
 
 

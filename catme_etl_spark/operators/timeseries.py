@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.money import cents
+from ..functions.money import cents, half_up
 from ..sources.tables import load_table
 from .registry import query
 
@@ -460,8 +460,8 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     interp = F.col("v") + (F.col("nv") - F.col("v")) * (
         F.col("j") - F.col("i")
     ) / (F.col("ni") - F.col("i"))
-    # half-away on the BINARY double (floor(x*1e4+0.5), both engines
-    # run the identical IEEE ops) — F.round vs DuckDB ROUND disagree
+    # half_up on the BINARY double (both engines run the identical
+    # IEEE ops) — F.round vs DuckDB ROUND disagree
     # when the exact rational sits on a 4th-decimal tie (…x.89625)
     # because Spark rounds the shortest decimal repr and DuckDB the
     # stored binary; values are nonnegative so no sign branch.
@@ -469,7 +469,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rows.select(
         "event_type",
         (F.col("j") * _BUCKET_S * 1_000_000).alias("win_start_us"),
-        (F.floor(filled * 10000 + F.lit(0.5)) / 10000).alias("value_filled"),
+        half_up(filled, 4).alias("value_filled"),
         F.when(is_obs, F.lit("obs")).otherwise(F.lit("interp")).alias("src"),
     )
 
@@ -559,12 +559,8 @@ def ts_cusum_max_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.groupBy("event_type").agg(
         F.max("n").cast("long").alias("n"),
-        (
-            F.floor(
-                (F.max("max_abs").cast("double") / F.max("n") / 100.0) * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        half_up(
+            F.max("max_abs").cast("double") / F.max("n") / 100.0, 4
         ).alias("max_cusum"),
         F.min(F.when(F.abs("dev_num") == F.col("max_abs"), F.col("k"))).alias(
             "argmax_k"
@@ -684,20 +680,11 @@ def ts_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff = F.col("sa") - F.col("sf")
     return j.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_buckets"),
-        (
-            F.floor(
-                (F.sum(F.abs(diff)).cast("double") / F.count(F.lit(1)) / 100.0)
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        half_up(
+            F.sum(F.abs(diff)).cast("double") / F.count(F.lit(1)) / 100.0, 4
         ).alias("mae"),
         (
-            F.floor(
-                (F.sum(diff).cast("double") / F.count(F.lit(1)) / 100.0) * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+            half_up(F.sum(diff).cast("double") / F.count(F.lit(1)) / 100.0, 4)
             + F.lit(0.0)
         ).alias("bias"),
     )
@@ -780,8 +767,7 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n_pairs"),
         F.when(
             prod > 0,
-            F.floor((num / F.sqrt(prod)) * 10000 + F.lit(0.5)) / 10000
-            + F.lit(0.0),
+            half_up(num / F.sqrt(prod), 4) + F.lit(0.0),
         ).alias("acf1"),
     )
 
@@ -866,8 +852,7 @@ def ts_cross_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n_buckets"),
         F.when(
             prod > 0,
-            F.floor((num / F.sqrt(prod)) * 10000 + F.lit(0.5)) / 10000
-            + F.lit(0.0),
+            half_up(num / F.sqrt(prod), 4) + F.lit(0.0),
         ).alias("corr"),
     )
 

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.money import cents, money_from_cents, pct100
+from ..functions.money import cents, half_up, money_from_cents, pct100
 from ..sources.tables import load_table
 from ._shared import maybe_broadcast
 from .registry import query
@@ -624,9 +624,7 @@ def tpch_q2_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_partkey",
             "s_suppkey",
             "s_name",
-            (F.floor(F.col("s_acctbal") * 100 + F.lit(0.5)) / 100).alias(
-                "s_acctbal"
-            ),
+            half_up(F.col("s_acctbal"), 2).alias("s_acctbal"),
             "n_name",
             (F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"),
         )
@@ -641,9 +639,7 @@ def tpch_q2_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             "s_acctbal",
             "n_name",
-            (
-                F.floor(F.col("unit_price") * 10000 + F.lit(0.5)) / 10000
-            ).alias("min_unit_price"),
+            half_up(F.col("unit_price"), 4).alias("min_unit_price"),
         )
         .distinct()
         .orderBy(

@@ -32,9 +32,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Filters/projections applied by the caller reach
     the parquet reader via Catalyst pushdown — verify with

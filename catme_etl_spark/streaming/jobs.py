@@ -45,7 +45,7 @@ from itertools import count
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import money_sum
+from ..functions.money import half_up, money_sum
 from ..operators.events import (
     _CHANGEPOINT_ORACLE,
     _HOUR_US,
@@ -988,12 +988,7 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ta").cast("long").alias("n_ref"),
             F.col("tb").alias("n_cur"),
         )
-        .agg(
-            (
-                F.floor(F.sum((pa - pb) * F.log(pa / pb)) * 10000 + F.lit(0.5))
-                / 10000
-            ).alias("psi_r4")
-        )
+        .agg(half_up(F.sum((pa - pb) * F.log(pa / pb)), 4).alias("psi_r4"))
     )
     return p.select(
         "event_type",

@@ -149,8 +149,8 @@ def _arm_artifact_attribution():
     during a query from that query's printed reading, reporting the
     build as its own ``art`` line instead. Round-13 verdict "What's wrong" #1: sweep
     transcripts charged 30-50s one-time builds to whichever family
-    member ran first (pipeline_release_pin read 41.9s in
-    FULL_SWEEP_r13 vs 8.6s warm), distorting the timing column every
+    member ran first (pipeline_release_pin read 41.9s in the r13
+    sweep transcript vs 8.6s warm), distorting the timing column every
     round. Returns the mutable state dict the sweep loop reads."""
     import sys as _sys
 
@@ -218,8 +218,8 @@ def main() -> int:
     from catme_etl_spark.session import get_spark
 
     # Suppress stage-progress bars: their \r frames clobber OK lines in
-    # captured transcripts (round-8 verdict: FULL_SWEEP footer said 273
-    # but only 263 OK lines survived the carriage returns).
+    # captured transcripts such as SWEEP.txt (a round-8 sweep footer said
+    # 273 but only 263 OK lines survived the carriage returns).
     spark = get_spark(
         "check_oracle",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
